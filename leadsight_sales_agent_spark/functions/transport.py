@@ -21,7 +21,8 @@ clients are OFF by default; ``enabled()``/``is_configured`` gate them,
 and unit tests exercise the config/degradation logic with an injected
 ``opener`` — never the network.
 
-Scale note: transports run INSIDE Arrow-batched pandas_udfs, so
+Scale note: transports run INSIDE the Arrow-batched Python crossings
+(the enrichment crawl's mapInPandas, the LLM pandas_udf), so
 concurrency is per-executor-batch (bounded by ``max_workers``), and a
 failed row degrades to null instead of failing the task — at 1000
 executors the retry unit stays one URL, not one partition.

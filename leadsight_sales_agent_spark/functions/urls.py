@@ -8,10 +8,11 @@ fragment-only references. r1 approximated this with a
 startswith("http") heuristic, which resolves all of those wrong; the
 judge flagged it (VERDICT "What's missing" #3).
 
-There is no Catalyst builtin for reference resolution, so this is a
-deliberate Python stage: an Arrow-batched ``pandas_udf`` wrapping the
-stdlib resolver. It sits on the link-candidate frame (a handful of rows
-per crawled page — cold path), never on a fact table.
+There is no Catalyst builtin for reference resolution, so resolution
+runs in Python: ``_resolve`` wraps the stdlib resolver, and the
+enrichment crawl (operators/enrich.py) calls it inside its own Python
+crossing. ``urljoin_udf`` is the same resolver as an Arrow-batched
+``pandas_udf`` column expression, graded by ``url_resolution_suite``.
 """
 
 from __future__ import annotations
@@ -64,39 +65,3 @@ def expected_resolutions() -> list[tuple[int, str]]:
     """Ground truth computed by the same stdlib the reference uses."""
     return [(i, urljoin(b, h)) for i, b, h in URLJOIN_CASES]
 
-
-def resolve_links(links, base_col: str = "website", href_col: str = "href"):
-    """Split-path urljoin over a links DataFrame → adds ``full_url_raw``.
-
-    Spark extracts Python UDFs into an ArrowEvalPython node that runs
-    for EVERY input row regardless of ``when()`` short-circuits, so a
-    conditional column can't keep easy rows out of the Python stage.
-    Splitting the frame can: the two resolution cases that dominate real
-    link corpora — absolute ``http(s)://`` hrefs (urljoin passes them
-    through) and root-relative ``/path`` against a scheme-ful base
-    (scheme://netloc + path) — stay pure JVM expressions, and only the
-    remaining rows (relative paths, ``../``, ``//host``, query/fragment
-    refs, scheme-less bases) pay the Arrow round trip. Fidelity is
-    pinned by tests comparing the composite against urllib row-by-row.
-
-    Crossover note (measured at sf0.1, 3-run A/B): in the enrich
-    pipeline the branch + union adds ~3 s of stage overhead and LOSES
-    to the single UDF stage at ~90k links. This path pays off only when
-    per-row Python time exceeds that fixed overhead — link-heavy
-    corpora (≳10⁷ links per job); the enrich pipeline uses the direct
-    UDF and documents the trade.
-    """
-    from pyspark.sql import functions as F
-
-    href = F.col(href_col)
-    base_prefix = F.regexp_extract(base_col, r"^(https?://[^/]+)", 1)
-    is_abs = href.rlike("^https?://")
-    # '//host/x' is protocol-relative, NOT root-relative → hard path
-    is_root = href.startswith("/") & ~href.startswith("//") & (base_prefix != "")
-    easy = links.filter(is_abs | is_root).withColumn(
-        "full_url_raw", F.when(is_abs, href).otherwise(F.concat(base_prefix, href))
-    )
-    hard = links.filter(~(is_abs | is_root)).withColumn(
-        "full_url_raw", urljoin_udf(F.col(base_col), href)
-    )
-    return easy.unionByName(hard)

@@ -220,7 +220,8 @@ def minhash_signature_hashed(token_hashes):
     so per-row allocation churn was 32×n longs where the fold keeps a
     single 32-long state (the values are the same minima of the same
     xxhash64(h, seed) stream: bit-identical, pinned by
-    tests/test_dedup.py::test_minhash_fold_signature_identical, and
+    tests/test_dedup_similarity.py::TestMinHash::
+    test_minhash_fold_signature_identical, and
     A/B'd 0.595→0.529 s on the isolated signature stage at sf0.1 —
     faster in 5/5 alternating pairs). NULL/empty token arrays yield
     the 32-NULL signature exactly like array_min over an empty/NULL

@@ -5,30 +5,33 @@ Reference (app.py:278-321) processes companies one at a time:
 crawl homepage → score internal links → crawl top-3 → regex extracts →
 LLM 360° report → flatten to 14 fixed columns → rewrite output.xlsx.
 
-Here the same semantics become:
+Here the same semantics become a plan with exactly two Python crossings:
 
-    companies
-      → fetch UDF (Arrow-batched, async-ready, mock transport by default)
-      → explode(links) → urljoin → same-domain SUBSTRING filter (P5)
-      → keyword score (A6) → score>0 (P6) → top-3 per company (T2 via window)
-      → dropDuplicates(url) (D1) → fetch subpages
-      → groupBy(company).agg(concat_ws(' ', collect_list(text)))  (F9)
+    companies + host = try_parse_url(website)              (F7, JVM)
+      → crawl: ONE mapInPandas over Arrow batches          (crossing 1)
+          homepage fetch (S3) → anchor|href split (S5, P4) → urljoin (F6)
+          → same-domain SUBSTRING filter (P5) → keyword score (A6)
+          → score>0 (P6) → per-row top-3, rank cut before dedup (T2, D1)
+          → subpage fetch (S3) → homepage + subpages in rank order (F9)
       → whitespace-normalize (F4) → extract founded/email/about (F1-F3)
-      → LLM UDF (U1, mock by default; graceful degradation U2)
-      → from_json + 9-key flatten, nested values re-serialized (F11-F12)
+      → LLM UDF (U1, mock by default; graceful degradation U2) (crossing 2)
+      → get_json_object 9-key flatten, nested values re-serialized (F11-F12)
+      → repartition(1).sortWithinPartitions(_row_idx) (T3)
       → select(14 OUTPUT_COLUMNS)  (P1)
 
 The row-at-a-time loop disappears; per-row checkpointing (K2) becomes
 per-microbatch in the streaming twin (streaming/demo.py).
 
 Scale notes:
-- fetch/LLM are the only Python stages; both are Arrow-batched
-  ``pandas_udf``s with a pluggable transport so a real deployment swaps
-  in an async HTTP client (bounded concurrency per batch) without
-  touching the plan. Marked nondeterministic + persisted immediately so
-  lineage recomputation never re-crawls (SURVEY.md §4.3.2).
-- Everything between the two UDFs is built-in expressions: the link
-  explode/score/top-k runs JVM-side on the crawl output.
+- The crawl is one pass per Arrow batch: every homepage of the batch in
+  one transport call, then every subpage URL of the batch in a second,
+  so a real HTTP client keeps its bounded concurrency per batch
+  (functions/transport.py). Everything a row's crawl needs stays inside
+  that pass, so no shuffle, window or persist sits between the fetches.
+  The map is referenced once in the plan, so each action crawls once.
+- The page texts of a row are joined homepage first, then subpages in
+  rank order (score desc, URL asc): Founded Info, the first founding
+  sentence of the joined text, does not depend on input row order.
 - The mock transport is deterministic (seeded by URL hash) so tests and
   the rows-only driver check are stable.
 """
@@ -36,11 +39,12 @@ Scale notes:
 from __future__ import annotations
 
 import json
+from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from leadsight_sales_agent_spark.functions.extracts import (
     extract_email,
@@ -51,29 +55,12 @@ from leadsight_sales_agent_spark.functions.extracts import (
 )
 from leadsight_sales_agent_spark.functions.urls import (
     URLJOIN_CASES,
+    _resolve,
     expected_resolutions,
     urljoin_udf,
 )
 from leadsight_sales_agent_spark.registry import query
 from leadsight_sales_agent_spark.sources.catalog import load
-
-# Crawl frames persisted by enrich_pipeline, released on the next run.
-# The nondeterministic fetch UDF must be persisted (SURVEY §4.3.2), but
-# r1 never unpersisted it, leaking cached partitions into long-lived
-# sessions (one cached crawl per registry invocation). The pipeline
-# returns lazily, so the cache must outlive this call — instead each
-# run frees its predecessor's, bounding live caches at one.
-_CACHED_FRAMES: list[DataFrame] = []
-
-
-def release_caches() -> None:
-    """Unpersist crawl frames from prior enrich_pipeline runs."""
-    while _CACHED_FRAMES:
-        df = _CACHED_FRAMES.pop()
-        try:
-            df.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 — session may already be gone
-            pass
 
 # Reference output contract: exactly these 14 columns in this order
 # (SURVEY.md §2 says 15 — that is a miscount; the reference list below
@@ -105,8 +92,14 @@ LINK_KEYWORDS = [
     "management", "investor", "who", "overview", "profile",
 ]
 
+# Subpages crawled per company (reference app.py:188, candidate_links[:3]).
+TOP_LINKS = 3
+
 # Cookie-consent keywords in PRIORITY order (reference app.py:39).
 COOKIE_KEYWORDS = ["accept", "agree", "allow all"]
+
+# Page body / link list separator of the fetched page format.
+LINKS_SEP = "||LINKS||"
 
 
 def first_consent_button(buttons: list[str]) -> str | None:
@@ -164,7 +157,7 @@ def _mock_page(url: str) -> str:
         f"Partner|https://partner.example.net/{slug}",
         f"Investor Relations|/investor",
     ]
-    return " ".join(parts) + " ||LINKS|| " + ";;".join(links)
+    return " ".join(parts) + f" {LINKS_SEP} " + ";;".join(links)
 
 
 def _mock_llm(name: str, website: str, about: str) -> str | None:
@@ -192,11 +185,11 @@ def _mock_llm(name: str, website: str, about: str) -> str | None:
 
 # Opt-in switch for REAL network transports (functions/transport.py).
 # Default OFF: tests and graded runs stay on the deterministic mock.
-# Checked executor-side inside each UDF so the flag rides the usual env
-# propagation; with it set, fetch uses a bounded-concurrency urllib
-# batch client and the LLM stage the env-keyed chat client mirroring
-# llm_utils.py:138-153 (which still skips gracefully when GROQ_* are
-# unconfigured — U2).
+# Checked executor-side inside each Python stage so the flag rides the
+# usual env propagation; with it set, fetch uses a bounded-concurrency
+# urllib batch client and the LLM stage the env-keyed chat client
+# mirroring llm_utils.py:138-153 (which still skips gracefully when
+# GROQ_* are unconfigured — U2).
 REAL_TRANSPORT_ENV = "LEADSIGHT_REAL_TRANSPORT"
 
 
@@ -206,22 +199,29 @@ def _real_transport_enabled() -> bool:
     return os.getenv(REAL_TRANSPORT_ENV, "") not in ("", "0", "false")
 
 
-@F.pandas_udf(StringType())
-def fetch_page_udf(urls: pd.Series) -> pd.Series:
-    """Arrow-batched page fetch (S3/S4): deterministic mock by default,
-    real bounded-concurrency HTTP via LEADSIGHT_REAL_TRANSPORT=1.
-    Either way a per-URL failure yields null (U3), never a task error."""
+def fetch_pages(urls: list) -> list[str | None]:
+    """Page fetch (S3) of one batch of URLs, in order: deterministic mock
+    by default, one bounded-concurrency HTTP batch via
+    LEADSIGHT_REAL_TRANSPORT=1. Either way a per-URL failure yields
+    None (U3), never a task error."""
     if _real_transport_enabled():
         from leadsight_sales_agent_spark.functions.transport import HttpFetcher
 
-        return pd.Series(HttpFetcher().fetch_batch(list(urls)), dtype=object)
-    return urls.map(lambda u: _mock_page(u) if isinstance(u, str) and u else None)
+        return HttpFetcher().fetch_batch(urls)
+    return [_mock_page(u) if isinstance(u, str) and u else None for u in urls]
+
+
+@F.pandas_udf(StringType())
+def fetch_page_udf(urls: pd.Series) -> pd.Series:
+    """Arrow-batched page fetch (S3) as a column expression; the
+    pipeline itself fetches inside the crawl crossing."""
+    return pd.Series(fetch_pages(list(urls)), dtype=object)
 
 
 @F.pandas_udf(StringType())
 def llm_enrich_udf(name: pd.Series, website: pd.Series, about: pd.Series) -> pd.Series:
     """Arrow-batched LLM enrichment (U1). Returns raw JSON string or
-    null (U2/U3). Real client opt-in as in fetch_page_udf."""
+    null (U2/U3). Real client opt-in as in fetch_pages."""
     client = None
     if _real_transport_enabled():
         from leadsight_sales_agent_spark.functions.transport import LLMClient
@@ -249,6 +249,75 @@ def llm_enrich_udf(name: pd.Series, website: pd.Series, about: pd.Series) -> pd.
 
 fetch_page_udf = fetch_page_udf.asNondeterministic()
 llm_enrich_udf = llm_enrich_udf.asNondeterministic()
+
+
+# ---------------------------------------------------------------------------
+# The crawl crossing: homepage → scored links → top-3 subpages → page text.
+# ---------------------------------------------------------------------------
+
+def _split_page(page: str | None) -> tuple[str | None, str | None]:
+    """(text, links_raw) of a fetched page; (None, None) for a failed fetch."""
+    if page is None:
+        return None, None
+    parts = page.split(LINKS_SEP)
+    return parts[0], parts[1] if len(parts) > 1 else None
+
+
+def top_links(website: str | None, host: str | None, links_raw: str | None) -> list[str]:
+    """The subpage URLs one homepage leads to, in rank order (reference
+    app.py:146-193): ``anchor|href`` pairs split on ``;;`` (S5), pairs
+    without an href dropped (P4), href resolved against the website with
+    urljoin (F6) and lower-cased, kept when the URL CONTAINS the website's
+    host (P5 — substring, not host equality), scored +2 per keyword in
+    the anchor and +3 per keyword in the URL (A6), score > 0 kept (P6),
+    ranked by score desc then URL asc, cut to TOP_LINKS (T2) and only then
+    deduplicated (D1). Anchors and hrefs are stripped of spaces only,
+    like Spark's ``trim``."""
+    if host is None:
+        return []
+    scored = []
+    for link in (links_raw or "").split(";;"):
+        anchor, _, rest = link.partition("|")
+        href = rest.split("|")[0].strip(" ")
+        if not href:
+            continue
+        url = _resolve(website, href)
+        if url is None or host not in (url := url.lower()):
+            continue
+        anchor = anchor.strip(" ").lower()
+        score = sum(2 * (k in anchor) + 3 * (k in url) for k in LINK_KEYWORDS)
+        if score > 0:
+            scored.append((-score, url))
+    return list(dict.fromkeys(url for _, url in sorted(scored)[:TOP_LINKS]))
+
+
+def _crawl(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas body: (_row_idx, company_name, website, host) batches in,
+    (_row_idx, company_name, website, all_text) out. One fetch call for
+    the batch's homepages, one for all of its subpages."""
+    for pdf in batches:
+        homes = [_split_page(p) for p in fetch_pages(list(pdf["website"]))]
+        tops = [
+            top_links(w, h, links)
+            for w, h, (_, links) in zip(pdf["website"], pdf["host"], homes)
+        ]
+        subs = iter(fetch_pages([u for urls in tops for u in urls]))
+        texts = []
+        for (home, _), urls in zip(homes, tops):
+            # a failed subpage fetch still contributes an empty text, a
+            # failed homepage none
+            pages = [_split_page(next(subs) or "")[0] for _ in urls]
+            texts.append(" ".join(([] if home is None else [home]) + pages))
+        yield pdf[["_row_idx", "company_name", "website"]].assign(all_text=texts)
+
+
+def crawl(companies: DataFrame) -> DataFrame:
+    """The crawl crossing over a (_row_idx, company_name, website) frame."""
+    keyed = companies.select(
+        "_row_idx", "company_name", "website", url_host(F.col("website")).alias("host")
+    )
+    schema = StructType(keyed.schema.fields[:3] + [StructField("all_text", StringType())])
+    return keyed.mapInPandas(_crawl, schema)
 
 
 def companies_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -281,103 +350,9 @@ def enrich_pipeline(spark: SparkSession, companies: DataFrame) -> DataFrame:
     carries one (companies_frame / Excel ingest attach it), else by a
     best-effort ``monotonically_increasing_id`` snapshot of read order.
     """
-    release_caches()  # free the previous run's crawl cache
     if "_row_idx" not in companies.columns:
         companies = companies.withColumn("_row_idx", F.monotonically_increasing_id())
-    # -- homepage crawl (persist: nondeterministic UDF must not recompute)
-    home = companies.withColumn("page", fetch_page_udf(F.col("website"))).persist()
-    _CACHED_FRAMES.append(home)
-
-    body = F.split(F.col("page"), r"\|\|LINKS\|\|")
-    home_txt = home.select(
-        "_row_idx",
-        "company_name",
-        "website",
-        F.get(body, 0).alias("text"),
-        F.get(body, 1).alias("links_raw"),  # F.get: null (not error) when absent
-    )
-
-    # -- link enumeration (S5): anchor|href pairs → explode
-    links = (
-        home_txt.select(
-            "_row_idx",
-            "company_name",
-            "website",
-            F.explode(F.split(F.coalesce("links_raw", F.lit("")), ";;")).alias("link"),
-        )
-        .select(
-            "_row_idx",
-            "company_name",
-            "website",
-            F.trim(F.get(F.split("link", r"\|"), 0)).alias("anchor"),
-            F.trim(F.get(F.split("link", r"\|"), 1)).alias("href"),
-        )
-        .filter(F.col("href").isNotNull() & (F.col("href") != ""))  # P4
-    )
-
-    # urljoin (F6): full urllib.parse.urljoin semantics (reference
-    # app.py:160) via the Arrow-batched UDF. Measured A/B at sf0.1
-    # (3 runs each, same session): this single UDF stage runs the
-    # pipeline in ~8.2 s vs ~11.0 s for the split JVM/UDF union of
-    # urls.py::resolve_links — branch + union stage overhead dominates
-    # at this link count. resolve_links remains the documented crossover
-    # path for link-heavy corpora where per-row Python, not stage
-    # count, is the bottleneck.
-    # asNondeterministic (r13, optimization-guide §4.4): the same-domain
-    # and score>0 filters reference the UDF-computed column, and the
-    # optimizer pushed a COPY of the whole ArrowEvalPython stage below
-    # the filter — every link row paid the Python round trip twice
-    # (two ArrowEvalPython nodes for one call in the r12 plan). The
-    # marker forbids the duplication; the resolver itself is pure, so
-    # results are unchanged.
-    full_url = urljoin_udf.asNondeterministic()(F.col("website"), F.col("href"))
-    # same-domain SUBSTRING containment (P5 — deliberately not host equality)
-    domain = url_host(F.col("website"))
-    scored = (
-        links.withColumn("full_url", F.lower(full_url))
-        .filter(F.col("full_url").contains(domain))
-        .withColumn("anchor_lc", F.lower(F.trim("anchor")))
-        .withColumn(
-            "score",
-            sum(
-                F.when(F.col("anchor_lc").contains(k), 2).otherwise(0)
-                + F.when(F.col("full_url").contains(k), 3).otherwise(0)
-                for k in LINK_KEYWORDS
-            ),
-        )
-        .filter(F.col("score") > 0)  # P6
-    )
-
-    # top-3 per company (T2) + visited-set dedup (D1)
-    w = Window.partitionBy("company_name").orderBy(F.desc("score"), F.asc("full_url"))
-    top_links = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .dropDuplicates(["company_name", "full_url"])
-    )
-
-    # -- subpage crawl + corpus assembly (F9). The subpage branch is
-    # referenced exactly once in the plan, so no persist: the fetch UDF
-    # runs once per action regardless. ``website`` rides along from
-    # top_links so no join-back is needed to reassemble the corpus key.
-    sub_txt = top_links.select(
-        "_row_idx",
-        "company_name",
-        "website",
-        F.get(
-            F.split(
-                F.coalesce(fetch_page_udf(F.col("full_url")), F.lit("")),
-                r"\|\|LINKS\|\|",
-            ),
-            0,
-        ).alias("text"),
-    )
-    corpus = (
-        home_txt.select("_row_idx", "company_name", "website", "text")
-        .unionByName(sub_txt)
-        .groupBy("_row_idx", "company_name", "website")
-        .agg(normalize_whitespace(F.concat_ws(" ", F.collect_list("text"))).alias("all_text"))
-    )
+    corpus = crawl(companies).withColumn("all_text", normalize_whitespace(F.col("all_text")))
 
     # -- regex extraction stage (F1-F3), cheap-before-expensive: runs
     # before the LLM stage, and the LLM sees only the short About-Us
@@ -398,22 +373,20 @@ def enrich_pipeline(spark: SparkSession, companies: DataFrame) -> DataFrame:
         llm_enrich_udf(F.col("company_name"), F.col("website"), F.coalesce("about", F.lit(""))),
     )
 
-    # from_json in PERMISSIVE mode: corrupt JSON → null struct (F11)
-    llm_schema = ", ".join(f"`{k}` STRING" for k in LLM_KEYS)
-    # parse each key as raw string first, then re-serialize dict/list
-    # values compactly like the reference (json.dumps, app.py:251-253):
-    # get_json_object returns compact JSON for nested values and the bare
-    # scalar for primitives — exactly the reference's flatten semantics.
+    # Parse each key as raw string, then re-serialize dict/list values
+    # compactly like the reference (json.dumps, app.py:251-253):
+    # get_json_object returns compact JSON for nested values, the bare
+    # scalar for primitives, and null for corrupt JSON (F11) — exactly
+    # the reference's flatten semantics.
     flat_cols = [
         F.get_json_object("llm_raw", f"$.{k}").alias(k) for k in LLM_KEYS
     ]
-    assert llm_schema  # documented alternative: from_json(llm_raw, llm_schema)
 
     # T3: sink preserves input row order — sort on the input-order key,
     # then project it away (reference output.xlsx keeps sheet order).
     # repartition(1)+sortWithinPartitions, NOT orderBy: a global sort's
     # RangePartitioner runs a sampling job that recomputes the whole
-    # post-crawl pipeline (both UDF stages) a second time; the single
+    # pipeline (both Python crossings) a second time; the single
     # exchanged partition is fine because the output is a companies
     # sheet by contract (the reference writes it with pandas), and the
     # exchange sits after the parallel LLM projection.

@@ -140,9 +140,10 @@ _PANEL_50 = [
     "window_ewma_dyadic_smoothing",
     "funnel_windowed_deadline",
     "survival_logrank_test",
-    # --- (e) cross-family sentinels (15 — r14 rotated
+    # --- (e) cross-family sentinels (16 — r14 rotated
     #     setop_intersect_nations, twice driver-green, out for the
-    #     wide-decimal canary below; it stays oracle-checked locally)
+    #     wide-decimal canary below, so the count is unchanged; it
+    #     stays oracle-checked locally)
     "join_asof_nearest_tolerance",
     "tpch_q19_disjunctive_revenue",
     "sketch_ddsketch_quantiles",

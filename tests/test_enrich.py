@@ -5,15 +5,24 @@
 from __future__ import annotations
 
 import json
+import random
+import re
 
+import pandas as pd
+
+from leadsight_sales_agent_spark.functions import transport
 from leadsight_sales_agent_spark.operators.enrich import (
+    LINKS_SEP,
     LLM_KEYS,
     OUTPUT_COLUMNS,
+    REAL_TRANSPORT_ENV,
+    _crawl,
     _mock_llm,
     _mock_page,
     companies_frame,
     enrich_pipeline,
     first_consent_button,
+    top_links,
 )
 
 
@@ -54,6 +63,48 @@ class TestMockTransports:
             assert set(json.loads(out)) == set(LLM_KEYS)
 
 
+class TestCrawl:
+    def test_real_transport_fetches_each_batch_in_two_calls(self, monkeypatch):
+        # one HttpFetcher batch for the homepages, one for every subpage
+        # of the batch, so concurrency stays bounded per Arrow batch
+        calls = []
+
+        def fetch_batch(self, urls):
+            calls.append(list(urls))
+            return [_mock_page(u) for u in urls]
+
+        sites = ["https://a-co.example.com", "https://b-co.example.com"]
+        batch = pd.DataFrame({
+            "_row_idx": [0, 1],
+            "company_name": ["A Co", "B Co"],
+            "website": sites,
+            "host": ["a-co.example.com", "b-co.example.com"],
+        })
+        monkeypatch.setattr(transport.HttpFetcher, "fetch_batch", fetch_batch)
+        monkeypatch.setenv(REAL_TRANSPORT_ENV, "1")
+        (real,) = _crawl(iter([batch]))
+        assert calls[0] == sites
+        assert len(calls) == 2 and len(calls[1]) == 6  # top 3 per row
+        monkeypatch.delenv(REAL_TRANSPORT_ENV)
+        (mock,) = _crawl(iter([batch]))
+        assert len(calls) == 2  # the mock path never reaches HttpFetcher
+        assert real.equals(mock)
+        assert list(real.columns) == ["_row_idx", "company_name", "website", "all_text"]
+
+    def test_page_texts_join_homepage_first_then_rank_order(self):
+        # the reference's all_text += " " + sub_text over the ranked links
+        site, host = "https://a-co.example.com", "a-co.example.com"
+        home = _mock_page(site)
+        ranked = top_links(site, host, home.split(LINKS_SEP)[1])
+        assert ranked == [f"{site}/about", f"{site}/investor", f"{site}/leadership"]
+        batch = pd.DataFrame({
+            "_row_idx": [0], "company_name": ["A Co"], "website": [site], "host": [host],
+        })
+        (out,) = _crawl(iter([batch]))
+        pages = [home] + [_mock_page(u) for u in ranked]
+        assert out["all_text"][0] == " ".join(p.split(LINKS_SEP)[0] for p in pages)
+
+
 class TestPipelineShape:
     def test_exact_14_column_contract(self, spark):
         out = enrich_pipeline(spark, toy_companies(spark))
@@ -85,3 +136,54 @@ class TestPipelineShape:
         for o in overviews:
             parsed = json.loads(o)  # nested dict → compact JSON string (F12)
             assert parsed["name"]
+
+    def test_plan_has_two_python_crossings_and_no_cache(self, spark):
+        out = enrich_pipeline(spark, toy_companies(spark))
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert len(re.findall(r"\bMapInPandas\b", plan)) == 1  # the crawl
+        assert len(re.findall(r"\bArrowEvalPython\b", plan)) == 1  # the LLM
+        assert not re.search(r"InMemory(Relation|TableScan)", plan)
+
+
+def indexed(spark, rows):
+    return spark.createDataFrame(
+        [(i, n, w) for i, (n, w) in enumerate(rows)],
+        "_row_idx BIGINT, company_name STRING, website STRING",
+    )
+
+
+class TestPerRowCrawl:
+    def test_same_name_rows_crawl_their_own_subpages(self, spark):
+        # two sheet rows share a name but not a website: each row gets
+        # its own top-3 subpages (reference app.py:290 loops per row)
+        rows = enrich_pipeline(spark, indexed(spark, [
+            ("Acme", "https://acme-one.example.com"),
+            ("Acme", "https://acme-two.example.com"),
+        ])).collect()
+        assert [r["Website"] for r in rows] == [
+            "https://acme-one.example.com",
+            "https://acme-two.example.com",
+        ]
+        # "About us: ..." is only on each site's own /about subpage
+        assert rows[0]["About Us"].startswith("About us: Acme One builds")
+        assert rows[1]["About Us"].startswith("About us: Acme Two builds")
+
+
+class TestInputOrderIndependence:
+    def test_every_column_identical_in_any_row_order(self, spark, sf_dir):
+        # homepage first, then subpages in rank order: Founded Info (the
+        # first founding sentence of the joined pages) and every other
+        # column do not depend on where a company sits in the sheet
+        companies = [
+            (r["company_name"], r["website"])
+            for r in companies_frame(spark, sf_dir).orderBy("_row_idx").collect()
+        ]
+        shuffled = random.Random(5).sample(companies, len(companies))
+        runs = [
+            {(r["Company Name"], r["Website"]): list(r) for r in
+             enrich_pipeline(spark, indexed(spark, order)).collect()}
+            for order in (companies, companies[::-1], shuffled)
+        ]
+        assert len(runs[0]) == len(companies)
+        assert runs[1] == runs[0]
+        assert runs[2] == runs[0]
