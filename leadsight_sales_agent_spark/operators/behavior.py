@@ -6662,18 +6662,13 @@ def forecast_ljung_box_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the 12 terms sum as DECIMAL (order-free); Q reports through
     the floor e4 quantizer with the critical-value comparison as an
     integer compare. Scale: everything after the month-grain rollup
-    runs on 12 rows.
+    runs on 12 rows; n is an OVER () window on that grain, so the ACF
+    stage is planned once with no checkpoint or anchor join.
     """
-    # r8: the 12-row ACF stage feeds the n anchor AND the term grid —
-    # checkpoint so the lag-alignment stage runs once
-    # ckpt-grain: bounded — 12-row monthly ACF grain
-    acf = forecast_acf_monthly(spark, sf_dir).localCheckpoint(eager=False)
-    nn = acf.agg(
-        (
-            F.max(F.when(F.col("lag_months") == 1, F.col("n_pairs"))) + 1
-        ).alias("n")
+    acf = forecast_acf_monthly(spark, sf_dir).withColumn(
+        "n", F.expr("max(CASE WHEN lag_months = 1 THEN n_pairs END) OVER () + 1")
     )
-    terms = acf.crossJoin(F.broadcast(nn)).select(
+    terms = acf.select(
         F.expr(
             "CAST(round(CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 2.0)"
             " * (CAST(floor(acf * 1e6 + 0.5) AS DOUBLE)"
@@ -10924,10 +10919,11 @@ def forecast_theta_method(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold (L·2^35 = x_1 + Σ x_t·2^(t-2) — a plain weighted SUM, no
     recursion), all HUGEINT/DECIMAL(38) with half-up centi reports.
 
-    100 TB: one month rollup, two scalar sums, one weighted sum — the
-    M4 winner costs three aggregates. The graded companion to
-    holt_winters (trend+seasonality) and the pinball scoreboard that
-    prices such forecasts.
+    100 TB: one month rollup, two OVER () window sums over its 36
+    rows, one weighted sum — the M4 winner costs three aggregates in
+    one lazy plan. The graded companion to holt_winters
+    (trend+seasonality) and the pinball scoreboard that prices such
+    forecasts.
     """
     cents = (F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("long")
     rev = (
@@ -10944,32 +10940,30 @@ def forecast_theta_method(spark: SparkSession, sf_dir: str) -> DataFrame:
     series = months.join(rev, "t", "left").select(
         "t", F.coalesce("y", F.lit(0)).alias("y")
     )
-    sums = series.agg(
-        F.sum("y").cast("decimal(38,0)").alias("b0"),
-        F.sum(F.col("t") * F.col("y")).cast("decimal(38,0)").alias("b1"),
-    )
-    coef = sums.select(
-        F.expr(f"{_TH2_STT} * b0 - {_TH2_ST} * b1").alias("na"),
-        F.expr(f"{_TH2_N} * b1 - {_TH2_ST} * b0").alias("nb"),
-    # ckpt-grain: bounded — 1-row regression coefficients
-    ).localCheckpoint(eager=False)
-    theta = series.crossJoin(F.broadcast(coef)).select(
+    b0 = "CAST(sum(y) OVER () AS DECIMAL(38,0))"
+    b1 = "CAST(sum(t * y) OVER () AS DECIMAL(38,0))"
+    coef = series.select(
         "t",
-        F.expr(
-            f"2 * CAST(y AS DECIMAL(38,0)) * {TH2_DET} - (na + nb * t)"
-        ).alias("x_num"),
+        "y",
+        F.expr(f"{_TH2_STT} * {b0} - {_TH2_ST} * {b1}").alias("na"),
+        F.expr(f"{_TH2_N} * {b1} - {_TH2_ST} * {b0}").alias("nb"),
     )
-    ses = theta.agg(
+    ses = coef.withColumn(
+        "x_num",
+        F.expr(f"2 * CAST(y AS DECIMAL(38,0)) * {TH2_DET} - (na + nb * t)"),
+    ).agg(
+        F.max("na").alias("na"),
+        F.max("nb").alias("nb"),
         F.sum(
             F.expr(
                 "CASE WHEN t = 1 THEN x_num"
                 " ELSE x_num * CAST(shiftleft(CAST(1 AS BIGINT),"
                 " CAST(t - 2 AS INT)) AS DECIMAL(38,0)) END"
             )
-        ).alias("s_num")
+        ).alias("s_num"),
     )
     d = TH2_DET
-    return coef.crossJoin(F.broadcast(ses)).select(
+    return ses.select(
         F.expr(
             f"CAST((2 * 100 * na + {d})"
             f" DIV (2 * CAST({d} AS DECIMAL(38,0))) AS BIGINT)"

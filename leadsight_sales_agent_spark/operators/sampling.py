@@ -2193,7 +2193,8 @@ def sample_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     - log importance ratio per bucket with add-1 smoothing, each ln of
       an INTEGER e12-floor-quantized (the storage_entropy/novelty ln
       device) so doc weights are exact BIGINT sums of per-bucket
-      integers;
+      integers; the target and raw totals are OVER () windows on the
+      256-row bucket grain;
     - sampling WITHOUT an RNG: Gumbel-max via the md5-uniform device
       (u = (h32 + 0.5) / 2^32, g = -ln(-ln(u)) e12-quantized) — the
       bootstrap/permutation derandomization contract applied to
@@ -2260,25 +2261,19 @@ def sample_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n").cast("bigint").alias("cr"),
             F.sum(F.when(F.col("en"), F.col("n"))).cast("bigint").alias("ct"),
         )
-        # ckpt-grain: bounded — 256 hash buckets
-        .localCheckpoint(eager=False)
     )
-    tots = bstats.agg(F.sum("ct").alias("tt"), F.sum("cr").alias("tr"))
     lnq = "CAST(floor(ln(CAST({x} AS DOUBLE)) * 1e12) AS BIGINT)"
-    lr = (
-        bstats.crossJoin(F.broadcast(tots))
-        .select(
-            "b",
-            F.expr(
-                lnq.format(x="coalesce(ct, 0) + 1")
-                + " - "
-                + lnq.format(x=f"tt + {DSIR_BUCKETS}")
-                + " - "
-                + lnq.format(x="cr + 1")
-                + " + "
-                + lnq.format(x=f"tr + {DSIR_BUCKETS}")
-            ).alias("lw"),
-        )
+    lr = bstats.select(
+        "b",
+        F.expr(
+            lnq.format(x="coalesce(ct, 0) + 1")
+            + " - "
+            + lnq.format(x=f"sum(ct) OVER () + {DSIR_BUCKETS}")
+            + " - "
+            + lnq.format(x="cr + 1")
+            + " + "
+            + lnq.format(x=f"sum(cr) OVER () + {DSIR_BUCKETS}")
+        ).alias("lw"),
     )
     w = (
         feat.join(F.broadcast(lr), "b")

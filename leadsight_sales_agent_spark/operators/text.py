@@ -5425,26 +5425,32 @@ def mixture_doremi_tilt(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: inherits the LM stage's shape (map-side trigram explode +
     vocabulary-bounded model broadcast); everything after the doc
-    score is source-grain (20 rows) with two 1-row scalar anchors.
+    score is source-grain (20 rows). The corpus baseline, k and the
+    tilt total are OVER () windows over that grain, so the query is
+    one lazy plan with no checkpoint and no cross join.
     """
     lm = text_trigram_lm_score(spark, sf_dir)
     docs = load(spark, sf_dir, "documents").select("doc_id", "source")
-    per_doc = lm.join(docs, "doc_id").select("source", "avg_logp_micro")
-    # ckpt-grain: slim-exception — 2-col doc-grain score frame
-    per_doc = per_doc.localCheckpoint(eager=False)  # feeds per-src + baseline
-    per_src = per_doc.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.expr("CAST(-(sum(avg_logp_micro) DIV count(*)) AS BIGINT)").alias(
-            "loss_micro"
-        ),
-    )
-    base = per_doc.agg(
-        F.expr("CAST(-(sum(avg_logp_micro) DIV count(*)) AS BIGINT)").alias(
-            "corpus_loss_micro"
+    per_src = (
+        lm.join(docs, "doc_id")
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("avg_logp_micro").alias("s"),
         )
-    ).crossJoin(per_src.agg(F.count(F.lit(1)).alias("k")))
+    )
+    # the per-source sums add up to the corpus sum, so the windowed
+    # baseline quotient is integer-identical to one over the docs
     tilt = (
-        per_src.crossJoin(F.broadcast(base))
+        per_src.select(
+            "source",
+            "n_docs",
+            F.expr("CAST(-(s DIV n_docs) AS BIGINT)").alias("loss_micro"),
+            F.expr(
+                "CAST(-(sum(s) OVER () DIV sum(n_docs) OVER ()) AS BIGINT)"
+            ).alias("corpus_loss_micro"),
+            F.expr("count(*) OVER ()").alias("k"),
+        )
         .withColumn("excess_micro", F.col("loss_micro") - F.col("corpus_loss_micro"))
         .withColumn(
             "e12",
@@ -5461,11 +5467,9 @@ def mixture_doremi_tilt(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " excess_micro)) AS DOUBLE) / 1000000.0) * 1e12) AS BIGINT)"
             ),
         )
-        # ckpt-grain: bounded — source-grain (20 rows)
-        .localCheckpoint(eager=False)  # feeds tot + the report
+        .withColumn("se", F.expr("CAST(sum(e12) OVER () AS DECIMAL(38,0))"))
     )
-    tot = tilt.agg(F.sum("e12").cast("decimal(38,0)").alias("se"))
-    return tilt.crossJoin(F.broadcast(tot)).select(
+    return tilt.select(
         "source",
         F.col("n_docs").cast("bigint").alias("n_docs"),
         "loss_micro",

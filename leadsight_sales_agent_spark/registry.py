@@ -21,6 +21,12 @@ frame when the CALLER executes it. A session that drives many queries
 must therefore call `spark.catalog.clearCache()` between queries —
 exactly what bench.py, tools/check_oracle.py, and tools/plan_lint.py
 do — or data-proportional cache entries accumulate across queries.
+`clearCache()` frees persist()ed frames only: the blocks of a
+`localCheckpoint` stay registered with the SparkContext (see
+`sc._jsc.getPersistentRDDs()`) until the session ends, so every run of
+a query that checkpoints leaves them behind. Small scalar anchors are
+therefore OVER () windows on the aggregated grain, not a checkpointed
+frame cross-joined to its own 1-row totals.
 """
 
 from __future__ import annotations

@@ -133,7 +133,7 @@ class JobManager:
     def status(self) -> dict[str, Any]:
         """Snapshot — the reference's GET /status (server.py:361-369)."""
         return {
-            "status": self.state,
+            "state": self.state,
             "total": self.total,
             "current": self.current,
             "error": self.error,

@@ -294,21 +294,7 @@ class ProgressServer:
 
     def _handle_status(self, h: BaseHTTPRequestHandler) -> None:
         """JSON snapshot — reference /status (server.py:364-371)."""
-        m = self.manager
-        body = json.dumps(
-            {
-                "state": m.state,
-                "current": m.current,
-                "total": m.total,
-                "error": m.error,
-                "n_events": len(m.events),
-            }
-        ).encode()
-        h.send_response(200)
-        h.send_header("Content-Type", "application/json")
-        h.send_header("Content-Length", str(len(body)))
-        h.end_headers()
-        h.wfile.write(body)
+        self._send_json(h, self.manager.status())
 
     def _handle_progress(
         self, h: BaseHTTPRequestHandler, offset: int, timeout_s: float = 30.0

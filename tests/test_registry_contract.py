@@ -429,3 +429,23 @@ class TestRunQueryCacheHygiene:
             assert cache_mgr.isEmpty(), (
                 f"{name} left cache entries behind via run_query"
             )
+
+    def test_window_anchor_queries_leave_no_checkpoint(self, spark, sf_dir):
+        """These queries read their scalar anchors as OVER () windows on
+        an aggregated grain instead of a localCheckpoint'ed frame
+        cross-joined to its own 1-row totals. clearCache() does not free
+        localCheckpoint blocks, so a checkpoint scan in the plan leaks
+        one persisted RDD per run even through run_query."""
+        persistent = spark.sparkContext._jsc.getPersistentRDDs
+        for name in (
+            "mixture_doremi_tilt",
+            "forecast_ljung_box_q",
+            "forecast_theta_method",
+        ):
+            df = registry.QUERIES[name](spark, sf_dir)
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, name
+            before = sorted(persistent().keys())
+            for _ in range(3):
+                registry.run_query(name, spark, sf_dir)
+            assert sorted(persistent().keys()) == before, name

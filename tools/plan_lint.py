@@ -148,7 +148,6 @@ ALLOW_NON_EQUI = {
     "eval_krippendorff_alpha_langid",  # 1-row label-totals anchor
     "forecast_causal_impact_counterfactual",  # 1-row pre-period sums onto 12 post months
     "eval_brier_murphy_decomposition",  # 1-row global sums onto the bin grain
-    "forecast_theta_method",  # 1-row trend-coefficient / SES-sum anchors on the 36-month series
     "attribution_markov_removal",  # 1-row count-matrix x 1-row visits anchors
     "recsys_coverage_novelty_audit",  # 1-row baskets/catalog/top10 anchors on the slot frame
     "ab_permutation_test_hashed",  # 200-row replicate grid + 1-row group-sums anchors
@@ -163,7 +162,7 @@ ALLOW_NON_EQUI = {
     "eval_kruskal_wallis",  # 1-row tie-term scalar combine
     "dq_simpsons_paradox_audit",  # 1-row pooled-stats cross join
     "forecast_durbin_watson_residuals",  # 1-row OLS-stats cross join onto 36 months
-    "forecast_ljung_box_q",  # composes the ACF stage + 1-row n anchor
+    "forecast_ljung_box_q",  # composes the ACF stage (12-row lag grid + 1-row stats anchor)
     "forecast_engle_granger_cointegration",  # 1-row OLS-stats + quantizer scalar broadcasts
     "timeseries_dtw_monthly_segments",  # 1-row reference-vector broadcast onto 5 segments
     "timeseries_hurst_rs",  # three 1-row R/S-leg anchors
@@ -209,8 +208,7 @@ ALLOW_NON_EQUI = {
     "sketch_hll_deterministic",  # 1-row global-truth anchor for '__all__'
     "trending_parts_decayed",  # 1-row max-month anchor
     "sample_neyman_allocation",  # 1-row weight-total anchor
-    "sample_dsir_importance",  # 1-row corpus-totals + 1-row k-th-threshold broadcasts (r9)
-    "mixture_doremi_tilt",  # 1-row corpus-baseline + 1-row tilt-total anchors on the 20-source grain (r9)
+    "sample_dsir_importance",  # 1-row k-th-threshold broadcast (r9)
     "forecast_acf_monthly",  # 12-row lag grid + 1-row stats anchor
     "territory_snake_balanced_assignment",  # 1-row total anchor
     "eval_ndcg_retrieval",  # composes the broadcast-NL knn baseline
@@ -291,7 +289,9 @@ ALLOW_MANY_EXCHANGES = {
     # checkpointed; 14 -> 7 Exchanges, under the default cap)
     "timeseries_dtw_monthly_segments": 13,  # dense month grid build + ordered-vector rollup + ref broadcast
     # (r8: forecast_ljung_box_q removed — the 12-row ACF stage is
-    # checkpointed; 18 -> 3 Exchanges, under the default cap)
+    # checkpointed; 18 -> 3 Exchanges, under the default cap. Its n
+    # anchor is now an OVER () window, so the stage prints once
+    # without the checkpoint: 9 Exchanges)
     # (r8: dq_t_closeness_audit removed — cells and grid are
     # checkpointed; 20 -> 4 Exchanges, under the default cap)
     # (r8: privacy_release_gate removed — inherits the checkpointed
@@ -460,14 +460,17 @@ WINDOW_SP_EXPECTED = {
     "forecast_durbin_watson_residuals",
     "forecast_engle_granger_cointegration",
     "forecast_granger_urgent_revenue",
+    "forecast_ljung_box_q",
     "forecast_pacf_durbin_levinson",
     "forecast_seasonal_decomposition",
     "forecast_seasonal_naive_backtest",
     "forecast_seasonal_trend_strength",
     "forecast_theil_sen_trend",
     "forecast_theil_u2_accuracy",
+    "forecast_theta_method",
     "graph_kcore_peel",
     "inventory_abc_xyz_matrix",
+    "mixture_doremi_tilt",
     "mixture_repeat_epochs_plan",
     "mixture_token_budget_allocation",
     "ops_cache_belady_vs_lru",
