@@ -421,9 +421,10 @@ def agg_salted_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     a single final-phase task still drowns. Salt is xxhash64 of a
     row-unique column, deterministic — no rand() in the plan.
 
-    Measured (r8, tools/skew_ab.py — 4.8M-row fact, one key owning
-    30%): for THIS algebraic count+sum shape the salted form is
-    25-75% SLOWER than the plain groupBy — map-side partial
+    Measured (tools/skew_ab.py — 4.8M-row fact, one key owning 30%,
+    AQE off, 4 cores, 6 runs): for THIS algebraic count+sum shape the
+    salted form is SLOWER than the plain groupBy in 5 of 6 runs
+    (median 5.23 s vs 4.06 s, +29%) — map-side partial
     aggregation already collapses the skew before the shuffle, so the
     extra (key, salt) exchange is pure overhead. Keep the device for
     map-side-combine-defeating state only; thresholds in SURVEY §8.12.

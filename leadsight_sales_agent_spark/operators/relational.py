@@ -480,10 +480,12 @@ def join_salted_skew_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     window/groupBy that AQE can't split. Salt is derived with xxhash64
     (not rand()) so the plan stays deterministic and retry-safe.
 
-    Measured (r8, tools/skew_ab.py — 4.8M-row fact, one key owning 30%,
-    broadcast disabled): net of the shared scan, this device runs the
-    shuffle join ~2.5-3x faster than the plain plan and beats AQE's
-    skew split on that shape; thresholds in SURVEY §8.12.
+    Measured (tools/skew_ab.py — 4.8M-row fact, one key owning 30%,
+    broadcast disabled, 4 cores, 6 runs): the salted join (median
+    4.25 s) is not separable from the plain shuffle join with AQE off
+    (4.46 s) or with AQE's skew split (4.58 s); the spread between runs
+    is wider than the gaps. Whether salting pays on a wider machine is
+    unmeasured; thresholds in SURVEY §8.12.
     """
     orders = load(spark, sf_dir, "orders").withColumn(
         "salt", F.pmod(F.xxhash64("o_orderkey"), F.lit(N_SALT)).cast("int")

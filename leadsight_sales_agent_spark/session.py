@@ -5,7 +5,9 @@ local[N] here, but every setting is chosen as it would be on a
 splitting), broadcast threshold generous enough to keep all dimension
 joins shuffle-free, shuffle partitions sized for the local core count
 (on a real cluster AQE coalesces from a high initial value), Arrow on
-for the few Pandas-UDF paths.
+for the few Pandas-UDF paths. Python workers get the package's parent
+directory on their PYTHONPATH, so UDF queries run from any working
+directory.
 """
 
 from __future__ import annotations
@@ -13,6 +15,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(app_name: str = "leadsight-spark", cpus: int | None = None) -> SparkSession:
@@ -32,4 +37,12 @@ def get_spark(app_name: str = "leadsight-spark", cpus: int | None = None) -> Spa
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # Each UDF copies sc.environment when it is wrapped; pyspark fills it
+    # from the merged conf (spark-defaults.conf included), so appending
+    # keeps any PYTHONPATH already shipped, also for a running context.
+    env = spark.sparkContext.environment
+    parts = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_PARENT not in parts:
+        env["PYTHONPATH"] = os.pathsep.join(parts + [_PACKAGE_PARENT])
+    return spark

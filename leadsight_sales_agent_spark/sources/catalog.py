@@ -39,12 +39,10 @@ def _tune(spark: SparkSession) -> None:
     The driver owns SparkSession creation, so anything we need that is
     runtime-settable is applied here on every load — idempotent and
     cheap. UTC session time zone keeps collected timestamps identical
-    to the DuckDB oracle's naive-UTC parquet reads.
+    to the DuckDB oracle's naive-UTC parquet reads. Planner settings
+    such as AQE stay the session's own choice.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
     # events.parquet has stored ts as TIMESTAMP(NANOS) (which the Spark
     # vectorized reader rejects; read as raw nanos and convert below)
     # and as TIMESTAMP(MICROS) with isAdjustedToUTC=false (which Spark

@@ -18,7 +18,6 @@ equivalence property Structured Streaming guarantees).
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import tempfile
@@ -64,7 +63,7 @@ def _mark_staged(d: str, n_rows: int) -> None:
         f.write(str(n_rows))
 
 
-def _await_bounded(q, seconds: int) -> None:
+def _await_bounded(q, seconds: float) -> None:
     """Wait for a bounded (availableNow) streaming run to finish.
 
     ``awaitTermination(timeout)`` returns False on timeout; ignoring
@@ -73,11 +72,52 @@ def _await_bounded(q, seconds: int) -> None:
     only shows up at larger scale factors. Raise instead so the caller
     (or test) fails loudly."""
     if not q.awaitTermination(seconds):
-        q.stop()
         raise TimeoutError(
             f"bounded streaming query did not complete within {seconds}s; "
             "partial sink state discarded"
         )
+
+
+def _stage(kind: str, sf_dir: str, df: DataFrame, write) -> str:
+    """Stage ``df`` as a file-stream source directory and return it.
+
+    ``write(df, dir)`` lays the files out (its partitioning and append
+    order are what the stream's micro-batches see). The copy is keyed
+    by (kind, sf_dir) and the row count, so a matching earlier copy is
+    reused and ``write`` is skipped."""
+    n_rows = df.count()
+    src_dir, staged = _staged_source_dir(kind, sf_dir, n_rows)
+    if not staged:
+        write(df, src_dir)
+        _mark_staged(src_dir, n_rows)
+    return src_dir
+
+
+def _repartitioned(n: int):
+    """Stage writer: ``n`` parquet files written in one job."""
+    return lambda df, d: df.repartition(n).write.mode("overwrite").parquet(d)
+
+
+def _run_bounded(frame: DataFrame, mode: str, sink, seconds: float) -> None:
+    """Run ``frame`` to completion as an availableNow query feeding
+    ``sink`` through foreachBatch. The checkpoint lives in a fresh
+    scratch dir (each run reprocesses from offset zero) and is removed
+    afterwards, also when a run that outlives ``seconds`` raises
+    TimeoutError."""
+    scratch = _scratch_dir()
+    q = (
+        frame.writeStream.outputMode(mode)
+        .foreachBatch(sink)
+        .option("checkpointLocation", os.path.join(scratch, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        _await_bounded(q, seconds)
+    finally:
+        if q.isActive:
+            q.stop()
+        shutil.rmtree(scratch, ignore_errors=True)
 
 
 def _dsum_value_2dp() -> Column:
@@ -118,19 +158,12 @@ def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     returned as a DataFrame. availableNow ⇒ bounded, deterministic
     result equal to the batch query over the same files.
     """
-    scratch = _scratch_dir()
-    progress: list[str] = []
-
     # Stage the source as a directory of parquet files (the file stream
     # source tails a directory; repartition(4) gives it several files so
     # maxFilesPerTrigger produces real multi-batch incremental progress).
     # The staged copy is deterministic per sf_dir → reused across runs.
     events = load(spark, sf_dir, "events")
-    n_events = events.count()
-    src_dir, staged = _staged_source_dir("windowed", sf_dir, n_events)
-    if not staged:
-        events.repartition(4).write.mode("overwrite").parquet(src_dir)
-        _mark_staged(src_dir, n_events)
+    src_dir = _stage("windowed", sf_dir, events, _repartitioned(4))
 
     stream = (
         spark.readStream.schema(events.schema)
@@ -145,26 +178,9 @@ def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         # K2/ST3: incremental materialization per micro-batch. Collect is
         # safe here: output is one aggregated row per (window, type).
         batches.append(batch_df.collect())
-        progress.append(json.dumps({"type": "step", "batch": batch_id}))
 
-    q = (
-        agg.writeStream.outputMode("complete")
-        .foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_bounded(q, 120)
-    finally:
-        if q.isActive:
-            q.stop()
-        shutil.rmtree(scratch, ignore_errors=True)
-
-    rows = batches[-1] if batches else []
-    if rows:
-        return spark.createDataFrame(rows, agg.schema)
-    return spark.createDataFrame([], agg.schema)
+    _run_bounded(agg, "complete", sink, 120)
+    return spark.createDataFrame(batches[-1] if batches else [], agg.schema)
 
 
 @query("streaming_progress_events")  # listener/event-log demo → rows-only
@@ -172,10 +188,7 @@ def streaming_progress_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's SSE progress stream (ST1/ST2) as data: replay the
     events table as an ordered progress log with running counters —
     `pct = done/total` (A5) — computed with one pass of window functions."""
-    from pyspark.sql import Window
-
     ev = load(spark, sf_dir, "events")
-    total = ev.count()
     w = Window.orderBy(F.asc("ts"), F.asc("event_id")).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -191,7 +204,9 @@ def streaming_progress_events(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("ts").cast("double").alias("ts"),
             )
         ).alias("sse_payload"),
-        F.round(F.count("*").over(w) / F.lit(total) * 100, 2).alias("pct"),
+        F.round(
+            F.count("*").over(w) / F.count("*").over(Window.partitionBy()) * 100, 2
+        ).alias("pct"),
     )
 
 
@@ -222,7 +237,6 @@ def streaming_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     gap_us = SESSION_GAP_MIN * 60 * 1_000_000
-    scratch = _scratch_dir()
     events = load(spark, sf_dir, "events").select("user_id", "ts")
     # Stage 2 ts-range files SEQUENTIALLY: FileStreamSource processes
     # files in modification-time order, so sequential appends (not one
@@ -233,10 +247,8 @@ def streaming_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame
     # split) are the minimum that still proves cross-batch state
     # carry-over. The staged copy is deterministic per sf_dir → reused
     # across runs (mtime order survives reuse).
-    n_events = events.count()
-    src_dir, staged = _staged_source_dir("sessionize", sf_dir, n_events)
-    if not staged:
-        with_sec = events.withColumn("ts_sec", F.col("ts").cast("long"))
+    def write_time_halves(df: DataFrame, d: str) -> None:
+        with_sec = df.withColumn("ts_sec", F.col("ts").cast("long"))
         qs = with_sec.approxQuantile("ts_sec", [0.5], 0.0)
         bounds = [None, *qs, None]
         for lo, hi in zip(bounds[:-1], bounds[1:]):
@@ -245,8 +257,9 @@ def streaming_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame
                 part = part.filter(F.col("ts_sec") > F.lit(lo))
             if hi is not None:
                 part = part.filter(F.col("ts_sec") <= F.lit(hi))
-            part.select("user_id", "ts").coalesce(1).write.mode("append").parquet(src_dir)
-        _mark_staged(src_dir, n_events)
+            part.select("user_id", "ts").coalesce(1).write.mode("append").parquet(d)
+
+    src_dir = _stage("sessionize", sf_dir, events, write_time_halves)
 
     def sessionize(key, pdfs, state: GroupState):
         import pandas as pd  # noqa: PLC0415 — runs on executors
@@ -305,24 +318,8 @@ def streaming_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame
         for r in batch_df.collect():
             final[(r["user_id"], r["session_start"])] = r
 
-    q = (
-        sessions.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_bounded(q, 180)
-    finally:
-        if q.isActive:
-            q.stop()
-        shutil.rmtree(scratch, ignore_errors=True)
-
-    rows = list(final.values())
-    if rows:
-        return spark.createDataFrame(rows, SESSION_OUT_SCHEMA)
-    return spark.createDataFrame([], SESSION_OUT_SCHEMA)
+    _run_bounded(sessions, "update", sink, 180)
+    return spark.createDataFrame(list(final.values()), SESSION_OUT_SCHEMA)
 
 
 # -- Stream-stream interval join ---------------------------------------------
@@ -347,20 +344,11 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     result equal to the batch interval join over the same files
     (pinned by tests/test_streaming.py).
     """
-    scratch = _scratch_dir()
     ev = load(spark, sf_dir, "events").select("event_id", "ts", "user_id", "event_type")
     clicks_b = ev.filter(F.col("event_type") == "click")
     purch_b = ev.filter(F.col("event_type") == "purchase")
-
-    n_clicks, n_purch = clicks_b.count(), purch_b.count()
-    click_dir, staged = _staged_source_dir("ssj_clicks", sf_dir, n_clicks)
-    if not staged:
-        clicks_b.repartition(2).write.mode("overwrite").parquet(click_dir)
-        _mark_staged(click_dir, n_clicks)
-    purch_dir, staged = _staged_source_dir("ssj_purchases", sf_dir, n_purch)
-    if not staged:
-        purch_b.repartition(2).write.mode("overwrite").parquet(purch_dir)
-        _mark_staged(purch_dir, n_purch)
+    click_dir = _stage("ssj_clicks", sf_dir, clicks_b, _repartitioned(2))
+    purch_dir = _stage("ssj_purchases", sf_dir, purch_b, _repartitioned(2))
 
     schema = "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING"
     clicks = (
@@ -400,23 +388,8 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         out.extend(batch_df.collect())
 
-    q = (
-        joined.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_bounded(q, 180)
-    finally:
-        if q.isActive:
-            q.stop()
-        shutil.rmtree(scratch, ignore_errors=True)
-
-    if out:
-        return spark.createDataFrame(out, joined.schema)
-    return spark.createDataFrame([], joined.schema)
+    _run_bounded(joined, "append", sink, 180)
+    return spark.createDataFrame(out, joined.schema)
 
 
 def batch_attribution_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -461,18 +434,14 @@ def streaming_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     state store). Result pinned equal to batch distinct-by-id over the
     same staged files (tests/test_streaming.py).
     """
-    scratch = _scratch_dir()
+    schema = "event_id BIGINT, ts TIMESTAMP, event_type STRING"
     ev = load(spark, sf_dir, "events").select("event_id", "ts", "event_type")
     dups = ev.filter(F.col("event_id") % 3 == 0)
-    staged = ev.unionAll(dups)  # at-least-once: every 3rd event delivered twice
-    n_staged = staged.count()
-    src_dir, is_staged = _staged_source_dir("dedup", sf_dir, n_staged)
-    if not is_staged:
-        staged.repartition(4).write.mode("overwrite").parquet(src_dir)
-        _mark_staged(src_dir, n_staged)
+    # at-least-once: every 3rd event delivered twice
+    src_dir = _stage("dedup", sf_dir, ev.unionAll(dups), _repartitioned(4))
 
     stream = (
-        spark.readStream.schema("event_id BIGINT, ts TIMESTAMP, event_type STRING")
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 2)
         .parquet(src_dir)
         .withWatermark("ts", "1 hour")
@@ -483,24 +452,8 @@ def streaming_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         out.extend(batch_df.collect())
 
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_bounded(q, 120)
-    finally:
-        if q.isActive:
-            q.stop()
-        shutil.rmtree(scratch, ignore_errors=True)
-
-    schema = "event_id BIGINT, ts TIMESTAMP, event_type STRING"
-    if out:
-        return spark.createDataFrame(out, schema)
-    return spark.createDataFrame([], schema)
+    _run_bounded(stream, "append", sink, 120)
+    return spark.createDataFrame(out, schema)
 
 
 # -- Stream-static enrichment join -------------------------------------------
@@ -535,13 +488,8 @@ def streaming_static_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ⇒ bounded and deterministic, pinned equal to the batch twin
     (`_segment_counts` over the same files) by tests/test_streaming.py.
     """
-    scratch = _scratch_dir()
     events = load(spark, sf_dir, "events").select("user_id", "event_id")
-    n_events = events.count()
-    src_dir, staged = _staged_source_dir("static_join", sf_dir, n_events)
-    if not staged:
-        events.repartition(4).write.mode("overwrite").parquet(src_dir)
-        _mark_staged(src_dir, n_events)
+    src_dir = _stage("static_join", sf_dir, events, _repartitioned(4))
 
     stream = (
         spark.readStream.schema(events.schema)
@@ -555,59 +503,22 @@ def streaming_static_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batches.append(batch_df.collect())
 
-    q = (
-        agg.writeStream.outputMode("complete")
-        .foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_bounded(q, 120)
-    finally:
-        if q.isActive:
-            q.stop()
-        shutil.rmtree(scratch, ignore_errors=True)
-
-    rows = batches[-1] if batches else []
-    if rows:
-        return spark.createDataFrame(rows, agg.schema)
-    return spark.createDataFrame([], agg.schema)
+    _run_bounded(agg, "complete", sink, 120)
+    return spark.createDataFrame(batches[-1] if batches else [], agg.schema)
 
 
-# -- Custom stateful operator #2: transformWithStateInPandas ------------------
+# -- Custom stateful operator #2: per-user running totals --------------------
 
 USER_TOTALS_OUT_SCHEMA = "user_id BIGINT, n_events BIGINT, total_value_micro BIGINT"
-
-
-def _has_transform_with_state() -> bool:
-    """transformWithStateInPandas speaks a protobuf state protocol to
-    the JVM; this container ships pyspark without google.protobuf (and
-    installs are off), so the new-API path is gated on the import and
-    the same contract falls back to applyInPandasWithState."""
-    try:
-        import google.protobuf.descriptor  # noqa: F401, PLC0415
-
-        return True
-    except ImportError:
-        return False
 
 
 @query("streaming_user_totals_stateful")  # custom stateful streaming → rows-only
 def streaming_user_totals_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user running totals as a custom stateful operator: one state
-    record of (n_events, total_value_micro) per user, re-emitted with
-    running values each micro-batch (update semantics; the sink keeps
-    the last version per user).
-
-    Two implementations of the SAME contract, selected at runtime:
-    Spark 4's new arbitrary-state API (``transformWithStateInPandas``,
-    a StatefulProcessor with a typed ValueState + the RocksDB store it
-    requires) when its protobuf dependency exists, else
-    ``applyInPandasWithState`` (the API sessionize above exercises).
-    This container lacks google.protobuf, so the fallback is the
-    executed path here — the new-API code is real and runs wherever
-    pyspark's [connect]/protobuf extra is present.
+    record of (n_events, total_value_micro) per user, folded by
+    ``applyInPandasWithState`` and re-emitted with running values each
+    micro-batch (update semantics; the sink keeps the last version per
+    user).
 
     Value sums ride EXACT integer micro-units (the double is scaled
     per row before summing), so the final snapshot equals the batch
@@ -616,18 +527,17 @@ def streaming_user_totals_stateful(spark: SparkSession, sf_dir: str) -> DataFram
     the state store, sharded by the grouping key; micro-batches touch
     only keys present in the batch.
     """
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     events = load(spark, sf_dir, "events").select("user_id", "ts", "value")
-    n_events = events.count()
-    scratch = _scratch_dir()
-    src_dir, staged = _staged_source_dir("usertotals", sf_dir, n_events)
-    if not staged:
+
+    def write_hash_halves(df: DataFrame, d: str) -> None:
         # two files so at least one cross-batch state carry-over
         # happens; the split keys on a row hash that includes the event
         # id so duplicate (user, value) rows keep their multiplicity
         # (a limit/subtract split would DISTINCT them away) and most
         # users land in both files.
-        with_idx = events.withColumn(
+        with_idx = df.withColumn(
             "micro", (F.col("value").cast("decimal(25,6)") * 1000000).cast("bigint")
         ).select(
             "user_id",
@@ -637,89 +547,42 @@ def streaming_user_totals_stateful(spark: SparkSession, sf_dir: str) -> DataFram
         for part in (0, 1):
             with_idx.filter(F.col("h") == part).drop("h").coalesce(1).write.mode(
                 "append"
-            ).parquet(src_dir)
-        _mark_staged(src_dir, n_events)
+            ).parquet(d)
 
+    src_dir = _stage("usertotals", sf_dir, events, write_hash_halves)
     stream = (
         spark.readStream.schema("user_id BIGINT, micro BIGINT")
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
 
-    use_tws = _has_transform_with_state()
-    if use_tws:
-        from pyspark.sql.streaming.stateful_processor import (  # noqa: PLC0415
-            StatefulProcessor,
-            StatefulProcessorHandle,
+    def fold_totals(key, pdfs, state: GroupState):
+        import pandas as pd  # noqa: PLC0415 — runs on executors
+
+        (user_id,) = key
+        n, v = state.get if state.exists else (0, 0)
+        for pdf in pdfs:
+            n += len(pdf)
+            # dropna (r10 nulls audit): a null-value event reaches
+            # pandas as NaN and astype(int64) raises; the batch twin's
+            # F.sum skips nulls, count(*) does not — mirror exactly
+            v += int(pdf["micro"].dropna().astype("int64").sum())
+        state.update((n, v))
+        yield pd.DataFrame(
+            {
+                "user_id": [user_id],
+                "n_events": [n],
+                "total_value_micro": [v],
+            }
         )
 
-        class UserTotals(StatefulProcessor):
-            def init(self, handle: StatefulProcessorHandle) -> None:
-                self._totals = handle.getValueState("totals", "n BIGINT, v BIGINT")
-
-            def handleInputRows(self, key, rows, timer_values):
-                import pandas as pd  # noqa: PLC0415 — runs on executors
-
-                (user_id,) = key
-                n = v = 0
-                if self._totals.exists():
-                    n, v = self._totals.get()
-                for pdf in rows:
-                    n += len(pdf)
-                    # dropna (r10 nulls audit): a null-value event
-                    # reaches pandas as NaN and astype(int64) raises;
-                    # the batch twin's F.sum skips nulls, count(*)
-                    # does not — mirror exactly
-                    v += int(pdf["micro"].dropna().astype("int64").sum())
-                self._totals.update((n, v))
-                yield pd.DataFrame(
-                    {
-                        "user_id": [user_id],
-                        "n_events": [n],
-                        "total_value_micro": [v],
-                    }
-                )
-
-            def close(self) -> None:
-                pass
-
-        totals = stream.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=UserTotals(),
-            outputStructType=USER_TOTALS_OUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    else:
-        from pyspark.sql.streaming.state import (  # noqa: PLC0415
-            GroupState,
-            GroupStateTimeout,
-        )
-
-        def fold_totals(key, pdfs, state: GroupState):
-            import pandas as pd  # noqa: PLC0415 — runs on executors
-
-            (user_id,) = key
-            n, v = state.get if state.exists else (0, 0)
-            for pdf in pdfs:
-                n += len(pdf)
-                # dropna: see the transformWithState twin above (r10)
-                v += int(pdf["micro"].dropna().astype("int64").sum())
-            state.update((n, v))
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "n_events": [n],
-                    "total_value_micro": [v],
-                }
-            )
-
-        totals = stream.groupBy("user_id").applyInPandasWithState(
-            fold_totals,
-            outputStructType=USER_TOTALS_OUT_SCHEMA,
-            stateStructType="n BIGINT, v BIGINT",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    totals = stream.groupBy("user_id").applyInPandasWithState(
+        fold_totals,
+        outputStructType=USER_TOTALS_OUT_SCHEMA,
+        stateStructType="n BIGINT, v BIGINT",
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
 
     final: dict = {}
 
@@ -727,43 +590,8 @@ def streaming_user_totals_stateful(spark: SparkSession, sf_dir: str) -> DataFram
         for r in batch_df.collect():
             final[r["user_id"]] = r
 
-    # transformWithState requires the RocksDB state store; the other
-    # demos run on the default HDFS-backed provider, so set it for
-    # this query only and restore afterwards (the provider is read at
-    # query START, so per-query scoping works).
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(provider_key, None)
-    if use_tws:
-        spark.conf.set(
-            provider_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-    try:
-        q = (
-            totals.writeStream.outputMode("update")
-            .foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            _await_bounded(q, 120)
-        finally:
-            if q.isActive:
-                q.stop()
-            shutil.rmtree(scratch, ignore_errors=True)
-    finally:
-        if use_tws:
-            if prev_provider is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, prev_provider)
-
-    rows = list(final.values())
-    if rows:
-        return spark.createDataFrame(rows, USER_TOTALS_OUT_SCHEMA)
-    return spark.createDataFrame([], USER_TOTALS_OUT_SCHEMA)
+    _run_bounded(totals, "update", sink, 120)
+    return spark.createDataFrame(list(final.values()), USER_TOTALS_OUT_SCHEMA)
 
 
 def session_window_counts(stream: DataFrame) -> DataFrame:
@@ -799,13 +627,8 @@ def streaming_session_window_native(spark: SparkSession, sf_dir: str) -> DataFra
     merged state, which is exactly the batch result
     (tests/test_streaming.py pins equality against the batch twin).
     """
-    scratch = _scratch_dir()
     events = load(spark, sf_dir, "events")
-    n_events = events.count()
-    src_dir, staged = _staged_source_dir("sessnative", sf_dir, n_events)
-    if not staged:
-        events.repartition(4).write.mode("overwrite").parquet(src_dir)
-        _mark_staged(src_dir, n_events)
+    src_dir = _stage("sessnative", sf_dir, events, _repartitioned(4))
 
     stream = (
         spark.readStream.schema(events.schema)
@@ -819,24 +642,8 @@ def streaming_session_window_native(spark: SparkSession, sf_dir: str) -> DataFra
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batches.append(batch_df.collect())
 
-    q = (
-        agg.writeStream.outputMode("complete")
-        .foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_bounded(q, 120)
-    finally:
-        if q.isActive:
-            q.stop()
-        shutil.rmtree(scratch, ignore_errors=True)
-
-    rows = batches[-1] if batches else []
-    if rows:
-        return spark.createDataFrame(rows, agg.schema)
-    return spark.createDataFrame([], agg.schema)
+    _run_bounded(agg, "complete", sink, 120)
+    return spark.createDataFrame(batches[-1] if batches else [], agg.schema)
 
 
 WM_DELAY_MIN = 10  # watermark delay — matches the windowed demos above

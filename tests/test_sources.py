@@ -354,3 +354,18 @@ class TestPartitionedWrites:
         assert files, "zstd codec suffix missing from written files"
         back = spark.read.parquet(out)
         assert back.count() == li.count()
+
+
+class TestLoadKeepsSessionSettings:
+    def test_load_does_not_turn_aqe_back_on(self, spark, sf_dir):
+        key = "spark.sql.adaptive.enabled"
+        saved = spark.conf.get(key)
+        spark.conf.set(key, "false")
+        try:
+            df = load(spark, sf_dir, "orders").groupBy("o_custkey").count()
+            df.collect()
+            assert spark.conf.get(key) == "false"
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "AdaptiveSparkPlan" not in plan
+        finally:
+            spark.conf.set(key, saved)

@@ -700,3 +700,61 @@ class TestWatermarkEvictionAudit:
             assert r["n_admitted"] + r["n_dropped"] == r["n_rows"]
             assert r["n_dropped"] > 0
             assert r["max_late_us"] > 0
+
+
+class TestBoundedRunHelpers:
+    def test_run_timeout_stops_query_and_removes_checkpoint(
+        self, spark, tmp_path, monkeypatch
+    ):
+        # pyspark rejects a zero awaitTermination timeout, so the
+        # smallest positive one (1 ms) stands in for "no time at all";
+        # the 1 s sink keeps the query alive well past it.
+        import os
+        import time
+
+        import pytest as _pytest
+
+        from leadsight_sales_agent_spark.streaming import demo
+
+        made: list[str] = []
+        real_scratch = demo._scratch_dir
+
+        def spy_scratch() -> str:
+            made.append(real_scratch())
+            return made[-1]
+
+        monkeypatch.setattr(demo, "_scratch_dir", spy_scratch)
+        src = str(tmp_path / "src")
+        spark.range(10).write.parquet(src)
+        stream = spark.readStream.schema("id BIGINT").parquet(src)
+        before = {q.id for q in spark.streams.active}
+
+        with _pytest.raises(TimeoutError):
+            demo._run_bounded(stream, "append", lambda df, i: time.sleep(1), 0.001)
+
+        assert {q.id for q in spark.streams.active} == before
+        assert len(made) == 1 and not os.path.exists(made[0])
+
+    def test_second_stage_call_keeps_the_staged_files(self, spark, tmp_path, monkeypatch):
+        import os
+        import tempfile
+
+        import pytest as _pytest
+
+        from leadsight_sales_agent_spark.streaming import demo
+
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+        df = spark.range(100)
+        d = demo._stage("reuse_probe", "/sf/x", df, demo._repartitioned(2))
+
+        def mtimes() -> dict[str, int]:
+            return {f: os.stat(os.path.join(d, f)).st_mtime_ns for f in os.listdir(d)}
+
+        first = mtimes()
+        assert sum(f.endswith(".parquet") for f in first) == 2
+
+        def must_not_write(_df, _d):
+            _pytest.fail("a matching staged copy was rewritten")
+
+        assert demo._stage("reuse_probe", "/sf/x", df, must_not_write) == d
+        assert mtimes() == first
