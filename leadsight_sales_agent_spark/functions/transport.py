@@ -21,11 +21,15 @@ clients are OFF by default; ``enabled()``/``is_configured`` gate them,
 and unit tests exercise the config/degradation logic with an injected
 ``opener`` — never the network.
 
-Scale note: transports run INSIDE the Arrow-batched Python crossings
-(the enrichment crawl's mapInPandas, the LLM pandas_udf), so
-concurrency is per-executor-batch (bounded by ``max_workers``), and a
-failed row degrades to null instead of failing the task — at 1000
-executors the retry unit stays one URL, not one partition.
+Scale note: transports run INSIDE the enrichment's one Arrow-batched
+Python crossing (its mapInPandas), so concurrency is per batch (bounded
+by ``max_workers``), and a failed row degrades to null instead of
+failing the task — at 1000 executors the retry unit stays one URL, not
+one partition. The pipeline spreads its input round-robin over
+``defaultParallelism`` tasks, so a job has up to ``defaultParallelism``
+× ``max_workers`` page fetches in flight (4 × 8 on a local[4] session)
+and up to ``defaultParallelism`` LLM calls (one client per batch, one
+call at a time).
 """
 
 from __future__ import annotations

@@ -5,30 +5,40 @@ Reference (app.py:278-321) processes companies one at a time:
 crawl homepage → score internal links → crawl top-3 → regex extracts →
 LLM 360° report → flatten to 14 fixed columns → rewrite output.xlsx.
 
-Here the same semantics become a plan with exactly two Python crossings:
+Here the same semantics become a plan with exactly one Python crossing:
 
-    companies + host = try_parse_url(website)              (F7, JVM)
-      → crawl: ONE mapInPandas over Arrow batches          (crossing 1)
+    companies, round-robin over defaultParallelism tasks    (exchange 1)
+      + host = try_parse_url(website)                       (F7, JVM)
+      → ONE mapInPandas over Arrow batches                  (the crossing)
           homepage fetch (S3) → anchor|href split (S5, P4) → urljoin (F6)
           → same-domain SUBSTRING filter (P5) → keyword score (A6)
           → score>0 (P6) → per-row top-3, rank cut before dedup (T2, D1)
           → subpage fetch (S3) → homepage + subpages in rank order (F9)
-      → whitespace-normalize (F4) → extract founded/email/about (F1-F3)
-      → LLM UDF (U1, mock by default; graceful degradation U2) (crossing 2)
+          → whitespace-normalize (F4) → founded/email/about (F1-F3)
+          → LLM call (U1, mock by default; degradation U2/U3)
       → get_json_object 9-key flatten, nested values re-serialized (F11-F12)
-      → repartition(1).sortWithinPartitions(_row_idx) (T3)
+      → repartition(1).sortWithinPartitions(_row_idx) (T3)  (exchange 2)
       → select(14 OUTPUT_COLUMNS)  (P1)
 
 The row-at-a-time loop disappears; per-row checkpointing (K2) becomes
 per-microbatch in the streaming twin (streaming/demo.py).
 
 Scale notes:
+- Every Python task pays a fixed start-up cost (about 0.2 s, most of it
+  re-reading the archives on the workers' path) before its first row.
+  So the plan has one Python node, and the input is spread round-robin
+  over the session's cores first: a 100-company sheet built on the
+  driver runs as defaultParallelism parallel tasks instead of one task
+  that pays the start-up once per input partition and per crossing.
 - The crawl is one pass per Arrow batch: every homepage of the batch in
   one transport call, then every subpage URL of the batch in a second,
   so a real HTTP client keeps its bounded concurrency per batch
   (functions/transport.py). Everything a row's crawl needs stays inside
   that pass, so no shuffle, window or persist sits between the fetches.
   The map is referenced once in the plan, so each action crawls once.
+- The extracts run as the Python twins of the JVM expressions
+  (functions/extracts.py), on the text the crawl just built; the LLM
+  sees only the short About-Us sentence (reference app.py:213-227).
 - The page texts of a row are joined homepage first, then subpages in
   rank order (score desc, URL asc): Founded Info, the first founding
   sentence of the joined text, does not depend on input row order.
@@ -47,10 +57,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from leadsight_sales_agent_spark.functions.extracts import (
-    extract_email,
-    extract_founded,
-    extract_sentence_near_keyword,
-    normalize_whitespace,
+    py_extract_email,
+    py_extract_founded,
+    py_extract_sentence_near_keyword,
+    py_normalize_whitespace,
     url_host,
 )
 from leadsight_sales_agent_spark.functions.urls import (
@@ -185,9 +195,9 @@ def _mock_llm(name: str, website: str, about: str) -> str | None:
 
 # Opt-in switch for REAL network transports (functions/transport.py).
 # Default OFF: tests and graded runs stay on the deterministic mock.
-# Checked executor-side inside each Python stage so the flag rides the
+# Checked executor-side inside the Python crossing so the flag rides the
 # usual env propagation; with it set, fetch uses a bounded-concurrency
-# urllib batch client and the LLM stage the env-keyed chat client
+# urllib batch client and the LLM call the env-keyed chat client
 # mirroring llm_utils.py:138-153 (which still skips gracefully when
 # GROQ_* are unconfigured — U2).
 REAL_TRANSPORT_ENV = "LEADSIGHT_REAL_TRANSPORT"
@@ -214,45 +224,37 @@ def fetch_pages(urls: list) -> list[str | None]:
 @F.pandas_udf(StringType())
 def fetch_page_udf(urls: pd.Series) -> pd.Series:
     """Arrow-batched page fetch (S3) as a column expression; the
-    pipeline itself fetches inside the crawl crossing."""
+    pipeline itself fetches inside its one crossing."""
     return pd.Series(fetch_pages(list(urls)), dtype=object)
 
 
-@F.pandas_udf(StringType())
-def llm_enrich_udf(name: pd.Series, website: pd.Series, about: pd.Series) -> pd.Series:
-    """Arrow-batched LLM enrichment (U1). Returns raw JSON string or
-    null (U2/U3). Real client opt-in as in fetch_pages."""
-    client = None
-    if _real_transport_enabled():
-        from leadsight_sales_agent_spark.functions.transport import LLMClient
-
-        client = LLMClient()  # env-keyed; unconfigured → complete() is None
-    out = []
-    for n, w, a in zip(name, website, about):
-        try:
-            if not n:
-                out.append(None)
-            elif client is not None:
-                out.append(
-                    client.complete(
-                        "You are a senior business analyst generating structured "
-                        "company intelligence reports.",
-                        f"Company: {n}\nWebsite: {w}\nAbout: {a or ''}",
-                    )
-                )
-            else:
-                out.append(_mock_llm(n or "", w or "", a or ""))
-        except Exception:
-            out.append(None)  # absorb per-row failure (U3)
-    return pd.Series(out, dtype=object)
-
-
 fetch_page_udf = fetch_page_udf.asNondeterministic()
-llm_enrich_udf = llm_enrich_udf.asNondeterministic()
+
+LLM_SYSTEM_PROMPT = (
+    "You are a senior business analyst generating structured "
+    "company intelligence reports."
+)
+
+
+def _llm_report(client, name: str | None, website: str | None, about: str | None) -> str | None:
+    """LLM enrichment (U1) of one company: the raw JSON report, or None
+    for a nameless row, an unconfigured client (U2) or a failed call
+    (U3). ``client`` is a real ``LLMClient`` or None for the mock."""
+    if not name:
+        return None
+    try:
+        if client is not None:
+            return client.complete(
+                LLM_SYSTEM_PROMPT, f"Company: {name}\nWebsite: {website}\nAbout: {about or ''}"
+            )
+        return _mock_llm(name, website or "", about or "")
+    except Exception:
+        return None  # absorb per-row failure (U3)
 
 
 # ---------------------------------------------------------------------------
-# The crawl crossing: homepage → scored links → top-3 subpages → page text.
+# The crossing: homepage → scored links → top-3 subpages → page text
+# → extracts → LLM report.
 # ---------------------------------------------------------------------------
 
 def _split_page(page: str | None) -> tuple[str | None, str | None]:
@@ -311,13 +313,27 @@ def _crawl(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pdf[["_row_idx", "company_name", "website"]].assign(all_text=texts)
 
 
-def crawl(companies: DataFrame) -> DataFrame:
-    """The crawl crossing over a (_row_idx, company_name, website) frame."""
-    keyed = companies.select(
-        "_row_idx", "company_name", "website", url_host(F.col("website")).alias("host")
-    )
-    schema = StructType(keyed.schema.fields[:3] + [StructField("all_text", StringType())])
-    return keyed.mapInPandas(_crawl, schema)
+def _enrich(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas body: ``_crawl``'s batches, per row whitespace-normalized
+    (F4), extracted (F1-F3, cheap before expensive) and LLM-enriched on
+    the About-Us sentence (U1). One LLM client per batch."""
+    for pdf in _crawl(batches):
+        client = None
+        if _real_transport_enabled():
+            from leadsight_sales_agent_spark.functions.transport import LLMClient
+
+            client = LLMClient()  # env-keyed; unconfigured → complete() is None
+        texts = [py_normalize_whitespace(t) for t in pdf["all_text"]]
+        about = [py_extract_sentence_near_keyword(t, "about us") for t in texts]
+        yield pdf[["_row_idx", "company_name", "website"]].assign(
+            founded=[py_extract_founded(t) for t in texts],
+            email=[py_extract_email(t) for t in texts],
+            about=about,
+            llm_raw=[
+                _llm_report(client, n, w, a)
+                for n, w, a in zip(pdf["company_name"], pdf["website"], about)
+            ],
+        )
 
 
 def companies_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -352,26 +368,17 @@ def enrich_pipeline(spark: SparkSession, companies: DataFrame) -> DataFrame:
     """
     if "_row_idx" not in companies.columns:
         companies = companies.withColumn("_row_idx", F.monotonically_increasing_id())
-    corpus = crawl(companies).withColumn("all_text", normalize_whitespace(F.col("all_text")))
-
-    # -- regex extraction stage (F1-F3), cheap-before-expensive: runs
-    # before the LLM stage, and the LLM sees only the short About-Us
-    # sentence (reference app.py:213-227)
-    extracted = corpus.select(
-        "_row_idx",
-        "company_name",
-        "website",
-        extract_founded(F.col("all_text")).alias("founded"),
-        extract_email(F.col("all_text")).alias("email"),
-        extract_sentence_near_keyword(F.col("all_text"), "about us").alias("about"),
+    # Round-robin over the session's cores: Python tasks each pay a fixed
+    # start-up, so a small driver-built frame must not run as one task
+    # (CollapseRepartition drops a caller's coalesce(1) under this shuffle)
+    keyed = companies.repartition(spark.sparkContext.defaultParallelism).select(
+        "_row_idx", "company_name", "website", url_host(F.col("website")).alias("host")
     )
-
-    # -- LLM enrichment (U1) + 9-key flatten (F12)
+    schema = StructType(keyed.schema.fields[:3] + [
+        StructField(c, StringType()) for c in ("founded", "email", "about", "llm_raw")
+    ])
     # single downstream reference → no persist needed (one compute/action)
-    with_llm = extracted.withColumn(
-        "llm_raw",
-        llm_enrich_udf(F.col("company_name"), F.col("website"), F.coalesce("about", F.lit(""))),
-    )
+    enriched = keyed.mapInPandas(_enrich, schema)
 
     # Parse each key as raw string, then re-serialize dict/list values
     # compactly like the reference (json.dumps, app.py:251-253):
@@ -386,12 +393,12 @@ def enrich_pipeline(spark: SparkSession, companies: DataFrame) -> DataFrame:
     # then project it away (reference output.xlsx keeps sheet order).
     # repartition(1)+sortWithinPartitions, NOT orderBy: a global sort's
     # RangePartitioner runs a sampling job that recomputes the whole
-    # pipeline (both Python crossings) a second time; the single
+    # pipeline (the Python crossing) a second time; the single
     # exchanged partition is fine because the output is a companies
     # sheet by contract (the reference writes it with pandas), and the
-    # exchange sits after the parallel LLM projection.
+    # exchange sits after the parallel crossing.
     return (
-        with_llm.select(
+        enriched.select(
             F.col("_row_idx"),
             F.col("company_name").alias("Company Name"),
             F.col("website").alias("Website"),

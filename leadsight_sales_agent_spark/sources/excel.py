@@ -29,6 +29,7 @@ from xml.etree import ElementTree as ET
 from xml.sax.saxutils import escape
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 _NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 _CELL_REF = re.compile(r"([A-Z]+)([0-9]+)")
@@ -133,6 +134,8 @@ def read_excel(
     sibling at scale."""
     import os
 
+    import pyarrow as pa
+
     size = os.path.getsize(path)
     if size > MAX_DRIVER_XLSX_BYTES:
         raise ValueError(
@@ -143,14 +146,21 @@ def read_excel(
     header, data = read_excel_rows(path)
     if not header:
         raise ValueError(f"empty workbook: {path}")
-    out_rows = []
-    for i, r in enumerate(data):
-        vals = [None if v is None else str(v) for v in r]
-        out_rows.append(([i] if with_row_idx else []) + vals)
-    cols = (["_row_idx BIGINT"] if with_row_idx else []) + [
-        f"`{c}` STRING" for c in header
+    # an Arrow table plans as a LocalTableScan, 0 rows included; a list
+    # of rows plans as a Scan ExistingRDD, one Python task per partition
+    # (and a pandas frame falls back to that path when it has no rows)
+    arrays = [
+        pa.array([None if v is None else str(v) for v in col], pa.string())
+        for col in (zip(*data) if data else [()] * len(header))
     ]
-    return spark.createDataFrame(out_rows, ", ".join(cols)).coalesce(1)
+    # a StructType, not a DDL string: a header may hold any character
+    fields = [StructField(c, StringType()) for c in header]
+    if with_row_idx:
+        arrays.insert(0, pa.array(range(len(data)), pa.int64()))
+        fields.insert(0, StructField("_row_idx", LongType()))
+    schema = StructType(fields)
+    table = pa.Table.from_arrays(arrays, names=schema.names)
+    return spark.createDataFrame(table, schema).coalesce(1)
 
 
 def validate_companies_contract(df: DataFrame) -> None:

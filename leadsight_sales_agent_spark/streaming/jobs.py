@@ -98,17 +98,21 @@ class JobManager:
             self.results = []
             self.push_event("start")
 
+            # the terminal event is logged before the state leaves
+            # RUNNING: a /progress poll that sees a terminal state and
+            # nothing new to drain closes the stream, so the event must
+            # already be in the log by then
             def run() -> None:
                 try:
                     self.result = fn(self)
+                    self.push_event("done")
                     with self._lock:
                         self.state = DONE
-                    self.push_event("done")
                 except Exception as ex:  # noqa: BLE001 — U3: absorb, report
+                    self.push_event("error", str(ex))
                     with self._lock:
                         self.state = ERROR
                         self.error = f"{ex}\n{traceback.format_exc(limit=3)}"
-                    self.push_event("error", str(ex))
 
             self._thread = threading.Thread(target=run, daemon=True)
             self._thread.start()

@@ -17,6 +17,7 @@ from leadsight_sales_agent_spark.operators.enrich import (
     OUTPUT_COLUMNS,
     REAL_TRANSPORT_ENV,
     _crawl,
+    _enrich,
     _mock_llm,
     _mock_page,
     companies_frame,
@@ -105,6 +106,66 @@ class TestCrawl:
         assert out["all_text"][0] == " ".join(p.split(LINKS_SEP)[0] for p in pages)
 
 
+class TestFusedCrossing:
+    def batch(self, names):
+        sites = [f"https://co-{i}.example.com" for i in range(len(names))]
+        return pd.DataFrame({
+            "_row_idx": list(range(len(names))),
+            "company_name": names,
+            "website": sites,
+            "host": [s.split("//")[1] for s in sites],
+        })
+
+    def test_output_columns_and_mock_report(self):
+        (out,) = _enrich(iter([self.batch(["Acme Corp"])]))
+        assert list(out.columns) == [
+            "_row_idx", "company_name", "website", "founded", "email", "about", "llm_raw",
+        ]
+        assert out["about"][0].startswith("About us: Co 0 builds")
+        assert out["llm_raw"][0] == _mock_llm(
+            "Acme Corp", "https://co-0.example.com", out["about"][0]
+        )
+
+    def test_real_transport_llm_path(self, monkeypatch):
+        # one client per Arrow batch; one call per named row with its
+        # About-Us sentence in the prompt; a raising call nulls only its row
+        clients, prompts = [], []
+        init = transport.LLMClient.__init__
+
+        def counting_init(self, *a, **k):
+            clients.append(self)
+            init(self, *a, **k)
+
+        def complete(self, system, user):
+            prompts.append(user)
+            if user.startswith("Company: Boom"):
+                raise RuntimeError("LLM down")
+            return '{"executive_brief": "ok"}'
+
+        monkeypatch.setattr(
+            transport.HttpFetcher, "fetch_batch", lambda self, urls: [_mock_page(u) for u in urls]
+        )
+        monkeypatch.setattr(transport.LLMClient, "__init__", counting_init)
+        monkeypatch.setattr(transport.LLMClient, "complete", complete)
+        monkeypatch.setenv(REAL_TRANSPORT_ENV, "1")
+        outs = list(_enrich(iter([
+            self.batch(["Acme", "Boom Inc", "Cargo"]), self.batch(["", None]),
+        ])))
+        assert len(clients) == 2
+        first = outs[0]
+        assert len(prompts) == 3
+        for user, name, site, about in zip(
+            prompts, first["company_name"], first["website"], first["about"]
+        ):
+            assert about and about.startswith("About us:")
+            assert user == f"Company: {name}\nWebsite: {site}\nAbout: {about}"
+        assert list(first["llm_raw"]) == [
+            '{"executive_brief": "ok"}', None, '{"executive_brief": "ok"}',
+        ]
+        assert list(outs[1]["llm_raw"]) == [None, None]  # nameless rows skip the call
+        assert first["founded"].notna().all()  # the failed row keeps its extracts
+
+
 class TestPipelineShape:
     def test_exact_14_column_contract(self, spark):
         out = enrich_pipeline(spark, toy_companies(spark))
@@ -137,12 +198,21 @@ class TestPipelineShape:
             parsed = json.loads(o)  # nested dict → compact JSON string (F12)
             assert parsed["name"]
 
-    def test_plan_has_two_python_crossings_and_no_cache(self, spark):
-        out = enrich_pipeline(spark, toy_companies(spark))
+    def test_plan_has_one_python_crossing_after_a_round_robin(self, spark):
+        # crawl, extracts and LLM call share one mapInPandas, fed by a
+        # round-robin over the session's cores; the upload-shaped input's
+        # coalesce(1) is dropped under that shuffle
+        rows = [(f"Company {i}", f"https://company-{i}.example.com") for i in range(25)]
+        out = enrich_pipeline(spark, indexed(spark, rows).coalesce(1))
         plan = out._jdf.queryExecution().executedPlan().toString()
-        assert len(re.findall(r"\bMapInPandas\b", plan)) == 1  # the crawl
-        assert len(re.findall(r"\bArrowEvalPython\b", plan)) == 1  # the LLM
+        assert len(re.findall(r"\bMapInPandas\b", plan)) == 1
+        assert not re.search(r"\b(ArrowEvalPython|BatchEvalPython)\b", plan)
         assert not re.search(r"InMemory(Relation|TableScan)", plan)
+        n = spark.sparkContext.defaultParallelism
+        assert len(re.findall(rf"RoundRobinPartitioning\({n}\)", plan)) == 1
+        assert "RoundRobinPartitioning(" not in plan.replace(f"RoundRobinPartitioning({n})", "")
+        below = plan.split(f"RoundRobinPartitioning({n})", 1)[1]
+        assert "Scan ExistingRDD" in below and "Coalesce" not in below
 
 
 def indexed(spark, rows):

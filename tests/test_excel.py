@@ -89,6 +89,53 @@ class TestContract:
             validate_companies_contract(read_excel(spark, bad))
 
 
+def scan_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+class TestFrameBuild:
+    """read_excel builds its frame from an Arrow table, which plans as a
+    LocalTableScan; a list of rows would plan as a Scan ExistingRDD with
+    one Python task per partition."""
+
+    def read(self, spark, tmp_path, header, rows):
+        path = str(tmp_path / "sheet.xlsx")
+        write_excel_rows(path, header, rows)
+        df = read_excel(spark, path)
+        plan = scan_plan(df)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+        return df
+
+    def test_values_and_sheet_order(self, spark, tmp_path):
+        df = self.read(spark, tmp_path, ["company_name", "website"], [
+            ["Acme", "https://acme.test"], [7, 2.5], ["Bolt", None],
+        ])
+        assert df.schema.simpleString() == (
+            "struct<_row_idx:bigint,company_name:string,website:string>"
+        )
+        assert [tuple(r) for r in df.collect()] == [
+            (0, "Acme", "https://acme.test"), (1, "7", "2.5"), (2, "Bolt", None),
+        ]
+
+    def test_header_with_backticks(self, spark, tmp_path):
+        # header names are not parsed as DDL
+        df = self.read(spark, tmp_path, ["company_name", "notes `x`"], [["Acme", "n"]])
+        assert df.columns == ["_row_idx", "company_name", "notes `x`"]
+        assert [tuple(r) for r in df.collect()] == [(0, "Acme", "n")]
+
+    def test_zero_row_sheet(self, spark, tmp_path):
+        df = self.read(spark, tmp_path, ["company_name", "website"], [])
+        assert df.columns == ["_row_idx", "company_name", "website"]
+        assert df.collect() == []
+
+    def test_all_blank_column(self, spark, tmp_path):
+        df = self.read(spark, tmp_path, ["company_name", "website", "notes"], [
+            ["Acme", "https://acme.test", None], ["Bolt", "https://bolt.test", None],
+        ])
+        assert [r["notes"] for r in df.collect()] == [None, None]
+        assert dict(df.dtypes)["notes"] == "string"
+
+
 class TestEndToEndContract:
     def test_2in_14out_round_trip(self, spark, tmp_path):
         """The reference's whole lifecycle: companies.xlsx → enrich →

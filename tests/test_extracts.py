@@ -7,6 +7,8 @@ Reference semantics: app.py:65-87 (via SURVEY §2.8 F1-F7).
 
 from __future__ import annotations
 
+from hypothesis import HealthCheck, Phase, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from leadsight_sales_agent_spark.functions.extracts import (
@@ -14,6 +16,10 @@ from leadsight_sales_agent_spark.functions.extracts import (
     extract_founded,
     extract_sentence_near_keyword,
     normalize_whitespace,
+    py_extract_email,
+    py_extract_founded,
+    py_extract_sentence_near_keyword,
+    py_normalize_whitespace,
     url_host,
 )
 
@@ -112,3 +118,82 @@ class TestNormalizeAndHost:
 
     def test_url_host_no_scheme_is_null(self, spark):
         assert apply_one(spark, url_host, "not a url") is None
+
+
+# Characters where Java's ASCII-only regex semantics and Python's default
+# Unicode ones part: NBSP and U+2003/U+3000/U+0085/U+001C (Unicode
+# whitespace, not Java's \s), full-width digits (Unicode \d), the Kelvin
+# sign (folds to k), dotted capital I (lower-cases to i) and long s (folds
+# to s); plus ASCII whitespace and the patterns' own letters.
+_TRICKY = "\u00a0\u2003\u3000\u0085\u001c\x0b\t\n\r\f １２３４\u212a\u0130\u017f"
+_FRAGMENTS = st.sampled_from([
+    "Founded in ", "founded ", "ESTABLISHED in ", "Since ", "since",
+    "\u017fince ", "E\u017ftabli\u017fhed ", "S\u0130nce ", "Establ\u0130shed ", "about us",
+    "ABOUT US", "about\u00a0us", "\u212aelvin", "1999", "１９９９", "20", ". ", ".",
+    "info@a-b.example.com", "X_y+z@\u212a.io", "mail@ex.c\u0130m", "  ",
+])
+_UNICODE = st.text(
+    alphabet=st.one_of(
+        st.sampled_from(_TRICKY),
+        st.characters(blacklist_categories=("Cs",)),  # no lone surrogates
+    ),
+    max_size=12,
+)
+_TEXT = st.lists(st.one_of(_FRAGMENTS, _UNICODE), max_size=8).map("".join)
+
+
+class TestPythonTwinsMatchJvm:
+    """The enrichment map runs the Python twins; they must agree with the
+    JVM expressions on any text, not only ASCII."""
+
+    # no shrink phase: every example is a Spark job, so shrinking a
+    # failure runs for many minutes; the assertion names the failing text
+    @settings(
+        max_examples=10,
+        deadline=None,
+        suppress_health_check=list(HealthCheck),
+        phases=[Phase.explicit, Phase.reuse, Phase.generate],
+    )
+    @given(st.lists(_TEXT, min_size=1, max_size=40))
+    def test_unicode_text(self, spark, texts):
+        df = spark.createDataFrame(list(enumerate(texts)), "i INT, t STRING")
+        t = F.col("t")
+        rows = df.select(
+            "i",
+            normalize_whitespace(t).alias("norm"),
+            extract_founded(t).alias("founded"),
+            extract_email(t).alias("email"),
+            extract_sentence_near_keyword(t, "about us").alias("about"),
+        ).collect()
+        for r in rows:
+            text = texts[r["i"]]
+            assert (r["norm"], r["founded"], r["email"], r["about"]) == (
+                py_normalize_whitespace(text),
+                py_extract_founded(text),
+                py_extract_email(text),
+                py_extract_sentence_near_keyword(text, "about us"),
+            ), repr(text)
+
+    def test_pinned_divergences(self, spark):
+        texts = [
+            "\u017fince 1999",  # long s: Unicode folding would match Since
+            "\u212a and Founded １９９９",  # full-width digits are no \d
+            "Since\u00a01999",  # NBSP is no literal space
+            "x\u2003\u00a0 about us \u00a0.",  # only spaces are trimmed
+            "a\u3000\u0085\u001c b",  # Unicode whitespace stays
+            None,
+        ]
+        df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i INT, t STRING")
+        t = F.col("t")
+        got = df.select(
+            normalize_whitespace(t), extract_founded(t),
+            extract_sentence_near_keyword(t, "about us"),
+        ).collect()
+        assert [tuple(r) for r in got] == [
+            (py_normalize_whitespace(x), py_extract_founded(x),
+             py_extract_sentence_near_keyword(x, "about us"))
+            for x in texts
+        ]
+        assert [r[1] for r in got[:3]] == [None, None, None]
+        assert got[3][2] == "x\u2003\u00a0 about us \u00a0"
+        assert got[4][0] == "a\u3000\u0085\u001c b"

@@ -55,6 +55,28 @@ class TestJobStateMachine:
         jm.reset()  # error → idle is allowed
         assert jm.state == IDLE
 
+    @pytest.mark.parametrize("job, terminal", [
+        (lambda m: 42, "done"),
+        (lambda m: (_ for _ in ()).throw(RuntimeError("boom")), "error"),
+    ], ids=["done", "error"])
+    def test_terminal_event_logged_while_still_running(self, job, terminal):
+        # /progress closes once the state has left RUNNING and the log is
+        # drained: the terminal event must be in the log before that
+        jm = JobManager()
+        states = []
+        push = jm.push_event
+
+        def recording_push(etype, data=None):
+            if etype == terminal:
+                states.append(jm.state)
+            push(etype, data)
+
+        jm.push_event = recording_push
+        jm.start(job)
+        jm.join(10)
+        assert states == [RUNNING]
+        assert jm.state == (DONE if terminal == "done" else ERROR)
+
     def test_second_concurrent_job_rejected(self):
         jm = JobManager()
         release = threading.Event()

@@ -1,11 +1,13 @@
 """Property layer (SURVEY.md §5.2): hypothesis-driven differential
 tests. Random inputs, three-way agreement:
 
-- the reference-fidelity extractors (functions/extracts.py) must match
-  a literal Python re implementation of app.py:65-87 on arbitrary
-  ASCII text (ASCII because Java and Python regexes intentionally
-  differ on unicode case folding and non-ASCII digits — the engine
-  mirrors the JVM semantics the plan runs on);
+- the reference-fidelity extractors (functions/extracts.py), both the
+  JVM expressions and their executor-side Python twins, must match a
+  literal Python re implementation of app.py:65-87 on arbitrary ASCII
+  text (ASCII because Java and Python regexes intentionally differ on
+  unicode case folding and non-ASCII digits — the engine mirrors the
+  JVM semantics the plan runs on; tests/test_extracts.py compares the
+  twins with the JVM beyond ASCII);
 - the tie-safe mean (functions/numeric.py) must match exact
   Fraction arithmetic AND its DuckDB SQL twin, including negatives.
 
@@ -28,6 +30,9 @@ from leadsight_sales_agent_spark.functions.extracts import (
     extract_email,
     extract_founded,
     extract_sentence_near_keyword,
+    py_extract_email,
+    py_extract_founded,
+    py_extract_sentence_near_keyword,
 )
 from leadsight_sales_agent_spark.functions.numeric import davg, sql_davg
 
@@ -104,7 +109,13 @@ class TestExtractorsDifferential:
         ).collect()
         got = {r["i"]: (r["founded"], r["email"], r["about"]) for r in rows}
         for i, t in enumerate(texts):
-            assert got[i] == (py_founded(t), py_email(t), py_about(t)), repr(t)
+            reference = (py_founded(t), py_email(t), py_about(t))
+            twins = (
+                py_extract_founded(t),
+                py_extract_email(t),
+                py_extract_sentence_near_keyword(t, "about us"),
+            )
+            assert got[i] == reference == twins, repr(t)
 
 
 def _half_away_from_zero(mean: Fraction, scale: int) -> float:
