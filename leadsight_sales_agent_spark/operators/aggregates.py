@@ -393,56 +393,6 @@ def agg_percentiles_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-N_AGG_SALT = 16
-
-
-@query(
-    "agg_salted_two_phase",
-    oracle=f"""
-    SELECT event_type,
-           count(*) AS n_events,
-           ((CAST(CAST((CAST(CAST(round(sum(CAST(value AS DECIMAL(25,6))), 2) * 100 AS HUGEINT) AS HUGEINT) // 1125899906842624) AS BIGINT) AS DOUBLE) * CAST(1125899906842624 AS DOUBLE) + CAST(CAST(CAST(CAST(round(sum(CAST(value AS DECIMAL(25,6))), 2) * 100 AS HUGEINT) AS HUGEINT) - (CAST(CAST(round(sum(CAST(value AS DECIMAL(25,6))), 2) * 100 AS HUGEINT) AS HUGEINT) // 1125899906842624) * 1125899906842624 AS BIGINT) AS DOUBLE)) / CAST(100 AS DOUBLE)) AS total_value
-    FROM {SQL_FINITE_EVENTS} events
-    GROUP BY event_type
-    """,
-)
-def agg_salted_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Salted two-phase aggregation for skewed group keys, made
-    explicit: phase 1 aggregates on (key, salt) — a hot key's rows
-    spread over N_AGG_SALT reducers — phase 2 merges the partials per
-    key. Result is identical to the plain groupBy (the oracle IS the
-    plain aggregate); counts merge by sum and the decimal partial sums
-    re-sum exactly, so the two-phase shape costs no precision.
-
-    When to reach for it at 100 TB: Spark's own partial (map-side)
-    aggregation already handles most skew for algebraic aggregates —
-    this pattern matters when the per-key state is too big for the
-    map-side hash (e.g. collect_list / count_distinct per hot key) or
-    a single final-phase task still drowns. Salt is xxhash64 of a
-    row-unique column, deterministic — no rand() in the plan.
-
-    Measured (tools/skew_ab.py — 4.8M-row fact, one key owning 30%,
-    AQE off, 4 cores, 6 runs): for THIS algebraic count+sum shape the
-    salted form is SLOWER than the plain groupBy in 5 of 6 runs
-    (median 5.23 s vs 4.06 s, +29%) — map-side partial
-    aggregation already collapses the skew before the shuffle, so the
-    extra (key, salt) exchange is pure overhead. Keep the device for
-    map-side-combine-defeating state only; thresholds in SURVEY §8.12.
-    """
-    ev = load(spark, sf_dir, "events").withColumn("value", finite(F.col("value")))
-    salted = ev.withColumn(
-        "salt", F.pmod(F.xxhash64("event_id"), F.lit(N_AGG_SALT))
-    )
-    partial = salted.groupBy("event_type", "salt").agg(
-        F.count("*").alias("pn"),
-        F.sum(F.col("value").cast("decimal(25,6)")).alias("psum"),
-    )
-    return partial.groupBy("event_type").agg(
-        F.sum("pn").alias("n_events"),
-        ddbl(F.round(F.sum("psum"), 2), 2).alias("total_value"),
-    )
-
-
 # (col, kind) spec for the profiling operator; kinds pick the exact
 # min/max representation both engines can render identically.
 _PROFILE_SPEC = [
@@ -608,9 +558,11 @@ SKEW_TOP_N = 10
 def skew_diagnostics_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shuffle-skew report: the {SKEW_TOP_N} heaviest join/agg keys in
     ``orders`` with their share of all rows and multiple-of-mean — the
-    diagnostic that decides WHEN the salted-join/two-phase-agg plans
-    (join_salted_skew_demo, agg_salted_two_phase) are worth their
-    extra shuffle. Run this before debugging a straggler, not after.
+    diagnostic that names the hot keys behind a straggling join or
+    aggregate, whatever the mitigation (AQE's skew-join split on the
+    join side, map-side partial aggregation on the aggregate side;
+    SURVEY §8.12 records why the engine has no salted rewrite). Run
+    this before debugging a straggler, not after.
 
     Per-key counts are one hash-agg; the totals side is a 1-row agg
     cross-joined back (broadcast-nested-loop over 1 row — constant

@@ -997,7 +997,7 @@ def neardup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: document-frequency ordering is one aggregate + a broadcast
     of the (bounded) vocabulary; prefixes cut candidate generation by
     the stopword factor exactly where the token join explodes; the
-    residual hot-prefix-token skew uses the salted-join device. Same
+    residual hot-prefix-token skew is left to AQE's skew-join split. Same
     anchor-bound regime as neardup_jaccard_pairs: the plan is
     unbounded, the ORACLE's quadratic form caps the graded corpus.
     """

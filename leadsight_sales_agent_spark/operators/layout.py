@@ -196,16 +196,16 @@ SKEW_TARGET_ROWS_PER_TASK = 1000  # tuning constant at test scale
     """,
 )
 def diag_join_skew_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-skew ADVISOR — the diagnosis pass that decides when the
-    salted-join device (relational.join_salted_skew_demo) is worth its
-    extra shuffle: per join key, row count, heavy rank, skew ratio vs
-    the MEDIAN key (integer basis points — a key at 40x median is the
-    straggler that stalls the stage), and the recommended salt fan-out
-    ceil(rows / target-rows-per-task). The output is directly the
-    config a salting rewrite consumes; at 100 TB this query IS what
-    you run before repartitioning a trillion-row join (AQE's skew
-    handling fixes sort-merge stragglers at runtime, but pre-salting
-    a broadcast-incompatible shuffle join still needs this table).
+    """Join-skew ADVISOR — the diagnosis pass that names a join's hot
+    keys before a straggler does: per join key, row count, heavy rank,
+    skew ratio vs the MEDIAN key (integer basis points — a key at 40x
+    median is the straggler that stalls the stage), and the
+    recommended salt fan-out ceil(rows / target-rows-per-task). The
+    engine ships no salting rewrite: AQE's skew-join split is its
+    mitigation, and a manual salted join did not beat it when
+    measured (SURVEY §8.12). The report reads the same whatever the
+    mitigation is; at 100 TB it is what you run before repartitioning
+    a trillion-row join.
 
     One aggregation builds the frequency table; the median key load is
     the lower-median order statistic over the (bounded, one row per

@@ -453,58 +453,6 @@ def project_reorder_with_missing_as_null(spark: SparkSession, sf_dir: str) -> Da
     return df.select(*cols)
 
 
-N_SALT = 8
-
-
-@query(
-    "join_salted_skew_demo",
-    oracle="""
-    SELECT c.c_mktsegment AS mktsegment,
-           count(*) AS n_orders,
-           ((CAST(CAST((CAST(CAST(round(sum(CAST(o.o_totalprice AS DECIMAL(25,6))), 2) * 100 AS HUGEINT) AS HUGEINT) // 1125899906842624) AS BIGINT) AS DOUBLE) * CAST(1125899906842624 AS DOUBLE) + CAST(CAST(CAST(CAST(round(sum(CAST(o.o_totalprice AS DECIMAL(25,6))), 2) * 100 AS HUGEINT) AS HUGEINT) - (CAST(CAST(round(sum(CAST(o.o_totalprice AS DECIMAL(25,6))), 2) * 100 AS HUGEINT) AS HUGEINT) // 1125899906842624) * 1125899906842624 AS BIGINT) AS DOUBLE)) / CAST(100 AS DOUBLE))
-               AS total_price
-    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-    GROUP BY c.c_mktsegment
-    """,
-)
-def join_salted_skew_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Salting for skewed join keys, made explicit: the fact side gets a
-    random-free deterministic salt (hash of its row key, mod N_SALT),
-    the dimension side is exploded N_SALT× so every (key, salt) pair
-    matches — a hot key's rows now spread over N_SALT reducers.
-
-    Result is identical to the plain join (the oracle IS the plain
-    join). On this engine AQE's skewJoin covers most cases at runtime;
-    manual salting remains the tool when one key dominates inside a
-    single task even after AQE splits, or when the skewed side feeds a
-    window/groupBy that AQE can't split. Salt is derived with xxhash64
-    (not rand()) so the plan stays deterministic and retry-safe.
-
-    Measured (tools/skew_ab.py — 4.8M-row fact, one key owning 30%,
-    broadcast disabled, 4 cores, 6 runs): the salted join (median
-    4.25 s) is not separable from the plain shuffle join with AQE off
-    (4.46 s) or with AQE's skew split (4.58 s); the spread between runs
-    is wider than the gaps. Whether salting pays on a wider machine is
-    unmeasured; thresholds in SURVEY §8.12.
-    """
-    orders = load(spark, sf_dir, "orders").withColumn(
-        "salt", F.pmod(F.xxhash64("o_orderkey"), F.lit(N_SALT)).cast("int")
-    )
-    cust = (
-        load(spark, sf_dir, "customer")
-        .select("c_custkey", "c_mktsegment")
-        .withColumn("salt", F.explode(F.array(*[F.lit(i) for i in range(N_SALT)])))
-    )
-    joined = orders.hint("shuffle_hash").join(
-        cust, (orders.o_custkey == cust.c_custkey) & (orders.salt == cust.salt)
-    )
-    return joined.groupBy(F.col("c_mktsegment").alias("mktsegment")).agg(
-        F.count("*").alias("n_orders"),
-        ddbl(F.round(F.sum(F.col("o_totalprice").cast("decimal(25,6)")), 2), 2)
-        .alias("total_price"),
-    )
-
-
 @query(
     "merge_upsert_orders",
     oracle="""
@@ -3293,8 +3241,8 @@ def spatial_grid_neighbor_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: explode factor is a constant 9; the shuffle key (cell id)
     is dense and uniform under hashed coordinates; skewed REAL
-    geometries (urban hot cells) reuse the salted-join device on the
-    hot cells. Cell width must be >= r or neighbor coverage breaks —
+    geometries (urban hot cells) are left to AQE's skew-join split.
+    Cell width must be >= r or neighbor coverage breaks —
     guarded by construction here.
     """
     c = load(spark, sf_dir, "customer")

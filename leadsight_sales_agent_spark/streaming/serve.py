@@ -95,6 +95,15 @@ def echo_upload_job(
     return len(rows)
 
 
+def _non_negative_int(raw: str) -> int | None:
+    """``raw`` as an int >= 0, or None for anything else."""
+    try:
+        value = int(raw)
+    except ValueError:
+        return None
+    return value if value >= 0 else None
+
+
 def _parse_upload_rows(
     filename: str, data: bytes
 ) -> tuple[list[str], list[list[object]]]:
@@ -154,10 +163,17 @@ class ProgressServer:
                 if parsed.path == "/status":
                     server._handle_status(self)
                 elif parsed.path == "/progress":
-                    offset = int(
+                    offset = _non_negative_int(
                         parse_qs(parsed.query).get("offset", ["0"])[0]
                     )
-                    server._handle_progress(self, offset)
+                    if offset is None:
+                        server._send_json(
+                            self,
+                            {"error": "offset must be a non-negative integer."},
+                            400,
+                        )
+                    else:
+                        server._handle_progress(self, offset)
                 elif parsed.path == "/results":
                     server._handle_results(self)
                 elif parsed.path == "/download":
@@ -211,23 +227,25 @@ class ProgressServer:
         if m.state == RUNNING:
             self._send_json(h, {"error": "A job is already running."}, 409)
             return
+        # a negative length would make rfile.read() read to EOF, past
+        # the bound below, so a bad length is refused before any read
+        length = _non_negative_int(h.headers.get("Content-Length", "0"))
+        if length is None:
+            self._send_json(h, {"error": "Invalid Content-Length."}, 400)
+            return
+        # mirror the /download MAX_DOWNLOAD_BYTES bound on the way IN:
+        # reject oversized uploads before reading the body so a single
+        # request cannot balloon driver memory, and so the BytesIO parse
+        # path cannot bypass the size discipline the path-based reader
+        # enforces
+        if length > MAX_UPLOAD_BYTES:
+            self._send_json(
+                h,
+                {"error": f"Upload exceeds the {MAX_UPLOAD_BYTES} B bound."},
+                413,
+            )
+            return
         try:
-            length = int(h.headers.get("Content-Length", "0"))
-            # mirror the /download MAX_DOWNLOAD_BYTES bound on the way
-            # IN: reject oversized uploads before reading the body so a
-            # single request cannot balloon driver memory, and so the
-            # BytesIO parse path cannot bypass the size discipline the
-            # path-based reader enforces (r8 ADVICE)
-            if length > MAX_UPLOAD_BYTES:
-                self._send_json(
-                    h,
-                    {
-                        "error": f"Upload exceeds the {MAX_UPLOAD_BYTES} B"
-                        " bound."
-                    },
-                    413,
-                )
-                return
             ctype = h.headers.get("Content-Type", "")
             body = h.rfile.read(length)
             msg = BytesParser(policy=_EMAIL_DEFAULT).parsebytes(

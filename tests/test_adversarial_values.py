@@ -98,7 +98,6 @@ NULL_EMB_FIXED = ["embedding_norm_stats", "embedding_pq_quantize"]
 # (vector) on BOTH engines
 NONFINITE_FIXED = [
     "agg_argmax_events",
-    "agg_salted_two_phase",
     "agg_skew_kurtosis_moments",
     "attribution_position_based",
     "embedding_feature_scale",

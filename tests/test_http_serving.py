@@ -5,12 +5,18 @@ to the JobManager event log it serves. Stdlib client only; 127.0.0.1."""
 from __future__ import annotations
 
 import json
+import socket
 import time
 import urllib.request
 
 import pytest
 
-from leadsight_sales_agent_spark.streaming.jobs import DONE, RUNNING, JobManager
+from leadsight_sales_agent_spark.streaming.jobs import (
+    DONE,
+    IDLE,
+    RUNNING,
+    JobManager,
+)
 from leadsight_sales_agent_spark.streaming.serve import (
     MAX_DOWNLOAD_BYTES,
     ProgressServer,
@@ -117,6 +123,24 @@ class TestHTTPServing:
             expected, _ = m.events_since(3)
             assert got == expected
             assert len(got) == len(m.events) - 3
+        finally:
+            srv.stop()
+
+    @pytest.mark.parametrize("offset", ["abc", "-2", "1.5"])
+    def test_progress_bad_offset_400(self, offset):
+        # a non-integer offset used to raise inside the handler (the
+        # client saw RemoteDisconnected); a negative one replayed the
+        # log's tail and then the whole log again
+        m = JobManager()
+        _run_job(m, n_steps=2)
+        srv = ProgressServer(m)
+        port = srv.start()
+        try:
+            with pytest.raises(urllib.error.HTTPError) as ex:
+                _get(port, f"/progress?offset={offset}")
+            assert ex.value.code == 400, offset
+            assert ex.value.headers["Content-Type"] == "application/json"
+            assert "offset" in json.load(ex.value)["error"], offset
         finally:
             srv.stop()
 
@@ -281,6 +305,36 @@ class TestUploadAndResults:
             assert ex.value.code == 409
             assert json.load(ex.value)["error"] == "A job is already running."
             t.join(5)
+        finally:
+            srv.stop()
+
+    @pytest.mark.parametrize("length", ["-1", "abc"])
+    def test_upload_bad_content_length_400(self, length):
+        # a negative length used to read the body to EOF, past
+        # MAX_UPLOAD_BYTES, and start a job; the request is refused
+        # before the body is read
+        m = JobManager()
+        srv = ProgressServer(m)
+        port = srv.start()
+        body, ctype = _multipart("c.csv", self.CSV)
+        head = (
+            "POST /upload HTTP/1.1\r\nHost: 127.0.0.1\r\n"
+            f"Content-Type: {ctype}\r\nContent-Length: {length}\r\n\r\n"
+        ).encode()
+        try:
+            with socket.create_connection(("127.0.0.1", port), timeout=10) as s:
+                s.sendall(head + body)
+                s.shutdown(socket.SHUT_WR)
+                raw = b""
+                while chunk := s.recv(65536):
+                    raw += chunk
+            status_line, _, rest = raw.partition(b"\r\n")
+            assert b" 400 " in status_line, raw
+            assert json.loads(rest.split(b"\r\n\r\n", 1)[1]) == {
+                "error": "Invalid Content-Length."
+            }
+            assert m.state == IDLE
+            assert m.events == []
         finally:
             srv.stop()
 

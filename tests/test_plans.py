@@ -689,11 +689,11 @@ class TestR5Session2Plans:
 
 class TestAQESkewJoin:
     def test_skewed_partition_is_split_at_runtime(self, spark):
-        """The 100 TB skew story has two layers: the explicit salting
-        device (join_salted_skew_demo + diag_join_skew_advisor) for
-        planned hot keys, and AQE's runtime skew-join split as the
-        safety net for the hot keys nobody predicted. This gate proves
-        the net is real: a 90%-one-key shuffle join executes with
+        """AQE's runtime skew-join split is the engine's skew
+        mitigation (diag_join_skew_advisor names the hot keys; a
+        manual salted join did not beat the split when measured, see
+        SURVEY §8.12, and was removed). This gate proves the split is
+        real: a 90%-one-key shuffle join executes with
         SortMergeJoin(skew=true) and an `AQEShuffleRead skewed` leaf —
         the skewed partition was split into advisory-sized chunks with
         the matching side duplicated, no code change required.

@@ -12,7 +12,10 @@ tests. Random inputs, three-way agreement:
   Fraction arithmetic AND its DuckDB SQL twin, including negatives.
 
 Each hypothesis example batches many rows into ONE Spark job so the
-property layer stays fast.
+property layer stays fast. The Spark-backed tests skip hypothesis'
+shrink phase (every shrink step would be another Spark job, so a
+failure could shrink for many minutes); their assertions name the
+failing input instead.
 """
 
 from __future__ import annotations
@@ -22,7 +25,7 @@ from fractions import Fraction
 
 import duckdb
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, Phase, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -35,6 +38,9 @@ from leadsight_sales_agent_spark.functions.extracts import (
     py_extract_sentence_near_keyword,
 )
 from leadsight_sales_agent_spark.functions.numeric import davg, sql_davg
+
+# hypothesis phases for the Spark-backed tests: no shrinking
+_NO_SHRINK = [Phase.explicit, Phase.reuse, Phase.generate]
 
 # -- Python re implementations of the reference's exact semantics ------------
 # (app.py:65-87: first-match-wins priority patterns, group(0), None on miss)
@@ -95,6 +101,7 @@ class TestExtractorsDifferential:
         max_examples=10,
         deadline=None,
         suppress_health_check=list(HealthCheck),
+        phases=_NO_SHRINK,
     )
     @given(st.lists(_DOC, min_size=1, max_size=40))
     def test_extractors_match_python_reference(self, spark, texts):
@@ -115,7 +122,7 @@ class TestExtractorsDifferential:
                 py_extract_email(t),
                 py_extract_sentence_near_keyword(t, "about us"),
             )
-            assert got[i] == reference == twins, repr(t)
+            assert got[i] == reference == twins, (t, got[i], reference, twins)
 
 
 def _half_away_from_zero(mean: Fraction, scale: int) -> float:
@@ -129,6 +136,7 @@ class TestTieSafeMeanDifferential:
         max_examples=10,
         deadline=None,
         suppress_health_check=list(HealthCheck),
+        phases=_NO_SHRINK,
     )
     @given(
         st.lists(
@@ -208,6 +216,7 @@ class TestRenderFunctionParity:
         max_examples=20,
         deadline=None,
         suppress_health_check=[HealthCheck.function_scoped_fixture],
+        phases=_NO_SHRINK,
     )
     def test_html_escape_chain_matches_python_reference(self, spark, texts):
         # The F14 escape chain must equal the literal Python chain
@@ -239,13 +248,14 @@ class TestRenderFunctionParity:
             esc = F.replace(esc, F.lit(old), F.lit(new))
         got = {r["i"]: r["e"] for r in df.select("i", esc.alias("e")).collect()}
         for i, t in enumerate(texts):
-            assert got[i] == py_escape(t), repr(t)
+            assert got[i] == py_escape(t), (t, got[i])
 
     @given(st.lists(st.integers(min_value=0, max_value=10**9), min_size=1, max_size=200))
     @settings(
         max_examples=20,
         deadline=None,
         suppress_health_check=[HealthCheck.function_scoped_fixture],
+        phases=_NO_SHRINK,
     )
     def test_byte_pretty_print_integer_tenths(self, spark, sizes):
         # F15: the integer-tenths rendering must equal the Python
@@ -290,7 +300,7 @@ class TestRenderFunctionParity:
         )
         got = {r["i"]: r["s"] for r in df.select("i", rendered.alias("s")).collect()}
         for i, n in enumerate(sizes):
-            assert got[i] == py_pretty(n), n
+            assert got[i] == py_pretty(n), (n, got[i])
 
 
 class TestHalfUpDivisionDevice:
@@ -303,7 +313,12 @@ class TestHalfUpDivisionDevice:
     def _bind_spark(self, spark):
         self.spark = spark
 
-    @settings(max_examples=20, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+    @settings(
+        max_examples=20,
+        deadline=None,
+        suppress_health_check=[HealthCheck.too_slow],
+        phases=_NO_SHRINK,
+    )
     @given(
         st.lists(
             st.tuples(
@@ -327,8 +342,8 @@ class TestHalfUpDivisionDevice:
             f = Fraction(a, b)
             # round half UP (away from zero for the non-negative domain)
             expect = int(f) + (1 if (f - int(f)) >= Fraction(1, 2) else 0)
-            assert got[(a, b)] == expect
+            assert got[(a, b)] == expect, (a, b, got[(a, b)], expect)
             (dq,) = con.execute(
                 f"SELECT CAST((2*{a}::HUGEINT + {b}) // (2*{b}::HUGEINT) AS BIGINT)"
             ).fetchone()
-            assert dq == expect
+            assert dq == expect, (a, b, dq, expect)

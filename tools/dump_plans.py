@@ -18,6 +18,7 @@ import sys
 sys.path.insert(0, ".")
 
 from leadsight_sales_agent_spark import registry  # noqa: E402
+from leadsight_sales_agent_spark.plans import formatted_plan  # noqa: E402
 from leadsight_sales_agent_spark.session import get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -32,12 +33,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     sections = []
     for name in bench.HEADLINE:
-        df = registry.QUERIES[name](spark, SF_DIR)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
+        plan = formatted_plan(registry.QUERIES[name](spark, SF_DIR))
         pushed = re.findall(r"PushedFilters: \[[^\]]*[A-Za-z][^\]]*\]", plan)
 
         def nodes(op: str) -> int:

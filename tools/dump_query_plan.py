@@ -19,6 +19,7 @@ import sys
 sys.path.insert(0, ".")
 
 from leadsight_sales_agent_spark import registry  # noqa: E402
+from leadsight_sales_agent_spark.plans import formatted_plan  # noqa: E402
 from leadsight_sales_agent_spark.session import get_spark  # noqa: E402
 
 
@@ -34,12 +35,8 @@ def main() -> None:
     spark = get_spark("plan-dump-one")
     spark.sparkContext.setLogLevel("ERROR")
     os.makedirs(args.out_dir, exist_ok=True)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
     for name in args.queries:
-        df = registry.QUERIES[name](spark, args.sf)
-        plan = df._jdf.queryExecution().explainString(mode)
+        plan = formatted_plan(registry.QUERIES[name](spark, args.sf))
         path = os.path.join(args.out_dir, f"{name}{args.suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)
