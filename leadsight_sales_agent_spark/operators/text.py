@@ -1914,6 +1914,20 @@ def json_variant_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Every character trigram of ``tx`` (code points, in order, overlapping)
+# as one codegen'd regex: a lookahead captures the next three code
+# points at each position. Java's find() steps ONE UTF-16 unit after an
+# empty match, so at the low half of a supplementary character (emoji,
+# rare CJK) it would restart mid-pair and capture a bogus trigram ('?cd'
+# in 'ab😀cd'); the (?!\p{InLowSurrogates}) guard skips that position.
+# Same multiset as transform(sequence(1, length(tx) - 2),
+# i -> substring(tx, i, 3)) for length >= 3, without the interpreted
+# lambda (tests/test_r5_ops.py::TestTrigramLm).
+CHAR_TRIGRAMS_SQL = (
+    r"regexp_extract_all(tx, '(?s)(?=(.{3}))(?!\\p{InLowSurrogates})', 1)"
+)
+
+
 @query(
     "text_trigram_lm_score",
     oracle="""
@@ -1969,25 +1983,16 @@ def text_trigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     (r11: eviction-fatality vs recompute; measured 13-15x -> ~6.3x at
     the 50x probe).
     """
-    # length >= 3 guard on BOTH engines: Spark's sequence(1, len-2) runs
-    # DESCENDING for len < 3 ([1, 0] -> phantom short "trigrams") while
-    # DuckDB's generate_series(1, 0) is empty — without the shared
-    # filter a 0-2-char document diverges the model counts cross-engine.
+    # length >= 3 filter on BOTH engines, as in the oracle: a 0-2-char
+    # document has no trigram, and dropping it identically on both sides
+    # keeps the scored document set and the model counts equal.
     d = (
         load(spark, sf_dir, "documents")
         .select("doc_id", "lang", F.trim(F.col("text")).alias("tx"))
         .filter(F.length("tx") >= 3)
     )
     tri = (
-        d.select(
-            "doc_id",
-            "lang",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, length(tx) - 2), i -> substring(tx, i, 3))"
-                )
-            ).alias("t"),
-        )
+        d.select("doc_id", "lang", F.explode(F.expr(CHAR_TRIGRAMS_SQL)).alias("t"))
         # feeds the model AND the scoring join — the shared-frame rule
         # (A/B at sf0.1: 5.2 -> 3.0 s, r9). persist, NOT localCheckpoint
         # (r11): this frame is DATA-PROPORTIONAL, and a localCheckpoint

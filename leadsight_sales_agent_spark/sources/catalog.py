@@ -5,6 +5,16 @@ we rely on Catalyst pushing filters & column pruning into the parquet
 reader (verify with ``.explain``: ``PushedFilters`` / ``ReadSchema``),
 and we never infer schemas row-wise — parquet footers carry them.
 
+Even footer inference costs one Spark job per ``spark.read.parquet``
+call, so ``load`` infers each table's schema once and pins it: the
+schema is cached per (SparkSession, path, file state) and every later
+load reads with ``spark.read.schema(pinned)``, building its DataFrame
+with no job at all. The file state is the (name, length, modification
+time) of every top-level entry Hadoop's ``FileSystem.listStatus``
+returns for the path — one code path for a single file, a Spark-written directory and
+any non-local URI — so a table rewritten in place is inferred again.
+The cache is keyed by session because inference reads session confs.
+
 Reference parity: the reference ingests spreadsheets row-at-a-time with
 pandas (app.py:282, server.py:308); here ingest is a distributed
 columnar scan and Excel/CSV become format options on the same reader
@@ -13,7 +23,10 @@ columnar scan and Excel/CSV become format options on the same reader
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -54,12 +67,44 @@ def _tune(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
 
 
+# session -> {path: (file state, inferred schema)}
+_PINNED: weakref.WeakKeyDictionary[
+    SparkSession, dict[str, tuple[tuple, StructType]]
+] = weakref.WeakKeyDictionary()
+
+
+def _file_state(spark: SparkSession, path: str) -> tuple:
+    """(name, length, modification time) of each entry under ``path``."""
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return tuple(
+        sorted(
+            (st.getPath().getName(), st.getLen(), st.getModificationTime())
+            for st in fs.listStatus(hpath)
+        )
+    )
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema inferred once per
+    session and file state (module docstring)."""
+    pinned = _PINNED.setdefault(spark, {})
+    state = _file_state(spark, path)
+    hit = pinned.get(path)
+    if hit is not None and hit[0] == state:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    pinned[path] = (state, df.schema)
+    return df
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one test table. Column pruning/filter pushdown left to Catalyst."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     _tune(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         from pyspark.sql import functions as F

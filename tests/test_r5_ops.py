@@ -5,6 +5,9 @@ from __future__ import annotations
 
 import re
 
+from hypothesis import HealthCheck, Phase, given, settings
+from hypothesis import strategies as st
+
 from leadsight_sales_agent_spark import registry
 
 registry.load_all()
@@ -60,11 +63,70 @@ class TestKmvIntersection:
         assert row["true_inter"] >= 0
 
 
+# reference: trigrams by index sequence (an interpreted lambda)
+_LAMBDA_TRIGRAMS_SQL = "transform(sequence(1, length(tx) - 2), i -> substring(tx, i, 3))"
+_TRIGRAM_CHARS = st.one_of(
+    st.sampled_from(
+        [
+            "a", "b", " ", "\r", "\n", "\u00a0",  # ASCII, CR/LF, NBSP
+            "\u0301", "\u0308",  # combining marks
+            "中", "文", "字",  # CJK
+            "😀", "👍", "\U0001f3fd",  # supplementary (surrogate pairs)
+        ]
+    ),
+    st.characters(blacklist_categories=("Cs",)),
+)
+
+
 class TestTrigramLm:
     def test_scores_are_negative_log_probs(self, spark, sf_dir):
         rows = registry.QUERIES["text_trigram_lm_score"](spark, sf_dir).collect()
         assert rows and all(r["avg_logp_micro"] <= 0 for r in rows)
         assert all(r["n_trigrams"] > 0 for r in rows)
+
+    @settings(
+        max_examples=10,
+        deadline=None,
+        suppress_health_check=list(HealthCheck),
+        phases=[Phase.explicit, Phase.reuse, Phase.generate],  # no shrinking
+    )
+    @given(st.lists(st.text(alphabet=_TRIGRAM_CHARS, max_size=12), min_size=1, max_size=40))
+    def test_regex_trigrams_match_lambda_trigrams(self, spark, texts):
+        """The regex explode yields the index-sequence form's trigrams as
+        a multiset (the query filters length >= 3 first, below which the
+        lambda form's descending sequence invents short fragments)."""
+        from collections import Counter
+
+        from pyspark.sql import functions as F
+
+        from leadsight_sales_agent_spark.operators.text import CHAR_TRIGRAMS_SQL
+
+        rows = (
+            spark.createDataFrame(list(enumerate(texts)), "i INT, tx STRING")
+            .select(
+                "i",
+                F.length("tx").alias("n"),
+                F.expr(CHAR_TRIGRAMS_SQL).alias("new"),
+                F.expr(_LAMBDA_TRIGRAMS_SQL).alias("old"),
+            )
+            .collect()
+        )
+        for r in rows:
+            tx = texts[r["i"]]
+            assert r["n"] == len(tx), (tx, r["n"])
+            want = Counter(r["old"]) if r["n"] >= 3 else Counter()
+            assert Counter(r["new"]) == want, (tx, r["new"], r["old"])
+            assert r["new"] == [tx[j : j + 3] for j in range(len(tx) - 2)], (tx, r["new"])
+
+    def test_trigram_explode_has_no_lambda(self, spark, sf_dir):
+        from leadsight_sales_agent_spark.plans import formatted_plan
+
+        plan = formatted_plan(registry.QUERIES["text_trigram_lm_score"](spark, sf_dir))
+        gen = [ln for ln in plan.splitlines() if "explode(" in ln]
+        assert gen, plan
+        for ln in gen:
+            assert "regexp_extract_all" in ln and "lambdafunction" not in ln, ln
+        spark.catalog.clearCache()
 
 
 class TestTimezone:

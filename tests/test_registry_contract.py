@@ -297,6 +297,7 @@ class TestPlanLintAllowlists:
             set(mod.ALLOW_NON_EQUI_PRECHECKPOINT),
             set(mod.ALLOW_SINGLE_PARTITION_PRECHECKPOINT),
             set(mod.WINDOW_SP_EXPECTED),
+            mod.ALLOW_BUILD_JOBS,
         ):
             stale = set(allow) - live
             assert not stale, f"allowlisted but not registered: {sorted(stale)}"
@@ -377,6 +378,29 @@ class TestPlanLintAllowlists:
             | set(unused["oversized_exchange_caps"])
         )
         assert all_reported <= set(pattern_seen)
+
+    def test_build_jobs_rule(self, spark):
+        """R10 counts the jobs a build fires (0 for a lazy frame, >= 1 for
+        an eager localCheckpoint), flags a query above 0 outside
+        ALLOW_BUILD_JOBS, and reports an allowlisted query at 0."""
+        import importlib.util
+        import os
+
+        spec = importlib.util.spec_from_file_location(
+            "plan_lint_r10",
+            os.path.join(os.path.dirname(__file__), "..", "tools", "plan_lint.py"),
+        )
+        mod = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(mod)
+        _, lazy = mod.count_build_jobs(spark, lambda: spark.range(8).selectExpr("id * 2"))
+        _, eager = mod.count_build_jobs(spark, lambda: spark.range(8).localCheckpoint())
+        assert lazy == 0 and eager >= 1
+        allowed = sorted(mod.ALLOW_BUILD_JOBS)[:2]
+        findings, unused = mod.lint_build_jobs(
+            {"__test_eager__": 3, "__test_lazy__": 0, allowed[0]: 5, allowed[1]: 0}
+        )
+        assert findings == [{"rule": "R10-build-jobs", "query": "__test_eager__", "jobs": 3}]
+        assert unused == [allowed[1]]
 
     def test_committed_plan_lint_snapshot_is_clean_and_exact(self):
         """The committed PLAN_LINT.json must show a clean lint (no

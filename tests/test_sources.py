@@ -369,3 +369,92 @@ class TestLoadKeepsSessionSettings:
             assert "AdaptiveSparkPlan" not in plan
         finally:
             spark.conf.set(key, saved)
+
+
+def _build_jobs(spark, build) -> int:
+    """Jobs fired while ``build()`` runs, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    gid = f"build-{uuid.uuid4()}"
+    sc.setJobGroup(gid, "catalog pin test")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+class TestPinnedSchema:
+    """catalog.load infers a table's schema once per session and file
+    state, then builds every later DataFrame with no Spark job."""
+
+    def test_second_load_fires_no_job(self, spark, tmp_path):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        pq.write_table(
+            pa.table({"o_orderkey": [1, 2, 3], "o_comment": ["a", "b", None]}),
+            str(tmp_path / "orders.parquet"),
+        )
+        first = _build_jobs(spark, lambda: load(spark, str(tmp_path), "orders").columns)
+        second = _build_jobs(spark, lambda: load(spark, str(tmp_path), "orders").columns)
+        assert first >= 1  # the inference job, so the counter can see one
+        assert second == 0
+        df = load(spark, str(tmp_path), "orders")
+        assert sorted(r["o_orderkey"] for r in df.collect()) == [1, 2, 3]
+
+    def test_rewritten_file_is_inferred_again(self, spark, tmp_path):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        path = str(tmp_path / "orders.parquet")
+        pq.write_table(pa.table({"k": [1, 2], "v": [10, 20]}), path)
+        assert dict(load(spark, str(tmp_path), "orders").dtypes) == {
+            "k": "bigint",
+            "v": "bigint",
+        }
+        pq.write_table(pa.table({"k": [3], "v": ["x"], "w": [0.5]}), path)
+        df = load(spark, str(tmp_path), "orders")
+        assert dict(df.dtypes) == {"k": "bigint", "v": "string", "w": "double"}
+        assert [tuple(r) for r in df.collect()] == [(3, "x", 0.5)]
+
+    def test_rewritten_spark_directory_is_inferred_again(self, spark, tmp_path):
+        path = str(tmp_path / "orders.parquet")
+        spark.range(4).selectExpr("id AS k").write.parquet(path)
+        assert load(spark, str(tmp_path), "orders").columns == ["k"]
+        spark.range(2).selectExpr("id AS k", "CAST(id AS STRING) AS s").write.mode(
+            "overwrite"
+        ).parquet(path)
+        df = load(spark, str(tmp_path), "orders")
+        assert dict(df.dtypes) == {"k": "bigint", "s": "string"}
+        assert sorted(tuple(r) for r in df.collect()) == [(0, "0"), (1, "1")]
+
+    def test_events_nanos_ts_stays_timestamp_when_pinned(self, spark, tmp_path):
+        from datetime import datetime
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        ts = pa.array(
+            [1_700_000_000_123_456_789, 1_600_000_000_000_000_001],
+            type=pa.timestamp("ns"),
+        )
+        pq.write_table(
+            pa.table({"event_id": [1, 2], "ts": ts}),
+            str(tmp_path / "events.parquet"),
+            version="2.6",
+        )
+        assert pq.read_schema(str(tmp_path / "events.parquet")).field("ts").type == ts.type
+        inferred = load(spark, str(tmp_path), "events")
+        assert _build_jobs(spark, lambda: load(spark, str(tmp_path), "events").columns) == 0
+        pinned = load(spark, str(tmp_path), "events")
+        want = [
+            (1, datetime(2023, 11, 14, 22, 13, 20, 123456)),
+            (2, datetime(2020, 9, 13, 12, 26, 40)),
+        ]
+        for df in (inferred, pinned):
+            assert dict(df.dtypes)["ts"] == "timestamp"
+            assert sorted(tuple(r) for r in df.collect()) == want

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import math
 import os
+import re
 import sys
 import time
 from datetime import date, datetime
@@ -109,6 +110,53 @@ def type_class(spark_dtype: str, duck_type: str):
     return sc, dc
 
 
+# Oracles whose DuckDB plan needs more than the replay mode's 256 MiB
+# cap to run at all (a resource artifact, not a divergence). Only these
+# are retried at the per-query floor; any other oracle OOM fails. The
+# figure is the smallest of 256/384/512/768 MiB, 1/2 GiB at which the
+# oracle alone completes at sf0.01 (DuckDB 1.0.0, 4 threads).
+REPLAY_FLOOR_QUERIES = frozenset(
+    {
+        "corpus_greedy_source_cover",  # 2 GiB
+        "embedding_pca_power_iteration",  # 1 GiB
+        # 4-stage MATERIALIZED-CTE oracle; OOM in the r14 replay, under
+        # the cap at sf0.01 on 4 threads
+        "pipeline_full_release",
+        "retrieval_mmr_diversified",  # 2 GiB
+    }
+)
+REPLAY_FLOOR_BYTES = 2 * 1024**3
+
+# a DuckDB memory limit such as ``256MiB`` or ``2GB``
+_LIMIT_RE = re.compile(r"(\d+(?:\.\d+)?)\s*([KMGT]i?)B")
+_UNIT_BYTES = {"K": 10**3, "M": 10**6, "G": 10**9, "T": 10**12,
+               "Ki": 2**10, "Mi": 2**20, "Gi": 2**30, "Ti": 2**40}
+
+
+def limit_bytes(limit: str) -> float:
+    """Bytes in a (validated) DuckDB memory limit."""
+    num, unit = _LIMIT_RE.fullmatch(limit.strip()).groups()
+    return float(num) * _UNIT_BYTES[unit]
+
+
+def replay_floor(limit: str) -> str:
+    """The per-query floor for a retried oracle: the configured limit or
+    2 GiB, whichever is larger (a floor never lowers a user's limit)."""
+    return limit.strip() if limit_bytes(limit) >= REPLAY_FLOOR_BYTES else "2GiB"
+
+
+def jvm_alive(spark) -> bool:
+    """True while the session's JVM still answers. A JVM that dies
+    mid-collect can leave ``collect()`` returning a truncated result
+    without raising, so every collect is followed by this check."""
+    from py4j.protocol import Py4JNetworkError
+
+    try:
+        return not spark.sparkContext._jsc.sc().isStopped()
+    except (Py4JNetworkError, ConnectionError):
+        return False
+
+
 def main() -> int:
     args = sys.argv[1:]
     # --driver-replay (r13, verdict task 4): replay the DRIVER's
@@ -147,9 +195,7 @@ def main() -> int:
         # r13 (advisor): validate before interpolating into SET — a
         # malformed value must fail with a clear message, not a
         # confusing SQL error from a stray quote.
-        import re as _re
-
-        if not _re.fullmatch(r"\d+(\.\d+)?\s*[KMGT]i?B", mem_limit.strip()):
+        if not _LIMIT_RE.fullmatch(mem_limit.strip()):
             print(
                 "check_oracle: invalid SPARK_GRAFT_DUCKDB_MEMORY_LIMIT "
                 f"{mem_limit!r} (expected e.g. 256MiB / 2GB)"
@@ -190,9 +236,17 @@ def main() -> int:
                 continue
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as ex:  # noqa: BLE001
+            if not jvm_alive(spark):
+                print(f"FAIL {name}: spark JVM died after 0 rows ({ex})")
+                return 3
             failures.append((name, f"SPARK ERROR: {ex}"))
             print(f"FAIL  {name}: spark error: {ex}")
             continue
+        if not jvm_alive(spark):
+            # every later query would fail with ConnectionRefusedError:
+            # stop here, without the summary sentinel (a harness crash)
+            print(f"FAIL {name}: spark JVM died after {len(srows)} rows")
+            return 3
         # Emulate the driver's pandas canonicalization (sort_values
         # over every column) so ANY cell class that crashes it — not
         # just the banned complex types — fails HERE first. Kept in
@@ -217,21 +271,22 @@ def main() -> int:
             # r14 (VERDICT r13 task 7): per-query memory FLOOR for the
             # replay mode. The global 256 MiB cap exists to force
             # DuckDB's external/spilling paths (the r12 flake class),
-            # but pipeline_full_release's 4-stage MATERIALIZED-CTE
-            # oracle legitimately needs more than the cap to run AT
-            # ALL — a resource artifact, not a divergence. On an
-            # OutOfMemory in replay mode, retry that ONE query at a
-            # 2 GiB floor and restore the cap, so the replay gate
-            # covers all 486 oracles while every query that CAN run
-            # under the cap still exercises the spilling paths.
+            # but a REPLAY_FLOOR_QUERIES oracle legitimately needs more
+            # than the cap to run AT ALL. On an OutOfMemory in replay
+            # mode, retry that ONE query at the floor and restore the
+            # cap, so the replay gate covers every oracle while every
+            # query that CAN run under the cap still exercises the
+            # spilling paths.
             retried = False
             if (
                 driver_replay
                 and mem_limit
+                and name in REPLAY_FLOOR_QUERIES
                 and "memory" in str(ex).lower()
             ):
+                floor = replay_floor(mem_limit)
                 try:
-                    con.execute("SET memory_limit='2GiB'")
+                    con.execute(f"SET memory_limit='{floor}'")
                     rel = con.sql(oracles[name])
                     ocols = list(rel.columns)
                     otypes = [str(t) for t in rel.types]
@@ -239,7 +294,7 @@ def main() -> int:
                     retried = True
                     print(
                         f"note  {name}: oracle OOM under {mem_limit}; "
-                        "re-ran at the 2GiB per-query floor"
+                        f"re-ran at the {floor} per-query floor"
                     )
                 except Exception as ex2:  # noqa: BLE001
                     ex = ex2

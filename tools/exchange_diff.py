@@ -1,4 +1,5 @@
-"""Diff per-query Exchange counts between two PLAN_LINT.json snapshots.
+"""Diff per-query Exchange counts, and build-job counts, between two
+PLAN_LINT.json snapshots.
 
 PLAN_LINT.json commits `exchange_counts` (since r9) precisely so plan
 growth is caught the round it happens — R4 only fires once a plan
@@ -12,13 +13,27 @@ against the previous round's committed snapshot:
 Exit 0 always (informational); prints one line per grown/shrunk/new/
 gone query, biggest growth first. A grown count is not automatically a
 finding — but it is the question to answer before the lint's grace
-window silently absorbs it.
+window silently absorbs it. Then one `build_jobs` line per query whose
+count of jobs fired while its DataFrame is built (plan_lint R10)
+changed, appeared or went away.
 """
 
 from __future__ import annotations
 
 import json
 import sys
+
+
+def diff_build_jobs(prev: dict | None, cur: dict) -> None:
+    """One line per query whose build-job count changed, appeared or
+    went away; one note line if the previous snapshot has no map."""
+    if prev is None:
+        print("build_jobs: previous snapshot has no build_jobs map")
+        return
+    for n in sorted(set(prev) | set(cur)):
+        a, b = prev.get(n), cur.get(n)
+        if a != b:
+            print(f"build_jobs {n}: {a} -> {b}")
 
 
 def main() -> None:
@@ -28,9 +43,11 @@ def main() -> None:
     prev_path = sys.argv[1]
     cur_path = sys.argv[2] if len(sys.argv) > 2 else "PLAN_LINT.json"
     with open(prev_path) as f:
-        prev = json.load(f).get("exchange_counts", {})
+        prev_lint = json.load(f)
     with open(cur_path) as f:
-        cur = json.load(f).get("exchange_counts", {})
+        cur_lint = json.load(f)
+    prev = prev_lint.get("exchange_counts", {})
+    cur = cur_lint.get("exchange_counts", {})
     if not prev:
         print(f"{prev_path}: no exchange_counts (pre-r9 snapshot?) — nothing to diff")
         return
@@ -45,6 +62,7 @@ def main() -> None:
         print(f"new    {n}: {cur[n]}")
     for n in sorted(set(prev) - set(cur)):
         print(f"gone   {n} (was {prev[n]})")
+    diff_build_jobs(prev_lint.get("build_jobs"), cur_lint.get("build_jobs", {}))
     n_grew = sum(1 for d, _ in grown if d > 0)
     print(
         json.dumps(

@@ -81,6 +81,20 @@ Rules (per query, formatted physical plan at sf0.001):
                       stale tag is the same blind spot as a dead
                       allowlist entry).
 
+  R10 build-jobs    — JOB rule: the Spark jobs a query fires while its
+                      DataFrame is BUILT (before the caller's action),
+                      counted through a job group after every TABLES
+                      entry was loaded once (so catalog.load's pinned
+                      schemas make the count independent of query
+                      order). A build job is an eager device: a
+                      localCheckpoint, a collect-to-literal, an
+                      iterative loop's per-round materialisation. A
+                      query above 0 must be in the exact
+                      ALLOW_BUILD_JOBS set; an entry at 0 is reported
+                      under unused_allowlist["build_jobs"]. The counts
+                      are committed as PLAN_LINT.json's build_jobs map
+                      (tools/exchange_diff.py prints their changes).
+
 This is the continuous form of the per-query plan audits in
 tests/test_plans.py: those pin the headline shapes deeply; this lint
 keeps the OTHER ~300 queries from silently regressing into a
@@ -90,6 +104,7 @@ scale-killer as they evolve.
 from __future__ import annotations
 
 import glob
+import itertools
 import json
 import os
 import re
@@ -100,6 +115,7 @@ sys.path.insert(0, ".")
 from leadsight_sales_agent_spark import registry  # noqa: E402
 from leadsight_sales_agent_spark.plans import formatted_plan  # noqa: E402
 from leadsight_sales_agent_spark.session import get_spark  # noqa: E402
+from leadsight_sales_agent_spark.sources.catalog import TABLES, load  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -791,6 +807,95 @@ def wide_decimal_casts(df) -> list[dict]:
     return hits
 
 
+# R10: queries that fire Spark jobs while their DataFrame is built —
+# the eager devices and iterative loops left once catalog.load pins
+# parquet schemas (ROADMAP item 2's next step). Exact: a query that
+# gains a build job fails lint, one that loses its last is reported.
+ALLOW_BUILD_JOBS: set[str] = {
+    # eager localCheckpoint sites (each carries its R8 ckpt-grain: tag),
+    # per round where the query iterates
+    "ab_permutation_test_hashed",
+    "ab_sprt_sequential_boundary",
+    "agg_theil_inequality_decomposition",
+    "anomaly_seasonal_hybrid_esd",
+    "attribution_markov_removal",
+    "attribution_shapley_channels",
+    "corpus_greedy_source_cover",
+    "dedup_connected_components",
+    "dedup_semantic_semdedup",
+    "dedup_sorted_neighborhood",
+    "dedup_strategy_overlap_matrix",
+    "dq_t_closeness_audit",
+    "embedding_pca_power_iteration",
+    "eval_bradley_terry_strengths",
+    "eval_harrell_c_index",
+    "eval_krippendorff_alpha_langid",
+    "forecast_pinball_loss_quantile",
+    "graph_hits_hubs_authorities",
+    "graph_kcore_peel",
+    "graph_link_prediction_common_suppliers",
+    "graph_modularity_regions",
+    "graph_pagerank_trade",
+    "graph_rich_club_coefficient",
+    "graph_triangle_coparts",
+    "incremental_topk_maintenance",
+    "join_bloom_runtime_filter_audit",
+    "market_basket_rules",
+    "neardup_incremental_prefix_join",
+    "neardup_prefix_filter_join",
+    "neardup_simhash_exact",
+    "pipeline_full_release",
+    "recsys_coverage_novelty_audit",
+    "recsys_item_item_cosine",
+    "sample_coreset_kcenter_greedy",
+    "sample_dsir_importance",
+    "sketch_hll_deterministic",
+    "sketch_kmv_rolling_distinct_7d",
+    "storage_sort_key_advisor",
+    "survival_logrank_test",
+    "text_bleu_source_similarity",
+    "timeseries_hurst_rs",
+    "window_downsample_lttb",
+    # build on a checkpointing query's frames
+    "dedup_cluster_representatives",  # dedup_connected_components
+    "privacy_release_gate",  # dq_t_closeness_audit
+    # count() to a driver literal
+    "replication_merkle_diff",
+    "text_tfidf_top_terms",
+    # SET VAR evaluates its scalar subquery when the variable is set
+    "sql_session_variables_suite",
+}
+
+_BUILD_GROUPS = itertools.count(1)
+
+
+def count_build_jobs(spark, build):
+    """(build(), number of Spark jobs it fired), via a job group."""
+    sc = spark.sparkContext
+    gid = f"plan-lint-build-{next(_BUILD_GROUPS)}"
+    sc.setJobGroup(gid, "plan_lint build")
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker is filled from the listener bus: let it catch up
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def lint_build_jobs(build_jobs: dict[str, int]) -> tuple[list[dict], list[str]]:
+    """R10 findings (a query above 0 build jobs outside ALLOW_BUILD_JOBS)
+    and the allowlisted names measured at 0 (unused entries)."""
+    findings = [
+        {"rule": "R10-build-jobs", "query": n, "jobs": j}
+        for n, j in sorted(build_jobs.items())
+        if j and n not in ALLOW_BUILD_JOBS
+    ]
+    unused = sorted(n for n in ALLOW_BUILD_JOBS if build_jobs.get(n) == 0)
+    return findings, unused
+
+
 def lint_one(name: str, plan: str) -> list[dict]:
     findings = []
     if ("CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan) and (
@@ -967,11 +1072,19 @@ def main() -> None:
     # longer catch a regression there. Reported informationally in
     # PLAN_LINT.json (not a finding: plans are SF_DIR-specific).
     pattern_seen: dict[str, dict[str, bool]] = {}
+    # R10: pin every table's schema first, so no query's count includes
+    # the first load's inference job
+    for t in TABLES:
+        load(spark, SF_DIR, t)
+    build_jobs: dict[str, int] = {}
     for name in oracle_backed:
         try:
-            df = registry.QUERIES[name](spark, SF_DIR)
+            df, build_jobs[name] = count_build_jobs(
+                spark, lambda: registry.QUERIES[name](spark, SF_DIR)
+            )
             plan = formatted_plan(df)
         except Exception as e:  # noqa: BLE001 — lint must survive one bad query
+            build_jobs.pop(name, None)
             errors.append({"query": name, "error": str(e)[:200]})
             continue
         findings.extend(lint_one(name, plan))
@@ -1082,6 +1195,8 @@ def main() -> None:
 
     unused_allowlist = compute_unused_allowlists(pattern_seen)
     unused_allowlist["ckpt_grain_annotations"] = r8_unused
+    r10_findings, unused_allowlist["build_jobs"] = lint_build_jobs(build_jobs)
+    findings.extend(r10_findings)
     # exact-allowlist audit for the pre-checkpoint lists: an entry is
     # unused when the flattened plan lacks the pattern OR the name is
     # already exempted by the main list (dead shadowing)
@@ -1112,6 +1227,8 @@ def main() -> None:
         "exchange_counts": {
             n: pattern_seen[n]["n_exchanges"] for n in sorted(pattern_seen)
         },
+        # R10: Spark jobs fired while each query's DataFrame is built
+        "build_jobs": {n: build_jobs[n] for n in sorted(build_jobs)},
     }
     with open("PLAN_LINT.json", "w") as f:
         json.dump(out, f, indent=1)
