@@ -17,7 +17,7 @@ from __future__ import annotations
 from functools import reduce
 from operator import add
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from leadsight_sales_agent_spark.functions.numeric import (
@@ -29,6 +29,7 @@ from leadsight_sales_agent_spark.functions.numeric import (
     davg,
     dsum,
     finite,
+    is_finite,
     sql_d53,
     sql_d53s,
     sql_davg,
@@ -1473,6 +1474,24 @@ KMV_K = 64  # sketch size: relative error ~ 1/sqrt(K) ~ 12.5%
 _HEX12 = 16**12
 
 
+def _user_day_keys(ev: DataFrame) -> DataFrame:
+    """Distinct (event_type, k) pairs with k = "user_id|yyyy-MM-dd" over
+    the events with a timestamp (a user-day needs a day; a NULL key's
+    sort placement is engine-divergent)."""
+    return (
+        ev.filter(F.col("ts").isNotNull())
+        .select(
+            "event_type",
+            F.concat(
+                F.col("user_id").cast("string"),
+                F.lit("|"),
+                F.date_format("ts", "yyyy-MM-dd"),
+            ).alias("k"),
+        )
+        .distinct()
+    )
+
+
 @query(
     "sketch_kmv_distinct_userdays",
     oracle=f"""
@@ -1539,21 +1558,7 @@ def sketch_kmv_distinct_userdays(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders <= 5k surviving hashes — driver-scale by construction.
     """
     K = KMV_K
-    keyed = (
-        load(spark, sf_dir, "events")
-        # null-ts device (r11): a user-DAY needs a day; a NULL key's
-        # sort placement is engine-divergent (NULLS FIRST vs LAST)
-        .filter(F.col("ts").isNotNull())
-        .select(
-            "event_type",
-            F.concat(
-                F.col("user_id").cast("string"),
-                F.lit("|"),
-                F.date_format("ts", "yyyy-MM-dd"),
-            ).alias("k"),
-        )
-        .distinct()
-    )
+    keyed = _user_day_keys(load(spark, sf_dir, "events"))
     hashed = keyed.select(
         "event_type", F.md5(F.concat(F.lit("kmv|"), F.col("k"))).alias("h")
     )
@@ -1789,20 +1794,10 @@ def sketch_kmv_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked, including the merge.
     """
     K = KMV_K
-    keyed = (
-        load(spark, sf_dir, "events")
-        # null-ts device (r11): a user-day needs a day
-        .filter(F.col("event_type").isin("click", "purchase"))
-        .filter(F.col("ts").isNotNull())
-        .select(
-            "event_type",
-            F.concat(
-                F.col("user_id").cast("string"),
-                F.lit("|"),
-                F.date_format("ts", "yyyy-MM-dd"),
-            ).alias("k"),
+    keyed = _user_day_keys(
+        load(spark, sf_dir, "events").filter(
+            F.col("event_type").isin("click", "purchase")
         )
-        .distinct()
     )
     hashed = keyed.select(
         "event_type", "k", F.md5(F.concat(F.lit("kmv|"), F.col("k"))).alias("h")
@@ -2534,6 +2529,30 @@ def agg_grouped_pandas_udf_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _event_value_deviations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Finite event values in integer cents, shifted by their event
+    type's floor-mean: (event_type, d), so every power sum of d is an
+    exact integer."""
+    c = (
+        load(spark, sf_dir, "events")
+        .filter(is_finite(F.col("value")))
+        .select(
+            "event_type",
+            (F.col("value").cast("decimal(25,2)") * 100).cast("long").alias("cents"),
+        )
+    )
+    return c.select(
+        "event_type",
+        (
+            F.col("cents")
+            - F.expr(
+                "sum(cents) OVER (PARTITION BY event_type)"
+                " DIV count(*) OVER (PARTITION BY event_type)"
+            )
+        ).alias("d"),
+    )
+
+
 @query(
     "agg_skew_kurtosis_moments",
     oracle=f"""
@@ -2602,26 +2621,7 @@ def agg_skew_kurtosis_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: window + groupBy share the (event_type) partitioning — one
     exchange; everything else is map-side arithmetic.
     """
-    from leadsight_sales_agent_spark.functions.numeric import is_finite
-
-    c = (
-        load(spark, sf_dir, "events")
-        .filter(is_finite(F.col("value")))
-        .select(
-            "event_type",
-            (F.col("value").cast("decimal(25,2)") * 100).cast("long").alias("cents"),
-        )
-    )
-    shifted = c.select(
-        "event_type",
-        (
-            F.col("cents")
-            - F.expr(
-                "sum(cents) OVER (PARTITION BY event_type)"
-                " DIV count(*) OVER (PARTITION BY event_type)"
-            )
-        ).alias("d"),
-    )
+    shifted = _event_value_deviations(spark, sf_dir)
     sums = shifted.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("d").cast("long").alias("s1"),
@@ -4442,6 +4442,27 @@ AMS_PER_GROUP = 5  # estimators cuts variance 5x; the median over the 5
 AMS_ESTIMATORS = AMS_GROUPS * AMS_PER_GROUP
 
 
+def _ams_sign() -> Column:
+    """The AMS +-1 sign of item x for estimator j: the first md5 hex
+    digit of "ams:j:x", below "8" -> +1."""
+    return F.when(
+        F.substring(
+            F.md5(
+                F.concat(
+                    F.lit("ams:"),
+                    F.col("j").cast("string"),
+                    F.lit(":"),
+                    F.col("x").cast("string"),
+                )
+            ),
+            1,
+            1,
+        )
+        < "8",
+        1,
+    ).otherwise(-1)
+
+
 @query(
     "sketch_ams_f2_moment",
     oracle=f"""
@@ -4522,24 +4543,7 @@ def sketch_ams_f2_moment(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream.crossJoin(F.broadcast(js))
         .groupBy("j")
         .agg(
-            F.sum(
-                F.when(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.lit("ams:"),
-                                F.col("j").cast("string"),
-                                F.lit(":"),
-                                F.col("x").cast("string"),
-                            )
-                        ),
-                        1,
-                        1,
-                    )
-                    < "8",
-                    1,
-                ).otherwise(-1)
-            )
+            F.sum(_ams_sign())
             .cast("bigint")
             .alias("zj")
         )
@@ -5017,34 +5021,15 @@ def sketch_ams_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame
     js = spark.range(1, AMS_ESTIMATORS + 1).select(
         F.col("id").cast("bigint").alias("j")
     )
-
-    def sign():
-        return F.when(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("ams:"),
-                        F.col("j").cast("string"),
-                        F.lit(":"),
-                        F.col("x").cast("string"),
-                    )
-                ),
-                1,
-                1,
-            )
-            < "8",
-            1,
-        ).otherwise(-1)
-
     za = (
         a.crossJoin(F.broadcast(js))
         .groupBy("j")
-        .agg(F.sum(sign()).cast("bigint").alias("za"))
+        .agg(F.sum(_ams_sign()).cast("bigint").alias("za"))
     )
     zb = (
         b.crossJoin(F.broadcast(js))
         .groupBy("j")
-        .agg(F.sum(sign()).cast("bigint").alias("zb"))
+        .agg(F.sum(_ams_sign()).cast("bigint").alias("zb"))
     )
     grp = (
         za.join(zb, "j")
@@ -5785,6 +5770,37 @@ def privacy_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _priority_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Order totals in integer cents collapsed to the (prio, cents)
+    grain with their multiplicity cnt."""
+    return (
+        load(spark, sf_dir, "orders")
+        .select(
+            F.col("o_orderpriority").alias("prio"),
+            (F.col("o_totalprice").cast("decimal(25,2)") * 100)
+            .cast("bigint")
+            .alias("cents"),
+        )
+        .groupBy("prio", "cents")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
+def _priority_cents_cum(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The (prio, cents, cnt) grain with each value's ties-inclusive
+    cumulative count cum_incl and the priority's size n_g: the exact
+    order-statistic index of every collapsed value."""
+    return _priority_cents(spark, sf_dir).select(
+        "prio",
+        "cents",
+        "cnt",
+        F.sum("cnt").over(Window.partitionBy("prio").orderBy("cents")).alias(
+            "cum_incl"
+        ),
+        F.sum("cnt").over(Window.partitionBy("prio")).alias("n_g"),
+    )
+
+
 @query(
     "agg_percentile_cont_exact",
     oracle="""
@@ -5855,17 +5871,7 @@ def agg_percentile_cont_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence exact-median device in quantile_bucket_localized_exact);
     one hash collapse + one 5-row reduce.
     """
-    g1 = (
-        load(spark, sf_dir, "orders")
-        .select(
-            F.col("o_orderpriority").alias("prio"),
-            (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
-        )
-        .groupBy("prio", "cents")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    g1 = _priority_cents(spark, sf_dir)
     word = Window.partitionBy("prio").orderBy("cents")
     wprio = Window.partitionBy("prio")
     w = g1.select(
@@ -6244,26 +6250,7 @@ def eval_jarque_bera_normality(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy sharing the event_type partitioning, map-side arithmetic
     everywhere else.
     """
-    from leadsight_sales_agent_spark.functions.numeric import is_finite
-
-    c = (
-        load(spark, sf_dir, "events")
-        .filter(is_finite(F.col("value")))
-        .select(
-            "event_type",
-            (F.col("value").cast("decimal(25,2)") * 100).cast("long").alias("cents"),
-        )
-    )
-    shifted = c.select(
-        "event_type",
-        (
-            F.col("cents")
-            - F.expr(
-                "sum(cents) OVER (PARTITION BY event_type)"
-                " DIV count(*) OVER (PARTITION BY event_type)"
-            )
-        ).alias("d"),
-    )
+    shifted = _event_value_deviations(spark, sf_dir)
     sums = shifted.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("d").cast("bigint").alias("s1"),
@@ -6364,26 +6351,7 @@ def agg_median_ci_order_statistic(spark: SparkSession, sf_dir: str) -> DataFrame
     100 TB plan: one (priority, cents) hash collapse; windows on the
     domain-bounded grain share the per-priority sort; 5-row reduce.
     """
-    g1 = (
-        load(spark, sf_dir, "orders")
-        .select(
-            F.col("o_orderpriority").alias("prio"),
-            (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
-        )
-        .groupBy("prio", "cents")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w = g1.select(
-        "prio",
-        "cents",
-        "cnt",
-        F.sum("cnt").over(Window.partitionBy("prio").orderBy("cents")).alias(
-            "cum_incl"
-        ),
-        F.sum("cnt").over(Window.partitionBy("prio")).alias("n_g"),
-    )
+    w = _priority_cents_cum(spark, sf_dir)
     ranks = w.select(
         "prio",
         "cents",
@@ -6581,26 +6549,7 @@ def agg_trimmed_mean_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     quotient of exact sums. 100 TB plan: one hash collapse, per-group
     windows on the domain-bounded grain, 5-row reduce.
     """
-    g1 = (
-        load(spark, sf_dir, "orders")
-        .select(
-            F.col("o_orderpriority").alias("prio"),
-            (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
-        )
-        .groupBy("prio", "cents")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w = g1.select(
-        "prio",
-        "cents",
-        "cnt",
-        F.sum("cnt").over(Window.partitionBy("prio").orderBy("cents")).alias(
-            "cum_incl"
-        ),
-        F.sum("cnt").over(Window.partitionBy("prio")).alias("n_g"),
-    )
+    w = _priority_cents_cum(spark, sf_dir)
     clipped = w.select(
         "prio",
         "cents",
@@ -6677,26 +6626,7 @@ def agg_gini_mean_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB plan: one hash collapse, per-priority windows on the
     domain-bounded grain, 5-row reduce.
     """
-    g1 = (
-        load(spark, sf_dir, "orders")
-        .select(
-            F.col("o_orderpriority").alias("prio"),
-            (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
-        )
-        .groupBy("prio", "cents")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w = g1.select(
-        "prio",
-        "cents",
-        "cnt",
-        F.sum("cnt").over(Window.partitionBy("prio").orderBy("cents")).alias(
-            "cum_incl"
-        ),
-        F.sum("cnt").over(Window.partitionBy("prio")).alias("n_g"),
-    )
+    w = _priority_cents_cum(spark, sf_dir)
     terms = w.select(
         "prio",
         "n_g",

@@ -11,7 +11,7 @@ no windows over unbounded partitions.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from leadsight_sales_agent_spark.functions.numeric import (
@@ -2068,6 +2068,38 @@ def eval_decile_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _monthly_ma24(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Monthly revenue (month, moy, cents) with s24, the exact 24x
+    centered 2x12 moving-average sum (NULL for the first and last six
+    months, whose window is incomplete)."""
+    series = (
+        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
+        .groupBy(
+            F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias(
+                "month"
+            ),
+            F.month("o_orderdate").cast("bigint").alias("moy"),
+        )
+        .agg(
+            F.round(F.sum(F.col("o_totalprice").cast("decimal(25,6)")) * 100, 0)
+            .cast("bigint")
+            .alias("cents")
+        )
+    )
+    w = Window.orderBy("month")
+    wma = w.rowsBetween(-5, 5)
+    return series.select(
+        "month",
+        "moy",
+        "cents",
+        (
+            F.lit(2) * F.sum("cents").over(wma)
+            + F.lag("cents", 6).over(w)
+            + F.lead("cents", 6).over(w)
+        ).alias("s24"),
+    )
+
+
 @query(
     "forecast_seasonal_decomposition",
     oracle="""
@@ -2119,32 +2151,7 @@ def forecast_seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFra
     months-grid-not-facts rule; incomplete edge windows (first/last 6
     months) are excluded by construction, as the method requires.
     """
-    series = (
-        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
-        .groupBy(
-            F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias(
-                "month"
-            ),
-            F.month("o_orderdate").cast("bigint").alias("moy"),
-        )
-        .agg(
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(25,6)")) * 100, 0)
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
-    w = Window.orderBy("month")
-    wma = w.rowsBetween(-5, 5)
-    ma = series.select(
-        "month",
-        "moy",
-        "cents",
-        (
-            F.lit(2) * F.sum("cents").over(wma)
-            + F.lag("cents", 6).over(w)
-            + F.lead("cents", 6).over(w)
-        ).alias("s24"),
-    )
+    ma = _monthly_ma24(spark, sf_dir)
     ratios = ma.filter(F.col("s24").isNotNull()).select(
         "moy",
         F.expr(
@@ -2419,11 +2426,7 @@ def survival_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("ts").isNotNull())
         .select("user_id", "ts", "event_type")
     )
-    anchor = (
-        ev.filter(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t0"))
-    )
+    anchor = _signup_anchor(ev)
     joined = ev.join(anchor.withColumnRenamed("user_id", "uid"), F.col("user_id") == F.col("uid"))
     outcome = joined.groupBy("user_id").agg(
         F.min(
@@ -2797,32 +2800,7 @@ def anomaly_seasonal_adjusted(spark: SparkSession, sf_dir: str) -> DataFrame:
     season = QUERIES["forecast_seasonal_decomposition"](spark, sf_dir).select(
         "moy", "seasonal_index_bp"
     )
-    series = (
-        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
-        .groupBy(
-            F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias(
-                "month"
-            ),
-            F.month("o_orderdate").cast("bigint").alias("moy"),
-        )
-        .agg(
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(25,6)")) * 100, 0)
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
-    w = Window.orderBy("month")
-    wma = w.rowsBetween(-5, 5)
-    ma = series.select(
-        "month",
-        "moy",
-        "cents",
-        (
-            F.lit(2) * F.sum("cents").over(wma)
-            + F.lag("cents", 6).over(w)
-            + F.lead("cents", 6).over(w)
-        ).alias("s24"),
-    )
+    ma = _monthly_ma24(spark, sf_dir)
     ratios = ma.filter(F.col("s24").isNotNull()).select(
         "month",
         "moy",
@@ -4487,6 +4465,62 @@ def attribution_shapley_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _two_segment_cents(
+    spark: SparkSession, sf_dir: str, seg_a: str, seg_b: str
+) -> DataFrame:
+    """Order totals in integer cents for the customers of two market
+    segments: (cents, a) with a = 1 for seg_a and 0 for seg_b."""
+    return (
+        load(spark, sf_dir, "orders")
+        .join(
+            load(spark, sf_dir, "customer").filter(
+                F.col("c_mktsegment").isin(seg_a, seg_b)
+            ),
+            F.col("c_custkey") == F.col("o_custkey"),
+        )
+        .select(
+            (F.col("o_totalprice").cast("decimal(25,2)") * 100)
+            .cast("bigint")
+            .alias("cents"),
+            F.when(F.col("c_mktsegment") == seg_a, 1).otherwise(0).alias("a"),
+        )
+    )
+
+
+def _segment_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Order totals in integer cents with their customer's market
+    segment: (cents, seg)."""
+    return (
+        load(spark, sf_dir, "orders")
+        .join(
+            load(spark, sf_dir, "customer"),
+            F.col("c_custkey") == F.col("o_custkey"),
+        )
+        .select(
+            (F.col("o_totalprice").cast("decimal(25,2)") * 100)
+            .cast("bigint")
+            .alias("cents"),
+            F.col("c_mktsegment").alias("seg"),
+        )
+    )
+
+
+def _floor_mean_centered(
+    cells: DataFrame, key: str, val: str, *part: str
+) -> DataFrame:
+    """(key, val, cnt) cells plus d = val - floor(mean of val) over the
+    cells of each `part` partition (the whole frame when none): the
+    shift that keeps every centered power sum an exact integer."""
+    w = Window.partitionBy(*part)
+    return cells.select(
+        key,
+        val,
+        "cnt",
+        F.sum(F.col(val) * F.col("cnt")).over(w).alias("sall"),
+        F.sum("cnt").over(w).alias("nall"),
+    ).withColumn("d", F.expr(f"{val} - (sall DIV nall)"))
+
+
 _MW_Z_EXPR = (
     "round(CAST(u2_a - n_a * n_b AS DOUBLE) / "
     "(2.0 * sqrt((CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) * "
@@ -4563,21 +4597,7 @@ def eval_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     price domain, not the order count) sharing one sort; a single-row
     reduce finishes. Same shape as eval_ks_two_sample.
     """
-    j = (
-        load(spark, sf_dir, "orders")
-        .join(
-            load(spark, sf_dir, "customer").filter(
-                F.col("c_mktsegment").isin("BUILDING", "MACHINERY")
-            ),
-            F.col("c_custkey") == F.col("o_custkey"),
-        )
-        .select(
-            (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
-            F.when(F.col("c_mktsegment") == "BUILDING", 1).otherwise(0).alias("a"),
-        )
-    )
+    j = _two_segment_cents(spark, sf_dir, "BUILDING", "MACHINERY")
     g = j.groupBy("cents").agg(
         F.sum("a").cast("long").alias("ca"),
         F.sum(1 - F.col("a")).cast("long").alias("cb"),
@@ -4820,19 +4840,7 @@ def eval_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     is shared by the cumulative, the per-cents partition, and the
     tie-flag window.
     """
-    j = (
-        load(spark, sf_dir, "orders")
-        .join(
-            load(spark, sf_dir, "customer"),
-            F.col("c_custkey") == F.col("o_custkey"),
-        )
-        .select(
-            (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
-            F.col("c_mktsegment").alias("seg"),
-        )
-    )
+    j = _segment_cents(spark, sf_dir)
     g1 = j.groupBy("cents", "seg").agg(F.count(F.lit(1)).alias("cnt"))
     ranked = g1.select(
         "cents",
@@ -4880,6 +4888,50 @@ def eval_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_KW_H_EXPR).alias("h_stat"),
         F.expr(_KW_HC_EXPR).alias("h_tie_corrected"),
     )
+
+
+def _k_group_sums(cen: DataFrame) -> DataFrame:
+    """The 1-row one-way ANOVA sums over floor-mean-centered (seg, d,
+    cnt) cells: n, k, s1 = sum d, s2 = sum d^2 and ssb_terms = sum over
+    groups of floor(d1_g^2 / n_g), exact through the pmod quotient."""
+    segstats = cen.groupBy("seg").agg(
+        F.sum("cnt").cast("bigint").alias("n_g"),
+        F.sum(F.col("cnt") * F.col("d")).cast("bigint").alias("d1_g"),
+        F.sum(F.expr("CAST(cnt AS DECIMAL(38,0)) * d * d"))
+        .cast("decimal(38,0)")
+        .alias("d2_g"),
+    )
+    return segstats.agg(
+        F.sum("n_g").cast("bigint").alias("n"),
+        F.count(F.lit(1)).cast("int").alias("k"),
+        F.sum("d1_g").cast("bigint").alias("s1"),
+        F.sum("d2_g").cast("decimal(38,0)").alias("s2"),
+        F.sum(
+            F.expr(
+                "CAST((CAST(d1_g AS DECIMAL(38,0)) * d1_g"
+                " - pmod(CAST(d1_g AS DECIMAL(38,0)) * d1_g,"
+                " CAST(n_g AS DECIMAL(38,0)))) / n_g AS DECIMAL(38,0))"
+            )
+        )
+        .cast("decimal(38,0)")
+        .alias("ssb_terms"),
+    )
+
+
+def _k_group_report_head() -> list[Column]:
+    """The leading report columns shared by the k-group F tests: sizes,
+    degrees of freedom and the exact (hi15, lo15) limbs of s2 and
+    ssb_terms."""
+    return [
+        F.col("n").cast("bigint").alias("n_orders"),
+        F.col("k").cast("int").alias("k_groups"),
+        F.expr("CAST(n - k AS BIGINT)").alias("df_within"),
+        F.col("s1").cast("bigint").alias("s1_centered"),
+        F.expr(wsplit15_hi("s2")).alias("s2_hi15"),
+        F.expr(wsplit15_lo("s2")).alias("s2_lo15"),
+        F.expr(wsplit15_hi("ssb_terms")).alias("ssb_terms_hi15"),
+        F.expr(wsplit15_lo("ssb_terms")).alias("ssb_terms_lo15"),
+    ]
 
 
 # ANOVA basis-point reports, rewritten r13 as EXACT integer half-up
@@ -5015,50 +5067,9 @@ def eval_anova_f_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     eta² device's raw half-up numerator/denominator) is its own column
     so any residual driver divergence localizes to one term.
     """
-    j = (
-        load(spark, sf_dir, "orders")
-        .join(
-            load(spark, sf_dir, "customer"),
-            F.col("c_custkey") == F.col("o_custkey"),
-        )
-        .select(
-            (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
-            F.col("c_mktsegment").alias("seg"),
-        )
-    )
+    j = _segment_cents(spark, sf_dir)
     g1 = j.groupBy("seg", "cents").agg(F.count(F.lit(1)).alias("cnt"))
-    wall = Window.partitionBy()
-    cen = g1.select(
-        "seg",
-        "cents",
-        "cnt",
-        F.sum(F.col("cents") * F.col("cnt")).over(wall).alias("sall"),
-        F.sum("cnt").over(wall).alias("nall"),
-    ).withColumn("d", F.expr("cents - (sall DIV nall)"))
-    segstats = cen.groupBy("seg").agg(
-        F.sum("cnt").cast("bigint").alias("n_g"),
-        F.sum(F.col("cnt") * F.col("d")).cast("bigint").alias("d1_g"),
-        F.sum(F.expr("CAST(cnt AS DECIMAL(38,0)) * d * d"))
-        .cast("decimal(38,0)")
-        .alias("d2_g"),
-    )
-    tot = segstats.agg(
-        F.sum("n_g").cast("bigint").alias("n"),
-        F.count(F.lit(1)).cast("int").alias("k"),
-        F.sum("d1_g").cast("bigint").alias("s1"),
-        F.sum("d2_g").cast("decimal(38,0)").alias("s2"),
-        F.sum(
-            F.expr(
-                "CAST((CAST(d1_g AS DECIMAL(38,0)) * d1_g"
-                " - pmod(CAST(d1_g AS DECIMAL(38,0)) * d1_g,"
-                " CAST(n_g AS DECIMAL(38,0)))) / n_g AS DECIMAL(38,0))"
-            )
-        )
-        .cast("decimal(38,0)")
-        .alias("ssb_terms"),
-    )
+    tot = _k_group_sums(_floor_mean_centered(g1, "seg", "cents"))
     fin = tot.select(
         "n",
         "k",
@@ -5072,14 +5083,7 @@ def eval_anova_f_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("ssw_c2"),
     )
     return fin.select(
-        F.col("n").cast("bigint").alias("n_orders"),
-        F.col("k").cast("int").alias("k_groups"),
-        F.expr("CAST(n - k AS BIGINT)").alias("df_within"),
-        F.col("s1").cast("bigint").alias("s1_centered"),
-        F.expr(wsplit15_hi("s2")).alias("s2_hi15"),
-        F.expr(wsplit15_lo("s2")).alias("s2_lo15"),
-        F.expr(wsplit15_hi("ssb_terms")).alias("ssb_terms_hi15"),
-        F.expr(wsplit15_lo("ssb_terms")).alias("ssb_terms_lo15"),
+        *_k_group_report_head(),
         F.expr(wsplit15_hi("ssb_c2")).alias("ssb_c2_hi15"),
         F.expr(wsplit15_lo("ssb_c2")).alias("ssb_c2_lo15"),
         F.expr(wsplit15_hi("ssw_c2")).alias("ssw_c2_hi15"),
@@ -5195,19 +5199,7 @@ def eval_brown_forsythe_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
     instrumentation columns (see eval_anova_f_oneway's docstring for
     the driver-divergence localization rationale; VERDICT r13 task 1).
     """
-    j = (
-        load(spark, sf_dir, "orders")
-        .join(
-            load(spark, sf_dir, "customer"),
-            F.col("c_custkey") == F.col("o_custkey"),
-        )
-        .select(
-            (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
-            F.col("c_mktsegment").alias("seg"),
-        )
-    )
+    j = _segment_cents(spark, sf_dir)
     g1 = j.groupBy("seg", "cents").agg(F.count(F.lit(1)).alias("cnt"))
     wseg_ord = Window.partitionBy("seg").orderBy("cents")
     wseg = Window.partitionBy("seg")
@@ -5231,36 +5223,7 @@ def eval_brown_forsythe_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).over(wseg)
         ).alias("z"),
     )
-    wall = Window.partitionBy()
-    cen = zg.select(
-        "seg",
-        "z",
-        "cnt",
-        F.sum(F.col("z") * F.col("cnt")).over(wall).alias("sall"),
-        F.sum("cnt").over(wall).alias("nall"),
-    ).withColumn("d", F.expr("z - (sall DIV nall)"))
-    segstats = cen.groupBy("seg").agg(
-        F.sum("cnt").cast("bigint").alias("n_g"),
-        F.sum(F.col("cnt") * F.col("d")).cast("bigint").alias("d1_g"),
-        F.sum(F.expr("CAST(cnt AS DECIMAL(38,0)) * d * d"))
-        .cast("decimal(38,0)")
-        .alias("d2_g"),
-    )
-    tot = segstats.agg(
-        F.sum("n_g").cast("bigint").alias("n"),
-        F.count(F.lit(1)).cast("int").alias("k"),
-        F.sum("d1_g").cast("bigint").alias("s1"),
-        F.sum("d2_g").cast("decimal(38,0)").alias("s2"),
-        F.sum(
-            F.expr(
-                "CAST((CAST(d1_g AS DECIMAL(38,0)) * d1_g"
-                " - pmod(CAST(d1_g AS DECIMAL(38,0)) * d1_g,"
-                " CAST(n_g AS DECIMAL(38,0)))) / n_g AS DECIMAL(38,0))"
-            )
-        )
-        .cast("decimal(38,0)")
-        .alias("ssb_terms"),
-    )
+    tot = _k_group_sums(_floor_mean_centered(zg, "seg", "z"))
     fin = tot.select(
         "n",
         "k",
@@ -5273,19 +5236,53 @@ def eval_brown_forsythe_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("ssw_c2"),
     )
     return fin.select(
-        F.col("n").cast("bigint").alias("n_orders"),
-        F.col("k").cast("int").alias("k_groups"),
-        F.expr("CAST(n - k AS BIGINT)").alias("df_within"),
-        F.col("s1").cast("bigint").alias("s1_centered"),
-        F.expr(wsplit15_hi("s2")).alias("s2_hi15"),
-        F.expr(wsplit15_lo("s2")).alias("s2_lo15"),
-        F.expr(wsplit15_hi("ssb_terms")).alias("ssb_terms_hi15"),
-        F.expr(wsplit15_lo("ssb_terms")).alias("ssb_terms_lo15"),
+        *_k_group_report_head(),
         F.expr(wsplit15_hi("ssb_c2")).alias("ssb_z2_hi15"),
         F.expr(wsplit15_lo("ssb_c2")).alias("ssb_z2_lo15"),
         F.expr(wsplit15_hi("ssw_c2")).alias("ssw_z2_hi15"),
         F.expr(wsplit15_lo("ssw_c2")).alias("ssw_z2_lo15"),
         F.expr(_BF_F_EXPR).alias("f_bp"),
+    )
+
+
+def _two_segment_moments(
+    spark: SparkSession, sf_dir: str, seg_a: str, seg_b: str
+) -> DataFrame:
+    """The 1-row exact sufficient statistics of a two-segment cents
+    comparison: n_a, n_b, d1_a, d1_b (BIGINT) and d2_a, d2_b
+    (DECIMAL(38,0)), all on the shared global floor-mean centering."""
+    j = _two_segment_cents(spark, sf_dir, seg_a, seg_b)
+    g1 = j.groupBy("a", "cents").agg(F.count(F.lit(1)).alias("cnt"))
+    cen = _floor_mean_centered(g1, "a", "cents")
+    return cen.agg(
+        F.sum(F.when(F.col("a") == 1, F.col("cnt")).otherwise(0))
+        .cast("bigint")
+        .alias("n_a"),
+        F.sum(F.when(F.col("a") == 0, F.col("cnt")).otherwise(0))
+        .cast("bigint")
+        .alias("n_b"),
+        F.sum(F.when(F.col("a") == 1, F.col("cnt") * F.col("d")).otherwise(0))
+        .cast("bigint")
+        .alias("d1_a"),
+        F.sum(F.when(F.col("a") == 0, F.col("cnt") * F.col("d")).otherwise(0))
+        .cast("bigint")
+        .alias("d1_b"),
+        F.sum(
+            F.expr(
+                "CASE WHEN a = 1 THEN CAST(cnt AS DECIMAL(38,0)) * d * d"
+                " ELSE 0 END"
+            )
+        )
+        .cast("decimal(38,0)")
+        .alias("d2_a"),
+        F.sum(
+            F.expr(
+                "CASE WHEN a = 0 THEN CAST(cnt AS DECIMAL(38,0)) * d * d"
+                " ELSE 0 END"
+            )
+        )
+        .cast("decimal(38,0)")
+        .alias("d2_b"),
     )
 
 
@@ -5416,60 +5413,7 @@ def eval_welch_t_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpartitioned window on the domain-bounded grain, one 1-row
     conditional reduce — no joins after the collapse.
     """
-    j = (
-        load(spark, sf_dir, "orders")
-        .join(
-            load(spark, sf_dir, "customer").filter(
-                F.col("c_mktsegment").isin("BUILDING", "MACHINERY")
-            ),
-            F.col("c_custkey") == F.col("o_custkey"),
-        )
-        .select(
-            (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
-            F.when(F.col("c_mktsegment") == "BUILDING", 1).otherwise(0).alias("a"),
-        )
-    )
-    g1 = j.groupBy("a", "cents").agg(F.count(F.lit(1)).alias("cnt"))
-    wall = Window.partitionBy()
-    cen = g1.select(
-        "a",
-        "cents",
-        "cnt",
-        F.sum(F.col("cents") * F.col("cnt")).over(wall).alias("sall"),
-        F.sum("cnt").over(wall).alias("nall"),
-    ).withColumn("d", F.expr("cents - (sall DIV nall)"))
-    tot = cen.agg(
-        F.sum(F.when(F.col("a") == 1, F.col("cnt")).otherwise(0))
-        .cast("bigint")
-        .alias("n_a"),
-        F.sum(F.when(F.col("a") == 0, F.col("cnt")).otherwise(0))
-        .cast("bigint")
-        .alias("n_b"),
-        F.sum(F.when(F.col("a") == 1, F.col("cnt") * F.col("d")).otherwise(0))
-        .cast("bigint")
-        .alias("d1_a"),
-        F.sum(F.when(F.col("a") == 0, F.col("cnt") * F.col("d")).otherwise(0))
-        .cast("bigint")
-        .alias("d1_b"),
-        F.sum(
-            F.expr(
-                "CASE WHEN a = 1 THEN CAST(cnt AS DECIMAL(38,0)) * d * d"
-                " ELSE 0 END"
-            )
-        )
-        .cast("decimal(38,0)")
-        .alias("d2_a"),
-        F.sum(
-            F.expr(
-                "CASE WHEN a = 0 THEN CAST(cnt AS DECIMAL(38,0)) * d * d"
-                " ELSE 0 END"
-            )
-        )
-        .cast("decimal(38,0)")
-        .alias("d2_b"),
-    )
+    tot = _two_segment_moments(spark, sf_dir, "BUILDING", "MACHINERY")
     staged = tot.select(
         "n_a",
         "n_b",
@@ -5490,6 +5434,44 @@ def eval_welch_t_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_WELCH_T).alias("t_welch_e4"),
         F.expr(_WELCH_DF).alias("df_welch_e2"),
         F.expr(_WELCH_D).alias("cohens_d_e4"),
+    )
+
+
+def _priority_rank_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Blocked ranks on the month x priority design: per priority, the
+    half-unit average-rank sum r2_sum over the complete months (all
+    five priorities present) and the number of such blocks."""
+    cell = (
+        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
+        .groupBy(
+            F.date_trunc("month", F.col("o_orderdate")).alias("mon"),
+            F.col("o_orderpriority").alias("prio"),
+        )
+        .agg(
+            F.sum((F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("bigint"))
+            .cast("bigint")
+            .alias("v")
+        )
+    )
+    complete = (
+        cell.withColumn(
+            "n_prio", F.count(F.lit(1)).over(Window.partitionBy("mon"))
+        )
+        .filter(F.col("n_prio") == 5)
+        .drop("n_prio")
+    )
+    ranked = complete.select(
+        "mon",
+        "prio",
+        "v",
+        F.sum(F.lit(1)).over(Window.partitionBy("mon").orderBy("v")).alias("cum_incl"),
+        F.count(F.lit(1)).over(Window.partitionBy("mon", "v")).alias("t"),
+    )
+    return ranked.groupBy("prio").agg(
+        F.sum(2 * (F.col("cum_incl") - F.col("t")) + F.col("t") + 1)
+        .cast("bigint")
+        .alias("r2_sum"),
+        F.count(F.lit(1)).cast("bigint").alias("n_blocks"),
     )
 
 
@@ -5567,38 +5549,7 @@ def eval_friedman_blocked_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums), windows on the collapsed ~420-row grid, 5-row reduce —
     the fact scan is the only data-sized stage.
     """
-    cell = (
-        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
-        .groupBy(
-            F.date_trunc("month", F.col("o_orderdate")).alias("mon"),
-            F.col("o_orderpriority").alias("prio"),
-        )
-        .agg(
-            F.sum((F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("v")
-        )
-    )
-    complete = (
-        cell.withColumn(
-            "n_prio", F.count(F.lit(1)).over(Window.partitionBy("mon"))
-        )
-        .filter(F.col("n_prio") == 5)
-        .drop("n_prio")
-    )
-    ranked = complete.select(
-        "mon",
-        "prio",
-        "v",
-        F.sum(F.lit(1)).over(Window.partitionBy("mon").orderBy("v")).alias("cum_incl"),
-        F.count(F.lit(1)).over(Window.partitionBy("mon", "v")).alias("t"),
-    )
-    r2 = ranked.groupBy("prio").agg(
-        F.sum(2 * (F.col("cum_incl") - F.col("t")) + F.col("t") + 1)
-        .cast("bigint")
-        .alias("r2_sum"),
-        F.count(F.lit(1)).cast("bigint").alias("n_blocks"),
-    )
+    r2 = _priority_rank_sums(spark, sf_dir)
     tot = r2.agg(
         F.max("n_blocks").cast("bigint").alias("n"),
         F.count(F.lit(1)).cast("bigint").alias("k"),
@@ -6737,6 +6688,77 @@ _G_CAST_BLOCK = (
 )
 
 
+def _monthly_kcents(spark: SparkSession, sf_dir: str, *extra: Column) -> DataFrame:
+    """Monthly revenue on the integer month index t (months since
+    1992-01) as y = floor(cents / 1e5), plus the caller's `extra`
+    per-month aggregates."""
+    return (
+        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
+        .groupBy(
+            (
+                (F.year("o_orderdate") - 1992) * 12
+                + F.month("o_orderdate").cast("bigint")
+            ).alias("t")
+        )
+        .agg(
+            F.expr(
+                "CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(25,2)) * 100"
+                " AS BIGINT)) DIV 100000 AS BIGINT)"
+            ).alias("y"),
+            *extra,
+        )
+    )
+
+
+def _urgent_orders() -> Column:
+    """Per-month count of 1-URGENT orders, the regressor x."""
+    return (
+        F.sum(F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0))
+        .cast("bigint")
+        .alias("x")
+    )
+
+
+def _dickey_fuller_tau(
+    series: DataFrame, y: str, yl: str, crit_e4: int, verdict: str
+) -> DataFrame:
+    """The Dickey-Fuller regression leg over a (t, y) series: exact
+    lag-pair power sums, the tau statistic in 1e-4 units and the 0/1
+    `verdict` column for tau below the critical value `crit_e4`."""
+    lagged = series.select(
+        "t", y, F.lag(y).over(Window.orderBy("t")).alias(yl)
+    ).filter(F.col(yl).isNotNull())
+    sums = lagged.agg(
+        F.count(F.lit(1)).alias("m"),
+        F.sum(yl).cast("bigint").alias("syl"),
+        F.sum(F.col(yl) * F.col(yl)).cast("bigint").alias("ylyl"),
+        F.sum(F.col(y) - F.col(yl)).cast("bigint").alias("sdy"),
+        F.sum((F.col(y) - F.col(yl)) * F.col(yl))
+        .cast("bigint")
+        .alias("dyyl"),
+        F.sum((F.col(y) - F.col(yl)) * (F.col(y) - F.col(yl)))
+        .cast("bigint")
+        .alias("dydy"),
+    )
+    d = sums.selectExpr(
+        "m",
+        "CAST(m AS DOUBLE) AS md",
+        "CAST(syl AS DOUBLE) AS syl_d",
+        "CAST(ylyl AS DOUBLE) AS ylyl_d",
+        "CAST(sdy AS DOUBLE) AS sdy_d",
+        "CAST(dyyl AS DOUBLE) AS dyyl_d",
+        "CAST(dydy AS DOUBLE) AS dydy_d",
+    )
+    return d.select(
+        F.col("m").cast("bigint").alias("n_pairs"),
+        F.expr(f"CAST({_DF_T_EXPR} AS BIGINT)").alias("tau_e4"),
+        F.expr(
+            f"CAST(CASE WHEN {_DF_T_EXPR} < {crit_e4}"
+            " THEN 1 ELSE 0 END AS INT)"
+        ).alias(verdict),
+    )
+
+
 @query(
     "forecast_granger_urgent_revenue",
     oracle=f"""
@@ -6798,26 +6820,7 @@ def forecast_granger_urgent_revenue(spark: SparkSession, sf_dir: str) -> DataFra
     quantizer). Scale: one month rollup; the test runs on 83 lagged
     rows and ten scalar sums.
     """
-    months = (
-        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
-        .groupBy(
-            (
-                (F.year("o_orderdate") - 1992) * 12
-                + F.month("o_orderdate").cast("bigint")
-            ).alias("t")
-        )
-        .agg(
-            F.expr(
-                "CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(25,2)) * 100"
-                " AS BIGINT)) DIV 100000 AS BIGINT)"
-            ).alias("y"),
-            F.sum(
-                F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("x"),
-        )
-    )
+    months = _monthly_kcents(spark, sf_dir, _urgent_orders())
     w = Window.orderBy("t")
     lagged = months.select(
         "t",
@@ -6914,52 +6917,9 @@ def forecast_dickey_fuller_unit_root(spark: SparkSession, sf_dir: str) -> DataFr
     correctly rounded), floor e4 reporting, integer critical-value
     verdict. Scale: month rollup + 83 lagged rows + six scalar sums.
     """
-    months = (
-        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
-        .groupBy(
-            (
-                (F.year("o_orderdate") - 1992) * 12
-                + F.month("o_orderdate").cast("bigint")
-            ).alias("t")
-        )
-        .agg(
-            F.expr(
-                "CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(25,2)) * 100"
-                " AS BIGINT)) DIV 100000 AS BIGINT)"
-            ).alias("y")
-        )
-    )
-    lagged = months.select(
-        "t", "y", F.lag("y").over(Window.orderBy("t")).alias("yl")
-    ).filter(F.col("yl").isNotNull())
-    sums = lagged.agg(
-        F.count(F.lit(1)).alias("m"),
-        F.sum("yl").cast("bigint").alias("syl"),
-        F.sum(F.col("yl") * F.col("yl")).cast("bigint").alias("ylyl"),
-        F.sum(F.col("y") - F.col("yl")).cast("bigint").alias("sdy"),
-        F.sum((F.col("y") - F.col("yl")) * F.col("yl"))
-        .cast("bigint")
-        .alias("dyyl"),
-        F.sum((F.col("y") - F.col("yl")) * (F.col("y") - F.col("yl")))
-        .cast("bigint")
-        .alias("dydy"),
-    )
-    d = sums.selectExpr(
-        "m",
-        "CAST(m AS DOUBLE) AS md",
-        "CAST(syl AS DOUBLE) AS syl_d",
-        "CAST(ylyl AS DOUBLE) AS ylyl_d",
-        "CAST(sdy AS DOUBLE) AS sdy_d",
-        "CAST(dyyl AS DOUBLE) AS dyyl_d",
-        "CAST(dydy AS DOUBLE) AS dydy_d",
-    )
-    return d.select(
-        F.col("m").cast("bigint").alias("n_pairs"),
-        F.expr(f"CAST({_DF_T_EXPR} AS BIGINT)").alias("tau_e4"),
-        F.expr(
-            f"CAST(CASE WHEN {_DF_T_EXPR} < {DF_CRIT_CONST_5PCT_E4}"
-            " THEN 1 ELSE 0 END AS INT)"
-        ).alias("stationary_5pct"),
+    months = _monthly_kcents(spark, sf_dir)
+    return _dickey_fuller_tau(
+        months, "y", "yl", DF_CRIT_CONST_5PCT_E4, "stationary_5pct"
     )
 
 
@@ -7048,26 +7008,7 @@ def forecast_engle_granger_cointegration(
     shared-text determinant tree verbatim. Scale: month rollup plus
     ~84-row arithmetic.
     """
-    months = (
-        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
-        .groupBy(
-            (
-                (F.year("o_orderdate") - 1992) * 12
-                + F.month("o_orderdate").cast("bigint")
-            ).alias("t")
-        )
-        .agg(
-            F.expr(
-                "CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(25,2)) * 100"
-                " AS BIGINT)) DIV 100000 AS BIGINT)"
-            ).alias("y"),
-            F.sum(
-                F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("x"),
-        )
-    )
+    months = _monthly_kcents(spark, sf_dir, _urgent_orders())
     s1 = months.agg(
         F.count(F.lit(1)).alias("m"),
         F.sum("x").cast("bigint").alias("sx"),
@@ -7090,38 +7031,7 @@ def forecast_engle_granger_cointegration(
     e2 = resid.crossJoin(F.broadcast(q)).select(
         "t", F.expr("ed DIV scale").alias("e")
     )
-    lagged = e2.select(
-        "t", "e", F.lag("e").over(Window.orderBy("t")).alias("el")
-    ).filter(F.col("el").isNotNull())
-    sums = lagged.agg(
-        F.count(F.lit(1)).alias("m"),
-        F.sum("el").cast("bigint").alias("syl"),
-        F.sum(F.col("el") * F.col("el")).cast("bigint").alias("ylyl"),
-        F.sum(F.col("e") - F.col("el")).cast("bigint").alias("sdy"),
-        F.sum((F.col("e") - F.col("el")) * F.col("el"))
-        .cast("bigint")
-        .alias("dyyl"),
-        F.sum((F.col("e") - F.col("el")) * (F.col("e") - F.col("el")))
-        .cast("bigint")
-        .alias("dydy"),
-    )
-    d = sums.selectExpr(
-        "m",
-        "CAST(m AS DOUBLE) AS md",
-        "CAST(syl AS DOUBLE) AS syl_d",
-        "CAST(ylyl AS DOUBLE) AS ylyl_d",
-        "CAST(sdy AS DOUBLE) AS sdy_d",
-        "CAST(dyyl AS DOUBLE) AS dyyl_d",
-        "CAST(dydy AS DOUBLE) AS dydy_d",
-    )
-    return d.select(
-        F.col("m").cast("bigint").alias("n_pairs"),
-        F.expr(f"CAST({_DF_T_EXPR} AS BIGINT)").alias("tau_e4"),
-        F.expr(
-            f"CAST(CASE WHEN {_DF_T_EXPR} < {EG_CRIT_5PCT_E4}"
-            " THEN 1 ELSE 0 END AS INT)"
-        ).alias("cointegrated_5pct"),
-    )
+    return _dickey_fuller_tau(e2, "e", "el", EG_CRIT_5PCT_E4, "cointegrated_5pct")
 
 
 import math as _math
@@ -7372,6 +7282,35 @@ def bandit_ucb1_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 LOGRANK_CHI2_1DF_5PCT_E4 = 38415  # chi-square(1) 5% critical value x1e4
 
 
+def _signup_anchor(ev: DataFrame) -> DataFrame:
+    """Each user's first signup time t0."""
+    return (
+        ev.filter(F.col("event_type") == "signup")
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("t0"))
+    )
+
+
+def _signup_outcomes(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Per user of the events x signup-anchor join (either side first):
+    the first purchase after signup (tp, NULL when none), the last
+    event (tlast) and t0."""
+    return (
+        left.join(right, "user_id")
+        .groupBy("user_id")
+        .agg(
+            F.min(
+                F.when(
+                    (F.col("event_type") == "purchase") & (F.col("ts") > F.col("t0")),
+                    F.col("ts"),
+                )
+            ).alias("tp"),
+            F.max("ts").alias("tlast"),
+            F.any_value("t0").alias("t0"),
+        )
+    )
+
+
 @query(
     "survival_logrank_test",
     oracle=f"""
@@ -7485,25 +7424,8 @@ def survival_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ts IS NOT NULL at entry (r12): the KM all-null-anchor seam —
     # NULL-duration spells order differently per engine
     ev = load(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
-    anchor = (
-        ev.filter(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t0"))
-    )
-    outcome = (
-        anchor.join(ev, "user_id")
-        .groupBy("user_id")
-        .agg(
-            F.min(
-                F.when(
-                    (F.col("event_type") == "purchase") & (F.col("ts") > F.col("t0")),
-                    F.col("ts"),
-                )
-            ).alias("tp"),
-            F.max("ts").alias("tlast"),
-            F.any_value("t0").alias("t0"),
-        )
-    )
+    anchor = _signup_anchor(ev)
+    outcome = _signup_outcomes(anchor, ev)
     spells = outcome.select(
         F.when(hash_key("lr:", F.col("user_id")) < "80000000", 1)
         .otherwise(0)
@@ -7809,14 +7731,7 @@ def ab_power_mde_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     g1 = j.groupBy("seg", "cents").agg(F.count(F.lit(1)).alias("cnt"))
-    wseg = Window.partitionBy("seg")
-    cen = g1.select(
-        "seg",
-        "cents",
-        "cnt",
-        F.sum(F.col("cents") * F.col("cnt")).over(wseg).alias("sall"),
-        F.sum("cnt").over(wseg).alias("nall"),
-    ).withColumn("d", F.expr("cents - (sall DIV nall)"))
+    cen = _floor_mean_centered(g1, "seg", "cents", "seg")
     stats = cen.groupBy("seg").agg(
         F.sum("cnt").cast("bigint").alias("n"),
         F.sum(F.col("cnt") * F.col("d")).cast("bigint").alias("d1"),
@@ -7916,38 +7831,7 @@ def eval_page_trend_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB plan: identical to Friedman — one month+priority map-side
     collapse, windows on the ~420-row grid, a 5-row reduce.
     """
-    cell = (
-        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
-        .groupBy(
-            F.date_trunc("month", F.col("o_orderdate")).alias("mon"),
-            F.col("o_orderpriority").alias("prio"),
-        )
-        .agg(
-            F.sum((F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("v")
-        )
-    )
-    complete = (
-        cell.withColumn(
-            "n_prio", F.count(F.lit(1)).over(Window.partitionBy("mon"))
-        )
-        .filter(F.col("n_prio") == 5)
-        .drop("n_prio")
-    )
-    ranked = complete.select(
-        "mon",
-        "prio",
-        "v",
-        F.sum(F.lit(1)).over(Window.partitionBy("mon").orderBy("v")).alias("cum_incl"),
-        F.count(F.lit(1)).over(Window.partitionBy("mon", "v")).alias("t"),
-    )
-    r2 = ranked.groupBy("prio").agg(
-        F.sum(2 * (F.col("cum_incl") - F.col("t")) + F.col("t") + 1)
-        .cast("bigint")
-        .alias("r2_sum"),
-        F.count(F.lit(1)).cast("bigint").alias("n_blocks"),
-    ).select(
+    r2 = _priority_rank_sums(spark, sf_dir).select(
         "prio",
         F.row_number().over(Window.orderBy("prio")).cast("bigint").alias("w"),
         "r2_sum",
@@ -8305,25 +8189,8 @@ def survival_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # ts IS NOT NULL at entry (r12): the KM all-null-anchor seam
     ev = load(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
-    anchor = (
-        ev.filter(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t0"))
-    )
-    outcome = (
-        ev.join(anchor, "user_id")
-        .groupBy("user_id")
-        .agg(
-            F.min(
-                F.when(
-                    (F.col("event_type") == "purchase") & (F.col("ts") > F.col("t0")),
-                    F.col("ts"),
-                )
-            ).alias("tp"),
-            F.max("ts").alias("tlast"),
-            F.any_value(F.col("t0")).alias("t0"),
-        )
-    )
+    anchor = _signup_anchor(ev)
+    outcome = _signup_outcomes(ev, anchor)
     spells = outcome.select(
         F.when(F.col("tp").isNotNull(), 1).otherwise(0).alias("died"),
         F.when(
@@ -8915,60 +8782,7 @@ def ab_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     literals. 100 TB plan: identical to Welch — one keyed join, one
     collapse, one 1-row reduce.
     """
-    j = (
-        load(spark, sf_dir, "orders")
-        .join(
-            load(spark, sf_dir, "customer").filter(
-                F.col("c_mktsegment").isin("AUTOMOBILE", "HOUSEHOLD")
-            ),
-            F.col("c_custkey") == F.col("o_custkey"),
-        )
-        .select(
-            (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
-            F.when(F.col("c_mktsegment") == "AUTOMOBILE", 1).otherwise(0).alias("a"),
-        )
-    )
-    g1 = j.groupBy("a", "cents").agg(F.count(F.lit(1)).alias("cnt"))
-    wall = Window.partitionBy()
-    cen = g1.select(
-        "a",
-        "cents",
-        "cnt",
-        F.sum(F.col("cents") * F.col("cnt")).over(wall).alias("sall"),
-        F.sum("cnt").over(wall).alias("nall"),
-    ).withColumn("d", F.expr("cents - (sall DIV nall)"))
-    tot = cen.agg(
-        F.sum(F.when(F.col("a") == 1, F.col("cnt")).otherwise(0))
-        .cast("bigint")
-        .alias("n_a"),
-        F.sum(F.when(F.col("a") == 0, F.col("cnt")).otherwise(0))
-        .cast("bigint")
-        .alias("n_b"),
-        F.sum(F.when(F.col("a") == 1, F.col("cnt") * F.col("d")).otherwise(0))
-        .cast("bigint")
-        .alias("d1_a"),
-        F.sum(F.when(F.col("a") == 0, F.col("cnt") * F.col("d")).otherwise(0))
-        .cast("bigint")
-        .alias("d1_b"),
-        F.sum(
-            F.expr(
-                "CASE WHEN a = 1 THEN CAST(cnt AS DECIMAL(38,0)) * d * d"
-                " ELSE 0 END"
-            )
-        )
-        .cast("decimal(38,0)")
-        .alias("d2_a"),
-        F.sum(
-            F.expr(
-                "CASE WHEN a = 0 THEN CAST(cnt AS DECIMAL(38,0)) * d * d"
-                " ELSE 0 END"
-            )
-        )
-        .cast("decimal(38,0)")
-        .alias("d2_b"),
-    )
+    tot = _two_segment_moments(spark, sf_dir, "AUTOMOBILE", "HOUSEHOLD")
     staged = tot.select(
         "n_a",
         "n_b",

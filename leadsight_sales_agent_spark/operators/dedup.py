@@ -952,6 +952,24 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 PPJOIN_BOUND = 300  # oracle-side quadratic verify bound (anchor regime)
 
 
+def _rarity_ranked(tok: DataFrame) -> DataFrame:
+    """Each document's distinct tokens ranked rn by global rarity (df
+    asc, token asc: one total order for the whole corpus), with the
+    document's token count n_tok — the prefix filter's order."""
+    sizes = tok.groupBy("doc_id").agg(F.count("*").alias("n_tok"))
+    df_counts = tok.groupBy("token").agg(F.count("*").alias("df"))
+    return (
+        tok.join(F.broadcast(df_counts), "token")
+        .withColumn(
+            "rn",
+            F.row_number().over(
+                Window.partitionBy("doc_id").orderBy(F.asc("df"), F.asc("token"))
+            ),
+        )
+        .join(F.broadcast(sizes), "doc_id")
+    )
+
+
 @query(
     "neardup_prefix_filter_join",
     oracle="""
@@ -1013,18 +1031,7 @@ def neardup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ckpt-grain: slim-exception — 2-col doc x distinct-token keys shared by 5 consumers; kept after the r11 audit
         .localCheckpoint(eager=False)
     )
-    sizes = tok.groupBy("doc_id").agg(F.count("*").alias("n_tok"))
-    df_counts = tok.groupBy("token").agg(F.count("*").alias("df"))
-    ranked = (
-        tok.join(F.broadcast(df_counts), "token")
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("doc_id").orderBy(F.asc("df"), F.asc("token"))
-            ),
-        )
-        .join(F.broadcast(sizes), "doc_id")
-    )
+    ranked = _rarity_ranked(tok)
     prefix = (
         ranked.filter(F.col("rn") <= F.floor(F.col("n_tok") / 2) + 1)
         .select("doc_id", "token", "n_tok")
@@ -1135,18 +1142,7 @@ def neardup_incremental_prefix_join(spark: SparkSession, sf_dir: str) -> DataFra
         # ckpt-grain: slim-exception — 2-col doc x distinct-token keys shared across batch/corpus legs; kept after the r11 audit
         .localCheckpoint(eager=False)
     )
-    sizes = tok.groupBy("doc_id").agg(F.count("*").alias("n_tok"))
-    df_counts = tok.groupBy("token").agg(F.count("*").alias("df"))
-    ranked = (
-        tok.join(F.broadcast(df_counts), "token")
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("doc_id").orderBy(F.asc("df"), F.asc("token"))
-            ),
-        )
-        .join(F.broadcast(sizes), "doc_id")
-    )
+    ranked = _rarity_ranked(tok)
     prefix = (
         ranked.filter(F.col("rn") <= F.floor(F.col("n_tok") / 5) + 1)
         .select("doc_id", "source", "token", "n_tok")

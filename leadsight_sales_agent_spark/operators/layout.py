@@ -863,7 +863,6 @@ def shard_consistent_hash_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-BLOOM_TARGET_FPP_INV = 100  # target false-positive rate 1/100
 # Optimal sizing trees over the exact distinct count n (shared
 # VERBATIM): bits m = ceil(-n ln p / (ln 2)^2), hashes k = round(ln(1/p)
 # / ln 2) -- with p = 1/100 a spec constant, the ln terms are single
@@ -984,9 +983,6 @@ def storage_bloom_sizing_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("bytes_per_100rows"),
         F.expr(_BLOOM_ACTUAL_FPP_E6).alias("actual_fpp_e6"),
     ).orderBy("column_name")
-
-
-HILBERT_BITS = 8  # 256 x 256 grid, d in [0, 65536)
 
 
 def _hilbert_oracle() -> str:

@@ -25,11 +25,6 @@ from pyspark.sql import functions as F
 from leadsight_sales_agent_spark.registry import query
 from leadsight_sales_agent_spark.sources.catalog import load
 
-MEDIA_SCHEMA = (
-    "doc_id BIGINT, media_type STRING, payload BINARY, "
-    "width INT, height INT, n_frames INT"
-)
-
 
 def media_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesize a media table: documents' text bytes as opaque payloads
@@ -339,6 +334,34 @@ def decode_bmp_rle8(payload: bytes) -> tuple[int, int, list[list[tuple[int, int,
     return width, height, rows
 
 
+def _netpbm_header(payload: bytes, magic: bytes, name: str) -> tuple[int, int, int]:
+    """Parse a binary netpbm header (magic, then width, height and
+    maxval as whitespace-separated ASCII tokens, '#' comment lines
+    allowed): returns (width, height, offset of the raw body)."""
+    if payload[:2] != magic:
+        raise ValueError(f"not a {magic.decode()} {name}")
+    pos, toks = 2, []
+    while len(toks) < 3:
+        if pos >= len(payload):
+            raise ValueError(f"truncated {name} header")
+        c = payload[pos : pos + 1]
+        if c == b"#":  # comment to end-of-line
+            while pos < len(payload) and payload[pos : pos + 1] != b"\n":
+                pos += 1
+        elif c.isspace():
+            pos += 1
+        else:
+            start = pos
+            while pos < len(payload) and not payload[pos : pos + 1].isspace():
+                pos += 1
+            toks.append(payload[start:pos])
+    pos += 1  # single whitespace after maxval, then raw bytes
+    width, height, maxval = (int(t) for t in toks)
+    if maxval != 255:
+        raise ValueError(f"unsupported {name} maxval")
+    return width, height, pos
+
+
 def encode_ppm(width: int, height: int, pixel) -> bytes:
     """Minimal binary PPM (P6, maxval 255) writer: ASCII header
     "P6\\n{w} {h}\\n255\\n" then raw RGB triplets row-major, TOP row
@@ -358,27 +381,7 @@ def decode_ppm(payload: bytes) -> tuple[int, int, list[list[tuple[int, int, int]
     rows[0] the TOP row and each pixel (r, g, b). Handles the
     whitespace-separated header tokens (incl. '#' comment lines per
     the netpbm spec) and validates magic, maxval, and payload length."""
-    if payload[:2] != b"P6":
-        raise ValueError("not a P6 PPM")
-    pos, toks = 2, []
-    while len(toks) < 3:
-        if pos >= len(payload):
-            raise ValueError("truncated PPM header")
-        c = payload[pos : pos + 1]
-        if c == b"#":  # comment to end-of-line
-            while pos < len(payload) and payload[pos : pos + 1] != b"\n":
-                pos += 1
-        elif c.isspace():
-            pos += 1
-        else:
-            start = pos
-            while pos < len(payload) and not payload[pos : pos + 1].isspace():
-                pos += 1
-            toks.append(payload[start:pos])
-    pos += 1  # single whitespace after maxval, then raw bytes
-    width, height, maxval = (int(t) for t in toks)
-    if maxval != 255:
-        raise ValueError("unsupported PPM maxval")
+    width, height, pos = _netpbm_header(payload, b"P6", "PPM")
     if len(payload) < pos + 3 * width * height:
         raise ValueError("truncated PPM")
     rows = []
@@ -408,27 +411,7 @@ def decode_pgm(payload: bytes) -> tuple[int, int, list[list[int]]]:
     rows[0] the TOP row and each pixel a single 0-255 gray int —
     the grayscale sibling of decode_ppm with the same netpbm header
     grammar ('#' comments, arbitrary whitespace) but a 1-byte body."""
-    if payload[:2] != b"P5":
-        raise ValueError("not a P5 PGM")
-    pos, toks = 2, []
-    while len(toks) < 3:
-        if pos >= len(payload):
-            raise ValueError("truncated PGM header")
-        c = payload[pos : pos + 1]
-        if c == b"#":  # comment to end-of-line
-            while pos < len(payload) and payload[pos : pos + 1] != b"\n":
-                pos += 1
-        elif c.isspace():
-            pos += 1
-        else:
-            start = pos
-            while pos < len(payload) and not payload[pos : pos + 1].isspace():
-                pos += 1
-            toks.append(payload[start:pos])
-    pos += 1  # single whitespace after maxval, then raw bytes
-    width, height, maxval = (int(t) for t in toks)
-    if maxval != 255:
-        raise ValueError("unsupported PGM maxval")
+    width, height, pos = _netpbm_header(payload, b"P5", "PGM")
     if len(payload) < pos + width * height:
         raise ValueError("truncated PGM")
     return (
@@ -478,6 +461,37 @@ def multimodal_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.avg(F.get(F.col("feature"), 0)), 6).alias("avg_f0"),
         F.round(F.avg("n_bytes"), 2).alias("avg_bytes"),
     )
+
+
+_RGB_STATS_SCHEMA = (
+    "doc_id BIGINT, width INT, height INT, file_bytes BIGINT, "
+    "sum_r BIGINT, sum_g BIGINT, sum_b BIGINT"
+)
+
+
+def _channel_sums(rows: list[list[tuple[int, int, int]]]) -> tuple[int, int, int]:
+    """Per-channel sums of decoded (r, g, b) pixel rows."""
+    return tuple(sum(p[c] for row in rows for p in row) for c in range(3))
+
+
+def _codec_round_trip(
+    spark: SparkSession, sf_dir: str, mod: int, rem: int, out_schema: str, record
+) -> DataFrame:
+    """One Arrow-batched Python stage over the documents with
+    doc_id % mod == rem: `record(doc_id)` encodes that doc's planted
+    image, decodes it and returns one out_schema row of stats."""
+    img = (
+        load(spark, sf_dir, "documents")
+        .filter((F.col("doc_id") % mod) == rem)
+        .select("doc_id")
+    )
+    columns = [f.split()[0] for f in out_schema.split(", ")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame([record(int(d)) for d in pdf["doc_id"]], columns=columns)
+
+    return img.mapInPandas(run, out_schema)
 
 
 @query(
@@ -536,51 +550,21 @@ def multimodal_decode_bmp_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     lateral pixel grid stays small at test SFs; a real corpus carries
     real payloads through the identical plumbing.
     """
-    img = (
-        load(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 3) == 0)
-        .select("doc_id")
-    )
+    def record(d: int) -> tuple:
+        w, h = d % 24 + 4, d % 18 + 4
+        bmp = encode_bmp(
+            w,
+            h,
+            lambda x, y: (
+                (d + 7 * x + 13 * y) % 256,
+                (2 * d + 5 * x + 11 * y) % 256,
+                (3 * d + 3 * x + 17 * y) % 256,
+            ),
+        )
+        dw, dh, rows = decode_bmp(bmp)
+        return (d, dw, dh, len(bmp), *_channel_sums(rows))
 
-    out_schema = (
-        "doc_id BIGINT, width INT, height INT, file_bytes BIGINT, "
-        "sum_r BIGINT, sum_g BIGINT, sum_b BIGINT"
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = d % 24 + 4, d % 18 + 4
-                bmp = encode_bmp(
-                    w,
-                    h,
-                    lambda x, y: (
-                        (d + 7 * x + 13 * y) % 256,
-                        (2 * d + 5 * x + 11 * y) % 256,
-                        (3 * d + 3 * x + 17 * y) % 256,
-                    ),
-                )
-                dw, dh, rows = decode_bmp(bmp)
-                sr = sum(p[0] for row in rows for p in row)
-                sg = sum(p[1] for row in rows for p in row)
-                sb = sum(p[2] for row in rows for p in row)
-                recs.append((d, dw, dh, len(bmp), sr, sg, sb))
-            yield pd.DataFrame(
-                recs,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "file_bytes",
-                    "sum_r",
-                    "sum_g",
-                    "sum_b",
-                ],
-            )
-
-    return img.mapInPandas(run, out_schema)
+    return _codec_round_trip(spark, sf_dir, 3, 0, _RGB_STATS_SCHEMA, record)
 
 
 @query(
@@ -642,51 +626,21 @@ def multimodal_decode_ppm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python stage over the image subset, then pure JVM; payload bytes
     never leave the executors.
     """
-    img = (
-        load(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 3) == 1)
-        .select("doc_id")
-    )
+    def record(d: int) -> tuple:
+        w, h = d % 21 + 3, d % 15 + 3
+        ppm = encode_ppm(
+            w,
+            h,
+            lambda x, y: (
+                (5 * d + 11 * x + 19 * y) % 256,
+                (7 * d + 3 * x + 23 * y) % 256,
+                (11 * d + 13 * x + 2 * y) % 256,
+            ),
+        )
+        dw, dh, rows = decode_image_stub(ppm)
+        return (d, dw, dh, len(ppm), *_channel_sums(rows))
 
-    out_schema = (
-        "doc_id BIGINT, width INT, height INT, file_bytes BIGINT, "
-        "sum_r BIGINT, sum_g BIGINT, sum_b BIGINT"
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = d % 21 + 3, d % 15 + 3
-                ppm = encode_ppm(
-                    w,
-                    h,
-                    lambda x, y: (
-                        (5 * d + 11 * x + 19 * y) % 256,
-                        (7 * d + 3 * x + 23 * y) % 256,
-                        (11 * d + 13 * x + 2 * y) % 256,
-                    ),
-                )
-                dw, dh, rows = decode_image_stub(ppm)
-                sr = sum(p[0] for row in rows for p in row)
-                sg = sum(p[1] for row in rows for p in row)
-                sb = sum(p[2] for row in rows for p in row)
-                recs.append((d, dw, dh, len(ppm), sr, sg, sb))
-            yield pd.DataFrame(
-                recs,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "file_bytes",
-                    "sum_r",
-                    "sum_g",
-                    "sum_b",
-                ],
-            )
-
-    return img.mapInPandas(run, out_schema)
+    return _codec_round_trip(spark, sf_dir, 3, 1, _RGB_STATS_SCHEMA, record)
 
 
 @query(
@@ -742,34 +696,20 @@ def multimodal_decode_pgm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python stage over the image subset, then pure JVM; payload bytes
     never leave the executors.
     """
-    img = (
-        load(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 3) == 2)
-        .select("doc_id")
+    def record(d: int) -> tuple:
+        w, h = d % 19 + 3, d % 11 + 3
+        pgm = encode_pgm(w, h, lambda x, y: (3 * d + 7 * x + 5 * y) % 256)
+        dw, dh, rows = decode_image_stub(pgm)
+        return (d, dw, dh, len(pgm), sum(g for row in rows for g in row))
+
+    return _codec_round_trip(
+        spark,
+        sf_dir,
+        3,
+        2,
+        "doc_id BIGINT, width INT, height INT, file_bytes BIGINT, sum_gray BIGINT",
+        record,
     )
-
-    out_schema = (
-        "doc_id BIGINT, width INT, height INT, file_bytes BIGINT, sum_gray BIGINT"
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = d % 19 + 3, d % 11 + 3
-                pgm = encode_pgm(
-                    w, h, lambda x, y: (3 * d + 7 * x + 5 * y) % 256
-                )
-                dw, dh, rows = decode_image_stub(pgm)
-                sg = sum(g for row in rows for g in row)
-                recs.append((d, dw, dh, len(pgm), sg))
-            yield pd.DataFrame(
-                recs,
-                columns=["doc_id", "width", "height", "file_bytes", "sum_gray"],
-            )
-
-    return img.mapInPandas(run, out_schema)
 
 
 @query(
@@ -846,52 +786,28 @@ def multimodal_decode_rle_bmp_stats(spark: SparkSession, sf_dir: str) -> DataFra
     Python stage over the image subset, then pure JVM; payload bytes
     never leave the executors.
     """
-    img = (
-        load(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 5) == 0)
-        .select("doc_id")
-    )
-
-    out_schema = (
-        "doc_id BIGINT, width INT, height INT, file_bytes BIGINT, "
-        "rle_bytes BIGINT, sum_r BIGINT, sum_g BIGINT, sum_b BIGINT"
-    )
     palette = [(i, (3 * i) % 256, (7 * i) % 256) for i in range(256)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = d % 22 + 4, d % 13 + 3
-                n1 = (w + 1) // 2
+    def record(d: int) -> tuple:
+        w, h = d % 22 + 4, d % 13 + 3
+        n1 = (w + 1) // 2
 
-                def idx(x, y, d=d, n1=n1):
-                    return (d + 11 * y + (0 if x < n1 else 5)) % 256
+        def idx(x, y):
+            return (d + 11 * y + (0 if x < n1 else 5)) % 256
 
-                bmp = encode_bmp_rle8(w, h, idx, palette, lambda y: y % 3 == 0)
-                dw, dh, rows = decode_image_stub(bmp)
-                sr = sum(p[0] for row in rows for p in row)
-                sg = sum(p[1] for row in rows for p in row)
-                sb = sum(p[2] for row in rows for p in row)
-                recs.append(
-                    (d, dw, dh, len(bmp), len(bmp) - RLE8_DATA_OFF, sr, sg, sb)
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "file_bytes",
-                    "rle_bytes",
-                    "sum_r",
-                    "sum_g",
-                    "sum_b",
-                ],
-            )
+        bmp = encode_bmp_rle8(w, h, idx, palette, lambda y: y % 3 == 0)
+        dw, dh, rows = decode_image_stub(bmp)
+        return (d, dw, dh, len(bmp), len(bmp) - RLE8_DATA_OFF, *_channel_sums(rows))
 
-    return img.mapInPandas(run, out_schema)
+    return _codec_round_trip(
+        spark,
+        sf_dir,
+        5,
+        0,
+        "doc_id BIGINT, width INT, height INT, file_bytes BIGINT, "
+        "rle_bytes BIGINT, sum_r BIGINT, sum_g BIGINT, sum_b BIGINT",
+        record,
+    )
 
 
 FRAME_SAMPLE_STRIDE = 10  # keep every 10th frame

@@ -4585,7 +4585,6 @@ def tpcds_q59_week_over_week_sales(spark: SparkSession, sf_dir: str) -> DataFram
 # --- Bloom-filter join pruning audit -------------------------------------
 
 BLOOM_JOIN_M = 1 << 20  # bit-space size; fixed so the audit is deterministic
-_BJ_POS1 = None  # filled below (needs sql_hex_to_long at def time)
 
 
 def _bj_pos(salt: str, key: str) -> str:

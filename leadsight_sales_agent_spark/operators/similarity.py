@@ -295,19 +295,12 @@ N_CELLS = 16  # coarse quantizer size
 N_PROBE = 3  # cells searched per query
 
 
-@query("knn_cosine_ivf")  # cell pruning may miss true neighbors → rows-only
-def knn_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN via an IVF-style coarse quantizer: N_CELLS fixed centroids
-    (deterministic corpus samples — at scale, k-means centroids), every
-    corpus vector assigned to its max-cosine cell, each query probing
-    its N_PROBE best cells, exact cosine re-rank inside the probed set.
-
-    Scale shape: the corpus is written hash-partitioned (or bucketed) by
-    ``cell`` so one probe touches ~corpus/N_CELLS rows on a few
-    partitions; centroids are a driver-side constant (k vectors, bytes)
-    baked into the plan as literals — never a join. Assignment is one
-    narrow map over the corpus; only the probed cells shuffle.
-    """
+def _ivf_corpus_and_queries(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The IVF coarse quantizer's two sides: the corpus with its best
+    cell (neighbor_id, ce, cell, cn) and the queries exploded over their
+    N_PROBE best cells (query_id, qe, cell, qn)."""
     emb = load(spark, sf_dir, "embeddings").filter(NONZERO())
 
     # deterministic "training": the first N_CELLS corpus vectors ≥ id 100
@@ -358,7 +351,12 @@ def knn_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("qn", l2_norm(F.col("qe")))
     )
+    return corpus, queries
 
+
+def _ivf_rerank(queries: DataFrame, corpus: DataFrame) -> DataFrame:
+    """Exact cosine re-rank of each query's candidates in its probed
+    cells: the TOP_K neighbors per query, best first."""
     cos = dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
@@ -370,6 +368,23 @@ def knn_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rank") <= TOP_K)
         .select("query_id", "neighbor_id", F.round("cos", 4).alias("cosine"), "rank")
     )
+
+
+@query("knn_cosine_ivf")  # cell pruning may miss true neighbors → rows-only
+def knn_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ANN via an IVF-style coarse quantizer: N_CELLS fixed centroids
+    (deterministic corpus samples — at scale, k-means centroids), every
+    corpus vector assigned to its max-cosine cell, each query probing
+    its N_PROBE best cells, exact cosine re-rank inside the probed set.
+
+    Scale shape: the corpus is written hash-partitioned (or bucketed) by
+    ``cell`` so one probe touches ~corpus/N_CELLS rows on a few
+    partitions; centroids are a driver-side constant (k vectors, bytes)
+    baked into the plan as literals — never a join. Assignment is one
+    narrow map over the corpus; only the probed cells shuffle.
+    """
+    corpus, queries = _ivf_corpus_and_queries(spark, sf_dir)
+    return _ivf_rerank(queries, corpus)
 
 
 def _staged_cell_corpus(spark, sf_dir: str, corpus) -> str:
@@ -410,61 +425,11 @@ def knn_cosine_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is exactly the layout an IVF index service maintains: assign
     once at ingest, prune at query time.
     """
-    emb = load(spark, sf_dir, "embeddings").filter(NONZERO())
-    cents = (
-        emb.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 100 + N_CELLS))
-        .orderBy("vec_id")
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    matrix = F.lit(
-        [[float(x) for x in r["embedding"]] for r in cents]
-    ).cast("array<array<double>>")
-    norms = F.lit(
-        [sum(float(x) * float(x) for x in r["embedding"]) ** 0.5 for r in cents]
-    ).cast("array<double>")
-    cell_idx = F.sequence(F.lit(0), F.lit(N_CELLS - 1))
-
-    def cell_scores(vec: Column) -> Column:
-        return F.array_sort(
-            F.zip_with(
-                matrix,
-                cell_idx,
-                lambda c, i: F.struct(
-                    (-dot(vec, c) / (l2_norm(vec) * F.get(norms, i))).alias("neg_cos"),
-                    i.cast("int").alias("cell"),
-                ),
-            )
-        )
-
-    corpus = (
-        emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce"))
-        .withColumn("cell", F.get(cell_scores(F.col("ce")), 0)["cell"])
-        .withColumn("cn", l2_norm(F.col("ce")))
-    )
+    corpus, queries = _ivf_corpus_and_queries(spark, sf_dir)
     staged = spark.read.schema(corpus.schema).parquet(
         _staged_cell_corpus(spark, sf_dir, corpus)
     )
-
-    queries = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"))
-        .withColumn(
-            "cell", F.explode(F.slice(cell_scores(F.col("qe")).getField("cell"), 1, N_PROBE))
-        )
-        .withColumn("qn", l2_norm(F.col("qe")))
-    )
-    cos = dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        F.broadcast(queries)
-        .join(staged, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("cos", 4).alias("cosine"), "rank")
-    )
+    return _ivf_rerank(queries, staged)
 
 
 @query(
@@ -1569,11 +1534,7 @@ def retrieval_hybrid_bm25_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
     trivially; the legs scan DIFFERENT tables and can run as
     independent stages.
     """
-    from leadsight_sales_agent_spark.operators.text import (
-        BM25_B,
-        BM25_K1,
-        BM25_TERMS,
-    )
+    from leadsight_sales_agent_spark.operators.text import BM25_TERMS, _bm25_scores
 
     docs = (
         load(spark, sf_dir, "documents")
@@ -1591,34 +1552,8 @@ def retrieval_hybrid_bm25_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "t")
         .agg(F.count("*").alias("tf"))
     )
-    idf = (
-        tf.groupBy("t")
-        .agg(F.count("*").alias("df"))
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "t",
-            F.round(
-                F.log(
-                    1
-                    + (F.col("n").cast("double") - F.col("df") + 0.5)
-                    / (F.col("df") + 0.5)
-                )
-                * 1000000
-            )
-            .cast("long")
-            .alias("idf_micro"),
-        )
-    )
-    avgdl = F.col("total_dl").cast("double") / F.col("n")
-    tf_part = (F.col("tf") * (BM25_K1 + 1)) / (
-        F.col("tf") + BM25_K1 * (1 - BM25_B + BM25_B * (F.col("dl") / avgdl))
-    )
     lex = (
-        tf.join(dl, "doc_id")
-        .join(F.broadcast(idf), "t")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(F.sum(F.col("idf_micro") * tf_part).alias("score_micro"))
+        _bm25_scores(tf, dl, stats)
         .withColumn(
             "lex_rank",
             F.row_number().over(Window.orderBy(F.desc("score_micro"), F.asc("doc_id"))),

@@ -7,7 +7,7 @@ regexp_extract/md5/aggregate) → whole-stage codegen; no Python UDFs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from leadsight_sales_agent_spark.functions.numeric import (
@@ -1508,6 +1508,34 @@ MIN_TOKENS = 10
 MIN_UNIQ_RATIO = 0.4
 
 
+def _curation_features(docs: DataFrame) -> DataFrame:
+    """Per document: lang, token count, distinct-token count and the
+    exact-dedup survivor (min doc_id over the md5 content-hash group)."""
+    toks = _tokens()
+    w = Window.partitionBy(F.md5(F.trim(F.col("text"))))
+    return docs.select(
+        "doc_id",
+        "lang",
+        F.size(toks).alias("n_tokens"),
+        F.size(F.array_distinct(toks)).alias("n_uniq"),
+        F.min("doc_id").over(w).alias("keeper"),
+    )
+
+
+def _curation_rejects() -> Column:
+    """The first three reject reasons in pipeline priority order
+    (too_short, low_diversity, exact_duplicate); the caller appends
+    its later reasons and the keep."""
+    return (
+        F.when(F.col("n_tokens") < MIN_TOKENS, F.lit("too_short"))
+        .when(
+            F.col("n_uniq").cast("double") / F.col("n_tokens") < MIN_UNIQ_RATIO,
+            F.lit("low_diversity"),
+        )
+        .when(F.col("doc_id") != F.col("keeper"), F.lit("exact_duplicate"))
+    )
+
+
 @query(
     "corpus_curation_verdict",
     oracle=f"""
@@ -1543,27 +1571,8 @@ def corpus_curation_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     compares against a constant so no float crosses the engine
     boundary un-rounded.
     """
-    from pyspark.sql import Window
-
-    docs = load(spark, sf_dir, "documents")
-    toks = _tokens()
-    w = Window.partitionBy(F.md5(F.trim(F.col("text"))))
-    feat = docs.select(
-        "doc_id",
-        "lang",
-        F.size(toks).alias("n_tokens"),
-        F.size(F.array_distinct(toks)).alias("n_uniq"),
-        F.min("doc_id").over(w).alias("keeper"),
-    )
-    verdict = (
-        F.when(F.col("n_tokens") < MIN_TOKENS, F.lit("too_short"))
-        .when(
-            F.col("n_uniq").cast("double") / F.col("n_tokens") < MIN_UNIQ_RATIO,
-            F.lit("low_diversity"),
-        )
-        .when(F.col("doc_id") != F.col("keeper"), F.lit("exact_duplicate"))
-        .otherwise(F.lit("keep"))
-    )
+    feat = _curation_features(load(spark, sf_dir, "documents"))
+    verdict = _curation_rejects().otherwise(F.lit("keep"))
     return feat.select("doc_id", "lang", "n_tokens", verdict.alias("verdict"))
 
 
@@ -1657,18 +1666,8 @@ def corpus_curation_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     persist(MEMORY_AND_DISK) on executor-local storage, sized at one
     shingle row per document token.
     """
-    from pyspark.sql import Window
-
     docs = load(spark, sf_dir, "documents")
-    toks = _tokens()
-    w = Window.partitionBy(F.md5(F.trim(F.col("text"))))
-    feat = docs.select(
-        "doc_id",
-        "lang",
-        F.size(toks).alias("n_tokens"),
-        F.size(F.array_distinct(toks)).alias("n_uniq"),
-        F.min("doc_id").over(w).alias("keeper"),
-    )
+    feat = _curation_features(docs)
     sh = _shingles(docs).persist()  # shingle grain: data-proportional (r11 rule)
     bench = (
         sh.filter(F.col("source") == BENCHMARK_SOURCE).select("shingle").distinct()
@@ -1705,12 +1704,7 @@ def corpus_curation_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("boiler", F.lit(True))
     )
     verdict = (
-        F.when(F.col("n_tokens") < MIN_TOKENS, F.lit("too_short"))
-        .when(
-            F.col("n_uniq").cast("double") / F.col("n_tokens") < MIN_UNIQ_RATIO,
-            F.lit("low_diversity"),
-        )
-        .when(F.col("doc_id") != F.col("keeper"), F.lit("exact_duplicate"))
+        _curation_rejects()
         .when(F.col("contaminated"), F.lit("contaminated"))
         .when(F.col("boiler"), F.lit("boilerplate"))
         .otherwise(F.lit("keep"))
@@ -2495,6 +2489,42 @@ BM25_B = 0.75
 BM25_TOP = 20
 
 
+def _bm25_scores(tf: DataFrame, dl: DataFrame, stats: DataFrame) -> DataFrame:
+    """Per document, the BM25 score in micro-units (doc_id,
+    score_micro) from the query-term frequencies tf (doc_id, t, tf),
+    the document lengths dl (doc_id, dl) and the 1-row corpus stats
+    (n, total_dl)."""
+    idf = (
+        tf.groupBy("t")
+        .agg(F.count("*").alias("df"))
+        .crossJoin(F.broadcast(stats))
+        .select(
+            "t",
+            F.round(
+                F.log(
+                    1
+                    + (F.col("n").cast("double") - F.col("df") + 0.5)
+                    / (F.col("df") + 0.5)
+                )
+                * 1000000
+            )
+            .cast("long")
+            .alias("idf_micro"),
+        )
+    )
+    avgdl = F.col("total_dl").cast("double") / F.col("n")
+    tf_part = (F.col("tf") * (BM25_K1 + 1)) / (
+        F.col("tf") + BM25_K1 * (1 - BM25_B + BM25_B * (F.col("dl") / avgdl))
+    )
+    return (
+        tf.join(dl, "doc_id")
+        .join(F.broadcast(idf), "t")
+        .crossJoin(F.broadcast(stats))
+        .groupBy("doc_id")
+        .agg(F.sum(F.col("idf_micro") * tf_part).alias("score_micro"))
+    )
+
+
 @query(
     "text_bm25_scores",
     oracle=f"""
@@ -2572,35 +2602,7 @@ def text_bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("tf"))
         .persist()
     )
-    idf = (
-        tf.groupBy("t")
-        .agg(F.count("*").alias("df"))
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "t",
-            F.round(
-                F.log(
-                    1
-                    + (F.col("n").cast("double") - F.col("df") + 0.5)
-                    / (F.col("df") + 0.5)
-                )
-                * 1000000
-            )
-            .cast("long")
-            .alias("idf_micro"),
-        )
-    )
-    avgdl = F.col("total_dl").cast("double") / F.col("n")
-    tf_part = (F.col("tf") * (BM25_K1 + 1)) / (
-        F.col("tf") + BM25_K1 * (1 - BM25_B + BM25_B * (F.col("dl") / avgdl))
-    )
-    scored = (
-        tf.join(dl, "doc_id")
-        .join(F.broadcast(idf), "t")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(F.sum(F.col("idf_micro") * tf_part).alias("score_micro"))
-    )
+    scored = _bm25_scores(tf, dl, stats)
     w = Window.orderBy(F.desc("score_micro"), F.asc("doc_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))

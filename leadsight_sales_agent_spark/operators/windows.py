@@ -2591,6 +2591,52 @@ def _holt_sql_dot(coefs, part: str, order: str) -> str:
     return " + ".join(terms)
 
 
+def _unrolled_smoothing(
+    series: DataFrame, period: str, den: int, tables, reports
+) -> DataFrame:
+    """An exactly unrolled dyadic smoothing recurrence over each
+    priority's (period, cents) series, reported at the series' last
+    period when it has at least 16. `tables` are (name, coefs) pairs:
+    name = sum_k coefs[k] * lag(cents, k), exact DECIMAL(38,0) over
+    denominator `den`; `reports` are (alias, expr over those names)
+    pairs, each rounded to half-up cents with negative mirroring."""
+    w = Window.partitionBy("priority").orderBy(period)
+    idx = series.select(
+        "priority",
+        period,
+        "cents",
+        F.row_number().over(w).alias("i"),
+        F.count(F.lit(1)).over(Window.partitionBy("priority")).alias("n"),
+    )
+
+    def dot(coefs):
+        s = None
+        for k, c in enumerate(coefs):
+            v = F.col("cents") if k == 0 else F.lag("cents", k).over(w)
+            term = F.lit(c).cast("decimal(38,0)") * v
+            s = term if s is None else s + term
+        return s
+
+    dotted = idx.select(
+        "priority", period, "i", "n", *[dot(c).alias(name) for name, c in tables]
+    )
+    final = dotted.filter((F.col("i") == F.col("n")) & (F.col("i") >= 16))
+
+    def half_up(name_expr: str):
+        # DIV (exact integral division) — decimal '/'+floor rounds the
+        # intermediate quotient and can be off by one at boundaries
+        col = F.expr(name_expr)
+        pos = F.expr(f"(2 * ({name_expr}) + {den}) DIV {2 * den}")
+        neg = -F.expr(f"(2 * (-({name_expr})) + {den}) DIV {2 * den}")
+        return F.when(col >= 0, pos).otherwise(neg).cast("bigint")
+
+    return final.select(
+        "priority",
+        F.col(period).alias(f"asof_{period}"),
+        *[half_up(e).alias(alias) for alias, e in reports],
+    )
+
+
 @query(
     "holt_linear_smoothing",
     oracle=f"""
@@ -2671,51 +2717,16 @@ def holt_linear_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("cents")
         )
     )
-    w = Window.partitionBy("priority").orderBy("month")
-    idx = series.select(
-        "priority",
+    return _unrolled_smoothing(
+        series,
         "month",
-        "cents",
-        F.row_number().over(w).alias("i"),
-        F.count(F.lit(1)).over(Window.partitionBy("priority")).alias("n"),
-    )
-
-    def dot(coefs):
-        s = None
-        for k, c in enumerate(coefs):
-            v = F.col("cents") if k == 0 else F.lag("cents", k).over(w)
-            term = F.lit(c).cast("decimal(38,0)") * v
-            s = term if s is None else s + term
-        return s
-
-    dotted = idx.select(
-        "priority",
-        "month",
-        "i",
-        "n",
-        dot(HOLT_L).alias("lsc"),
-        dot(HOLT_B).alias("bsc"),
-    )
-    final = dotted.filter((F.col("i") == F.col("n")) & (F.col("i") >= 16))
-
-    def half_up(name_expr: str):
-        # DIV (exact integral division) — decimal '/'+floor rounds the
-        # intermediate quotient and can be off by one at boundaries
-        col = F.expr(name_expr)
-        pos = F.expr(
-            f"(2 * ({name_expr}) + {HOLT_DEN}) DIV {2 * HOLT_DEN}"
-        )
-        neg = -F.expr(
-            f"(2 * (-({name_expr})) + {HOLT_DEN}) DIV {2 * HOLT_DEN}"
-        )
-        return F.when(col >= 0, pos).otherwise(neg).cast("bigint")
-
-    return final.select(
-        "priority",
-        F.col("month").alias("asof_month"),
-        half_up("lsc").alias("level_cents"),
-        half_up("bsc").alias("trend_cents"),
-        half_up("lsc + bsc").alias("forecast_next_cents"),
+        HOLT_DEN,
+        [("lsc", HOLT_L), ("bsc", HOLT_B)],
+        [
+            ("level_cents", "lsc"),
+            ("trend_cents", "bsc"),
+            ("forecast_next_cents", "lsc + bsc"),
+        ],
     )
 
 
@@ -2850,48 +2861,17 @@ def holt_winters_seasonal_smoothing(spark: SparkSession, sf_dir: str) -> DataFra
             .alias("cents")
         )
     )
-    w = Window.partitionBy("priority").orderBy("quarter")
-    idx = series.select(
-        "priority",
+    return _unrolled_smoothing(
+        series,
         "quarter",
-        "cents",
-        F.row_number().over(w).alias("i"),
-        F.count(F.lit(1)).over(Window.partitionBy("priority")).alias("n"),
-    )
-
-    def dot(coefs):
-        s = None
-        for k, c in enumerate(coefs):
-            v = F.col("cents") if k == 0 else F.lag("cents", k).over(w)
-            term = F.lit(c).cast("decimal(38,0)") * v
-            s = term if s is None else s + term
-        return s
-
-    dotted = idx.select(
-        "priority",
-        "quarter",
-        "i",
-        "n",
-        dot(HW_L).alias("lsc"),
-        dot(HW_B).alias("bsc"),
-        dot(HW_S).alias("ssc"),
-        dot(HW_F).alias("fsc"),
-    )
-    final = dotted.filter((F.col("i") == F.col("n")) & (F.col("i") >= 16))
-
-    def half_up(name_expr: str):
-        col = F.expr(name_expr)
-        pos = F.expr(f"(2 * ({name_expr}) + {HW_DEN}) DIV {2 * HW_DEN}")
-        neg = -F.expr(f"(2 * (-({name_expr})) + {HW_DEN}) DIV {2 * HW_DEN}")
-        return F.when(col >= 0, pos).otherwise(neg).cast("bigint")
-
-    return final.select(
-        "priority",
-        F.col("quarter").alias("asof_quarter"),
-        half_up("lsc").alias("level_cents"),
-        half_up("bsc").alias("trend_cents"),
-        half_up("ssc").alias("season_next_cents"),
-        half_up("fsc").alias("forecast_next_cents"),
+        HW_DEN,
+        [("lsc", HW_L), ("bsc", HW_B), ("ssc", HW_S), ("fsc", HW_F)],
+        [
+            ("level_cents", "lsc"),
+            ("trend_cents", "bsc"),
+            ("season_next_cents", "ssc"),
+            ("forecast_next_cents", "fsc"),
+        ],
     )
 
 

@@ -41,10 +41,6 @@ TABLES = (
     "embeddings",
 )
 
-# Small dimensions that should always broadcast in joins. At 100 TB the
-# fact tables (lineitem/orders/events/documents) shuffle; these never do.
-BROADCAST_DIMS = frozenset({"region", "nation", "supplier", "part", "customer"})
-
 
 def _tune(spark: SparkSession) -> None:
     """Session-level settings safe to (re)apply at runtime.

@@ -170,6 +170,26 @@ class TestIVFPruned:
         assert a == b  # same cells, same probes, same re-rank
 
 
+class TestIVFRowsPinned:
+    def test_ivf_rows_match_the_recorded_result(self, spark, sf_dir):
+        """knn_cosine_ivf has no oracle, and the pruned variant shares its
+        cell scoring and re-rank, so comparing the two cannot catch a
+        drift in the shared code. Pin the rows at sf0.001 instead: the
+        row count and a hash of the sorted rows."""
+        import hashlib
+
+        from leadsight_sales_agent_spark import registry
+
+        registry.load_all()
+        rows = sorted(
+            map(tuple, registry.QUERIES["knn_cosine_ivf"](spark, sf_dir).collect())
+        )
+        assert len(rows) == 50
+        assert hashlib.sha256(repr(rows).encode()).hexdigest() == (
+            "68fd1bbd9e321aafb2649dee8cac2da412a02da94cf108d388b667c05cb4fe99"
+        )
+
+
 class TestHLLSketch:
     def test_merged_estimate_within_error_envelope(self, spark, sf_dir):
         from leadsight_sales_agent_spark import registry

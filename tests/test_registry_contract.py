@@ -402,6 +402,36 @@ class TestPlanLintAllowlists:
         assert findings == [{"rule": "R10-build-jobs", "query": "__test_eager__", "jobs": 3}]
         assert unused == [allowed[1]]
 
+    def test_errored_lint_run_keeps_the_committed_snapshot(self, tmp_path):
+        """A lint run with errors (a crashed query, or a JVM killed
+        mid-run) exits 2 and does not overwrite the committed
+        PLAN_LINT.json; a run without errors rewrites it."""
+        import importlib.util
+        import json
+        import os
+
+        spec = importlib.util.spec_from_file_location(
+            "plan_lint_write",
+            os.path.join(os.path.dirname(__file__), "..", "tools", "plan_lint.py"),
+        )
+        mod = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(mod)
+        path = tmp_path / "PLAN_LINT.json"
+        path.write_text('{"clean": true}')
+        crashed = {
+            "checked": 3,
+            "unused_allowlist": {},
+            "findings": [],
+            "errors": [{"query": "q", "error": "ConnectionRefusedError"}],
+        }
+        assert mod.write_snapshot(crashed, str(path)) == 2
+        assert path.read_text() == '{"clean": true}'
+        clean = dict(crashed, errors=[])
+        assert mod.write_snapshot(clean, str(path)) == 0
+        assert json.loads(path.read_text()) == clean
+        finding = dict(clean, findings=[{"rule": "R1", "query": "q"}])
+        assert mod.write_snapshot(finding, str(path)) == 1
+
     def test_committed_plan_lint_snapshot_is_clean_and_exact(self):
         """The committed PLAN_LINT.json must show a clean lint (no
         findings/errors) AND exact allowlists (no unused entries —

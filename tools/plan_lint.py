@@ -3,6 +3,7 @@ plan is checked for scale-killers, with a documented allowlist for the
 queries whose shape is intentional. Run:
 
     python tools/plan_lint.py            # writes PLAN_LINT.json, exit 1 on new findings
+                                         # (exit 2 on errors, file left as it was)
 
 Rules (per query, formatted physical plan at sf0.001):
   R1 cartesian      — CartesianProduct / BroadcastNestedLoopJoin present.
@@ -1059,6 +1060,34 @@ def compute_unused_allowlists(pattern_seen: dict[str, dict[str, bool]]) -> dict:
     }
 
 
+def write_snapshot(out: dict, path: str = "PLAN_LINT.json") -> int:
+    """Print the run's summary and findings and return its exit code.
+
+    Errors (queries that crashed at plan construction, or every query
+    after a JVM that died mid-run) must fail the gate too — a broken
+    query is NOT a clean lint — and they take precedence over findings
+    so a crash is never masked by a co-occurring finding. An errored run
+    exits 2 and leaves the committed snapshot at `path` as it was; any
+    other run rewrites it and exits 1 on findings, 0 when clean."""
+    print(
+        json.dumps(
+            {
+                "checked": out["checked"],
+                "n_findings": len(out["findings"]),
+                "n_errors": len(out["errors"]),
+            }
+        )
+    )
+    for x in out["findings"]:
+        print("FINDING", x)
+    if out["errors"]:
+        print(f"{len(out['errors'])} errors: {path} not written", file=sys.stderr)
+        return 2
+    with open(path, "w") as f:
+        json.dump(out, f, indent=1)
+    return 1 if out["findings"] else 0
+
+
 def main() -> None:
     registry.load_all()
     spark = get_spark("plan-lint", cpus=8)
@@ -1230,17 +1259,9 @@ def main() -> None:
         # R10: Spark jobs fired while each query's DataFrame is built
         "build_jobs": {n: build_jobs[n] for n in sorted(build_jobs)},
     }
-    with open("PLAN_LINT.json", "w") as f:
-        json.dump(out, f, indent=1)
-    print(json.dumps({"checked": len(oracle_backed), "n_findings": len(findings), "n_errors": len(errors)}))
-    for x in findings:
-        print("FINDING", x)
+    code = write_snapshot(out)
     spark.stop()
-    # errors (queries that crashed at plan construction) must fail the
-    # gate too — a broken query is NOT a clean lint. Errors take
-    # precedence over findings so a crash is never masked by a
-    # co-occurring finding; findings are still printed above either way.
-    sys.exit(2 if errors else (1 if findings else 0))
+    sys.exit(code)
 
 
 if __name__ == "__main__":

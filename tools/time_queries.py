@@ -2,20 +2,22 @@
 
 Usage: python tools/time_queries.py [--sf DIR] [--reps N] query [query ...]
 
-Same methodology as bench.py (warm-up pass at sf0.001, then REPS timed
-runs each followed by clearCache), but for an arbitrary subset — the
-isolate-one-query loop of an optimization round without paying for the
-whole headline suite.
+Same methodology as bench.py, through bench.py's own timing core
+(`_run_once`: noop write then clearCache; `_median`): a warm-up pass at
+the sf0.001 directory beside --sf, then REPS timed runs of each query — the isolate-one-query
+loop of an optimization round without paying for the whole headline
+suite.
 """
 
 from __future__ import annotations
 
 import argparse
+import os
 import sys
-import time
 
 sys.path.insert(0, ".")
 
+import bench  # noqa: E402 — repo-root module, needs sys.path above
 from leadsight_sales_agent_spark import registry  # noqa: E402
 from leadsight_sales_agent_spark.session import get_spark  # noqa: E402
 
@@ -32,25 +34,20 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     # warm-up (codegen + Python worker spawn) at the tiny SF
+    warm_dir = os.path.join(os.path.dirname(os.path.normpath(args.sf)), "sf0.001")
     for name in args.queries:
-        registry.QUERIES[name](spark, "/root/testdata/sf0.001").write.format(
-            "noop"
-        ).mode("overwrite").save()
-    spark.catalog.clearCache()
+        bench._run_once(spark, name, warm_dir)
 
     samples: dict[str, list[float]] = {n: [] for n in args.queries}
     for _ in range(args.reps):
         for name in args.queries:
             spark.sparkContext.setJobDescription(f"time: {name}")
-            t0 = time.perf_counter()
-            registry.QUERIES[name](spark, args.sf).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            samples[name].append(time.perf_counter() - t0)
-            spark.catalog.clearCache()
+            samples[name].append(bench._run_once(spark, name, args.sf))
     for name, xs in samples.items():
-        med = sorted(xs)[len(xs) // 2]
-        print(f"{name}: median {med:.3f}s  samples {[round(x, 3) for x in xs]}")
+        print(
+            f"{name}: median {bench._median(xs):.3f}s"
+            f"  samples {[round(x, 3) for x in xs]}"
+        )
     spark.stop()
 
 
