@@ -18,6 +18,15 @@ DuckDB oracle twins (textual pattern, same algebra):
 
 (avg divides an identical exact sum by an identical integer → identical
 double → identical rounding in both engines.)
+
+Exact-cents devices (integer cents make every downstream sum, moment
+and comparison exact in both engines; ``cast("long")`` and
+``cast("bigint")`` are the same LongType, so one helper serves both):
+    exact_cents(x):  CAST(CAST(x AS DECIMAL(25,2)) * 100 AS BIGINT)
+    cents_total(x):  CAST(round(sum(CAST(x AS DECIMAL(25,6))) * 100, 0) AS BIGINT)
+
+(exact_cents rounds each row to cents before anything is summed;
+cents_total sums the exact 6-decimal values and rounds the total once.)
 """
 
 from __future__ import annotations
@@ -145,6 +154,16 @@ def _tie_safe_avg(m: Column, n: Column, scale: int) -> Column:
 def davg(x: Column, scale: int = 4) -> Column:
     """Order-independent, tie-safe mean of a non-negative double column."""
     return _tie_safe_avg(F.sum(_micro(x)), F.count(x), scale)
+
+
+def exact_cents(x: Column) -> Column:
+    """Per-row exact integer cents of a money column."""
+    return (x.cast("decimal(25,2)") * 100).cast("bigint")
+
+
+def cents_total(x: Column) -> Column:
+    """Exact sum of a money column, rounded once to integer cents."""
+    return F.round(F.sum(x.cast(DEC)) * 100, 0).cast("bigint")
 
 
 def dsum_over(x: Column, window, scale: int = 2) -> Column:

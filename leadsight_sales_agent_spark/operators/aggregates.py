@@ -28,6 +28,7 @@ from leadsight_sales_agent_spark.functions.numeric import (
     d53s,
     davg,
     dsum,
+    exact_cents,
     finite,
     is_finite,
     sql_d53,
@@ -1018,9 +1019,7 @@ def agg_histogram_equidepth_localized(spark: SparkSession, sf_dir: str) -> DataF
     """
     base = load(spark, sf_dir, "orders").select(
         "o_totalprice",
-        (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-        .cast("bigint")
-        .alias("cents"),
+        exact_cents(F.col("o_totalprice")).alias("cents"),
     )
     hist = base.groupBy(
         F.expr(f"cents DIV {QUANTILE_BUCKET_CENTS}").alias("bucket")
@@ -2199,9 +2198,7 @@ def tpcds_q67_rollup_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("c_mktsegment").alias("segment"),
             month.alias("month"),
-            (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-            .cast("long")
-            .alias("cents"),
+            exact_cents(F.col("o_totalprice")).alias("cents"),
         )
         .rollup("segment", "month")
         .agg(
@@ -2332,7 +2329,7 @@ def concentration_gini_hhi_by_segment(spark: SparkSession, sf_dir: str) -> DataF
         o.join(c, o.o_custkey == c.c_custkey)
         .groupBy(F.col("c_mktsegment").alias("segment"), "o_custkey")
         .agg(
-            F.sum((F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("long"))
+            F.sum(exact_cents(F.col("o_totalprice")))
             .cast("long")
             .alias("cents")
         )
@@ -2413,8 +2410,7 @@ def benford_first_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load(spark, sf_dir, "orders")
     digit = F.substring(
-        (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-        .cast("long")
+        exact_cents(F.col("o_totalprice"))
         .cast("string"),
         1,
         1,
@@ -2538,7 +2534,7 @@ def _event_value_deviations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(is_finite(F.col("value")))
         .select(
             "event_type",
-            (F.col("value").cast("decimal(25,2)") * 100).cast("long").alias("cents"),
+            exact_cents(F.col("value")).alias("cents"),
         )
     )
     return c.select(
@@ -2826,9 +2822,7 @@ def variance_price_volume_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("l_partkey").alias("part"), "yr")
         .agg(
             F.sum(F.col("l_quantity").cast("bigint")).cast("bigint").alias("qty"),
-            F.sum(
-                (F.col("l_extendedprice").cast("decimal(25,2)") * 100).cast("bigint")
-            )
+            F.sum(exact_cents(F.col("l_extendedprice")))
             .cast("bigint")
             .alias("rev_cents"),
         )
@@ -2959,9 +2953,7 @@ def inventory_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.sum(F.col("l_quantity").cast("bigint")).cast("bigint").alias("q"),
-            F.sum(
-                (F.col("l_extendedprice").cast("decimal(25,2)") * 100).cast("bigint")
-            )
+            F.sum(exact_cents(F.col("l_extendedprice")))
             .cast("bigint")
             .alias("cents"),
         )
@@ -3200,9 +3192,7 @@ def finance_ar_aging_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "o_custkey",
-            (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
+            exact_cents(F.col("o_totalprice")).alias("cents"),
             F.datediff(F.lit("1998-01-01").cast("timestamp"), F.col("o_orderdate")).alias(
                 "age"
             ),
@@ -3345,9 +3335,7 @@ def privacy_deterministic_tokenization(spark: SparkSession, sf_dir: str) -> Data
     )
     o = load(spark, sf_dir, "orders").select(
         tok(F.col("o_custkey")).alias("cust_token"),
-        (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-        .cast("bigint")
-        .alias("cents"),
+        exact_cents(F.col("o_totalprice")).alias("cents"),
     )
     c = load(spark, sf_dir, "customer").select(
         tok(F.col("c_custkey")).alias("cust_token"), "c_mktsegment"
@@ -3694,9 +3682,7 @@ def eval_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition at scale), one subtraction — no float anywhere.
     """
     cust = load(spark, sf_dir, "orders").groupBy("o_custkey").agg(
-        F.sum(
-            (F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("bigint")
-        )
+        F.sum(exact_cents(F.col("o_totalprice")))
         .cast("bigint")
         .alias("rev"),
         F.count(F.lit(1)).alias("n_orders"),
@@ -3794,19 +3780,15 @@ def agg_grouped_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     with negative mirroring (the robust Theil-Sen twin is
     forecast_theil_sen_trend; this is the classical estimator).
     """
-    m = (
-        load(spark, sf_dir, "orders")
-        .groupBy(
+    from leadsight_sales_agent_spark.operators.windows import order_cents_rollup
+
+    m = order_cents_rollup(
+        load(spark, sf_dir, "orders"),
+        [
             F.col("o_orderpriority").alias("priority"),
-            (F.year("o_orderdate") * 12 + F.month("o_orderdate"))
-            .cast("bigint")
-            .alias("x"),
-        )
-        .agg(
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(25,6)")) * 100, 0)
-            .cast("bigint")
-            .alias("y")
-        )
+            (F.year("o_orderdate") * 12 + F.month("o_orderdate")).cast("bigint").alias("x"),
+        ],
+        "y",
     )
     anchored = m.select(
         "priority",
@@ -3901,9 +3883,7 @@ def agg_boxplot_five_number(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             F.col("c_mktsegment").alias("segment"),
-            (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
+            exact_cents(F.col("o_totalprice")).alias("cents"),
         )
     )
     wseg = Window.partitionBy("segment").orderBy("cents")
@@ -4007,8 +3987,7 @@ def agg_weighted_percentile_p90(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "lineitem")
         .filter(F.col("l_quantity") > 0)
         .select(
-            ((F.col("l_extendedprice") / F.col("l_quantity")).cast("decimal(25,2)") * 100)
-            .cast("bigint")
+            exact_cents(F.col("l_extendedprice") / F.col("l_quantity"))
             .alias("unit_cents"),
             F.col("l_quantity").cast("bigint").alias("wt"),
             F.col("l_returnflag").alias("flag"),
@@ -4089,9 +4068,7 @@ def eval_qq_quantile_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_mktsegment").isin("BUILDING", "MACHINERY"))
         .select(
             F.col("c_mktsegment").alias("seg"),
-            (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
+            exact_cents(F.col("o_totalprice")).alias("cents"),
         )
     )
     ranked = s.select(
@@ -4272,9 +4249,7 @@ def price_elasticity_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy(F.col("p_brand").alias("brand"), "l_partkey")
         .agg(
-            F.sum(
-                (F.col("l_extendedprice").cast("decimal(25,2)") * 100).cast("bigint")
-            )
+            F.sum(exact_cents(F.col("l_extendedprice")))
             .cast("bigint")
             .alias("rev_cents"),
             F.sum(F.col("l_quantity").cast("bigint")).cast("bigint").alias("qty"),
@@ -4387,9 +4362,7 @@ def panel_fixed_effects_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("x"),
-            F.sum(
-                (F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("bigint")
-            )
+            F.sum(exact_cents(F.col("o_totalprice")))
             .cast("bigint")
             .alias("y"),
         )
@@ -5132,9 +5105,7 @@ def quantile_bucket_localized_exact(spark: SparkSession, sf_dir: str) -> DataFra
     """
     base = load(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("flag"),
-        (F.col("l_extendedprice").cast("decimal(25,2)") * 100)
-        .cast("bigint")
-        .alias("cents"),
+        exact_cents(F.col("l_extendedprice")).alias("cents"),
     )
     hist = base.groupBy(
         "flag", F.expr(f"cents DIV {QUANTILE_BUCKET_CENTS}").alias("bucket")
@@ -5238,6 +5209,32 @@ def _ss_policy_oracle() -> str:
     """
 
 
+def _brand_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Line items shipped in 1995-1997, joined to their part's p_brand."""
+    return (
+        load(spark, sf_dir, "lineitem")
+        .filter(
+            (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
+            & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
+        )
+        .join(
+            F.broadcast(load(spark, sf_dir, "part").select("p_partkey", "p_brand")),
+            F.col("l_partkey") == F.col("p_partkey"),
+        )
+    )
+
+
+def _brand_monthly_demand(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(brand, m, d): units shipped per brand in month m of 1995-1997
+    (m = 1 is January 1995); a month with no shipment has no row."""
+    return _brand_lines(spark, sf_dir).groupBy(
+        F.col("p_brand").alias("brand"),
+        (
+            (F.year("l_shipdate") - 1995) * 12 + F.month("l_shipdate").cast("bigint")
+        ).alias("m"),
+    ).agg(F.sum(F.col("l_quantity").cast("bigint")).cast("bigint").alias("d"))
+
+
 @query("inventory_ss_policy_replay", oracle=_ss_policy_oracle())
 def inventory_ss_policy_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(s,S) inventory-policy replay per brand — the classic
@@ -5258,23 +5255,7 @@ def inventory_ss_policy_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the identical recursion as a recursive CTE carrying
     the demand list (the DTW twin construction).
     """
-    li = (
-        load(spark, sf_dir, "lineitem")
-        .filter(
-            (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-        )
-        .join(
-            F.broadcast(load(spark, sf_dir, "part").select("p_partkey", "p_brand")),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-    )
-    demand = li.groupBy(
-        F.col("p_brand").alias("brand"),
-        (
-            (F.year("l_shipdate") - 1995) * 12 + F.month("l_shipdate").cast("bigint")
-        ).alias("m"),
-    ).agg(F.sum(F.col("l_quantity").cast("bigint")).cast("bigint").alias("d"))
+    demand = _brand_monthly_demand(spark, sf_dir)
     months = spark.range(1, SS_N_MONTHS + 1).select(
         F.col("id").cast("bigint").alias("m")
     )
@@ -5391,25 +5372,7 @@ def inventory_newsvendor_fractile(spark: SparkSession, sf_dir: str) -> DataFrame
     else. Scale: one demand rollup, per-brand rank windows on
     36-row partitions, one profit re-aggregation.
     """
-    demand = (
-        load(spark, sf_dir, "lineitem")
-        .filter(
-            (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-        )
-        .join(
-            F.broadcast(load(spark, sf_dir, "part").select("p_partkey", "p_brand")),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .groupBy(
-            F.col("p_brand").alias("brand"),
-            (
-                (F.year("l_shipdate") - 1995) * 12
-                + F.month("l_shipdate").cast("bigint")
-            ).alias("m"),
-        )
-        .agg(F.sum(F.col("l_quantity").cast("bigint")).cast("bigint").alias("d"))
-    )
+    demand = _brand_monthly_demand(spark, sf_dir)
     wb = Window.partitionBy("brand")
     ranked = demand.select(
         "brand",
@@ -5501,15 +5464,7 @@ def inventory_eoq_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame.
     """
     demand = (
-        load(spark, sf_dir, "lineitem")
-        .filter(
-            (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-        )
-        .join(
-            F.broadcast(load(spark, sf_dir, "part").select("p_partkey", "p_brand")),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
+        _brand_lines(spark, sf_dir)
         .groupBy(F.col("p_brand").alias("brand"))
         .agg(
             F.expr("CAST(sum(CAST(l_quantity AS BIGINT)) DIV 3 AS BIGINT)").alias(
@@ -5777,9 +5732,7 @@ def _priority_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "orders")
         .select(
             F.col("o_orderpriority").alias("prio"),
-            (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
+            exact_cents(F.col("o_totalprice")).alias("cents"),
         )
         .groupBy("prio", "cents")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -6025,9 +5978,7 @@ def sketch_ddsketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     combine at the end.
     """
     base = load(spark, sf_dir, "orders").select(
-        (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-        .cast("bigint")
-        .alias("cents")
+        exact_cents(F.col("o_totalprice")).alias("cents")
     )
     hist = base.select(F.expr(_DD_BUCKET).alias("b")).groupBy("b").agg(
         F.count(F.lit(1)).alias("cnt")
@@ -6769,7 +6720,7 @@ def agg_theil_inequality_decomposition(spark: SparkSession, sf_dir: str) -> Data
     1-row totals anchor); no window, no sort — the identical shape as
     the gini/moments family.
     """
-    cents = (F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("long")
+    cents = exact_cents(F.col("o_totalprice"))
     percust = (
         load(spark, sf_dir, "orders")
         .groupBy("o_custkey")
@@ -6899,9 +6850,7 @@ def dq_wide_decimal_conversion_canary(
         .filter(F.col("o_totalprice").isNotNull())
         .select(
             F.col("o_orderpriority").alias("priority"),
-            (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
+            exact_cents(F.col("o_totalprice")).alias("cents"),
         )
     )
     sums = c.groupBy("priority").agg(

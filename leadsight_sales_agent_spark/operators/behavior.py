@@ -18,6 +18,7 @@ from leadsight_sales_agent_spark.functions.numeric import (
     ddbl,
     d53,
     d53s,
+    exact_cents,
     finite,
     is_finite,
     q_scaled_halfup,
@@ -30,6 +31,7 @@ from leadsight_sales_agent_spark.functions.numeric import (
     wsplit15_lo,
 )
 from leadsight_sales_agent_spark.operators.sampling import _SQL_HASH, hash_key
+from leadsight_sales_agent_spark.operators.windows import order_cents_rollup, order_month
 from leadsight_sales_agent_spark.registry import query
 from leadsight_sales_agent_spark.sources.catalog import load
 
@@ -73,6 +75,26 @@ def funnel_fold(evs_col: str = "evs"):
         )
 
     return F.aggregate(evs_col, state0, step)
+
+
+def _funnel_counts(
+    spark: SparkSession, sf_dir: str, fold: Column, aliases: list[str]
+) -> DataFrame:
+    """Count the users reaching each funnel stage: ``fold`` (a funnel
+    fold over each user's sorted ``evs`` array of timed events) gives
+    the stage timestamps t1..t4, counted non-NULL under ``aliases``."""
+    ev = (
+        load(spark, sf_dir, "events")
+        .filter(F.col("ts").isNotNull())
+        .select("user_id", "ts", "event_type")
+    )
+    grouped = ev.groupBy("user_id").agg(
+        F.array_sort(F.collect_list(F.struct("ts", "event_type"))).alias("evs")
+    )
+    folded = grouped.select(fold.alias("f"))
+    return folded.agg(
+        *[F.count(F.col(f"f.t{i}")).alias(a) for i, a in enumerate(aliases, 1)]
+    )
 
 
 @query(
@@ -119,20 +141,11 @@ def funnel_ordered_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whose EVERY signup is timestampless diverges — the oracle's
     # count(*) over the min-anchor CTE counts the min=NULL group while
     # count(f.t1) skips it (the watermark contract, SURVEY 8.15/8.16).
-    ev = (
-        load(spark, sf_dir, "events")
-        .filter(F.col("ts").isNotNull())
-        .select("user_id", "ts", "event_type")
-    )
-    grouped = ev.groupBy("user_id").agg(
-        F.array_sort(F.collect_list(F.struct("ts", "event_type"))).alias("evs")
-    )
-    folded = grouped.select(funnel_fold("evs").alias("f"))
-    return folded.agg(
-        F.count(F.col("f.t1")).alias("n_signup"),
-        F.count(F.col("f.t2")).alias("n_then_view"),
-        F.count(F.col("f.t3")).alias("n_then_click"),
-        F.count(F.col("f.t4")).alias("n_then_purchase"),
+    return _funnel_counts(
+        spark,
+        sf_dir,
+        funnel_fold("evs"),
+        ["n_signup", "n_then_view", "n_then_click", "n_then_purchase"],
     )
 
 
@@ -503,6 +516,20 @@ def gaps_islands_event_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     return islands.groupBy("island_len").agg(F.count("*").alias("n_islands"))
 
 
+def _basket_pairs(baskets: DataFrame) -> DataFrame:
+    """One row ``pr`` = (pa, pb) per item pair pa < pb of each basket's
+    sorted distinct ``its`` array."""
+    return baskets.select(
+        F.explode(
+            F.expr(
+                "flatten(transform(its, (x, i) ->"
+                " transform(slice(its, i + 2, size(its)),"
+                " y -> named_struct('pa', x, 'pb', y))))"
+            )
+        ).alias("pr")
+    )
+
+
 @query(
     "market_basket_part_pairs",
     oracle="""
@@ -544,17 +571,9 @@ def market_basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("its"))
     )
-    pairs = baskets.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(its, (x, i) ->"
-                " transform(slice(its, i + 2, size(its)),"
-                " y -> named_struct('pa', x, 'pb', y))))"
-            )
-        ).alias("pr")
-    )
     return (
-        pairs.select(F.col("pr.pa").alias("part_a"), F.col("pr.pb").alias("part_b"))
+        _basket_pairs(baskets)
+        .select(F.col("pr.pa").alias("part_a"), F.col("pr.pb").alias("part_b"))
         .groupBy("part_a", "part_b")
         .agg(F.count("*").alias("n_orders"))
         .filter(F.col("n_orders") >= 2)
@@ -1204,7 +1223,6 @@ def markov_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("event_type").alias("from_event"), "to_event")
     )
     t = seq.groupBy("from_event", "to_event").agg(F.count("*").alias("n_transitions"))
-    row_total = F.sum("n_transitions").over(Window.partitionBy("from_event"))
     return t.select(
         "from_event",
         "to_event",
@@ -1256,14 +1274,10 @@ def forecast_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFr
     m = (
         load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
         .groupBy(
-            F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias(
-                "month"
-            )
+            order_month().alias("month")
         )
         .agg(
-            F.sum(
-                (F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("long")
-            ).alias("actual_cents")
+            F.sum(exact_cents(F.col("o_totalprice"))).alias("actual_cents")
         )
     )
     f = m.withColumn(
@@ -1279,6 +1293,30 @@ def forecast_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFr
             "CAST((2 * 10000 * abs(actual_cents - forecast_cents) + actual_cents)"
             " DIV (2 * actual_cents) AS BIGINT)"
         ).alias("ape_bp"),
+    )
+
+
+def _scored_events(spark: SparkSession, sf_dir: str, label: str) -> DataFrame:
+    """Events with a finite value as (score, ``label``): score is the
+    value's exact cents, the label 1 for a purchase and 0 otherwise."""
+    return (
+        load(spark, sf_dir, "events")
+        .filter(is_finite(F.col("value")))
+        .select(
+            exact_cents(F.col("value")).alias("score"),
+            F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias(label),
+        )
+    )
+
+
+def _score_counts(
+    spark: SparkSession, sf_dir: str, label: str, pos: str, neg: str
+) -> DataFrame:
+    """Per distinct score of ``_scored_events``: the count of purchases
+    as ``pos`` and of other events as ``neg``."""
+    return _scored_events(spark, sf_dir, label).groupBy("score").agg(
+        F.sum(label).cast("long").alias(pos),
+        F.sum(1 - F.col(label)).cast("long").alias(neg),
     )
 
 
@@ -1331,18 +1369,7 @@ def eval_roc_auc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     reporting precision. The fact table contributes one hash
     aggregate.
     """
-    s = (
-        load(spark, sf_dir, "events")
-        .filter(is_finite(F.col("value")))
-        .select(
-            (F.col("value").cast("decimal(25,2)") * 100).cast("long").alias("score"),
-            F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
-        )
-    )
-    g = s.groupBy("score").agg(
-        F.sum("y").cast("long").alias("np_s"),
-        F.sum(1 - F.col("y")).cast("long").alias("nn_s"),
-    )
+    g = _score_counts(spark, sf_dir, "y", "np_s", "nn_s")
     w = Window.orderBy("score").rowsBetween(Window.unboundedPreceding, -1)
     cum = g.withColumn(
         "nn_lt", F.coalesce(F.sum("nn_s").over(w), F.lit(0)).cast("long")
@@ -1395,16 +1422,9 @@ def eval_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     bins on exact cents, rates and means in half-up integer units —
     the whole table is map-side partial-aggregatable.
     """
-    s = (
-        load(spark, sf_dir, "events")
-        .filter(is_finite(F.col("value")))
-        .select(
-            (F.col("value").cast("decimal(25,2)") * 100).cast("long").alias("score"),
-            F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
-        )
-    )
     return (
-        s.groupBy(F.expr(f"score DIV {CALIB_BIN_CENTS}").alias("bin"))
+        _scored_events(spark, sf_dir, "y")
+        .groupBy(F.expr(f"score DIV {CALIB_BIN_CENTS}").alias("bin"))
         .agg(
             F.count("*").alias("n_events"),
             F.sum("y").cast("long").alias("n_purchases"),
@@ -1545,18 +1565,7 @@ def eval_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     domain, not the event count). The cumulative and ranking windows
     share one global sort of that small grain.
     """
-    s = (
-        load(spark, sf_dir, "events")
-        .filter(is_finite(F.col("value")))
-        .select(
-            (F.col("value").cast("decimal(25,2)") * 100).cast("long").alias("score"),
-            F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("a"),
-        )
-    )
-    g = s.groupBy("score").agg(
-        F.sum("a").cast("long").alias("ca"),
-        F.sum(1 - F.col("a")).cast("long").alias("cb"),
-    )
+    g = _score_counts(spark, sf_dir, "a", "ca", "cb")
     wcum = Window.orderBy("score").rowsBetween(Window.unboundedPreceding, 0)
     wall = Window.partitionBy()
     cum = g.select(
@@ -1738,20 +1747,11 @@ def funnel_windowed_deadline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # ts IS NOT NULL at entry: same all-null-anchor seam as
     # funnel_ordered_stages (r12, advisor finding)
-    ev = (
-        load(spark, sf_dir, "events")
-        .filter(F.col("ts").isNotNull())
-        .select("user_id", "ts", "event_type")
-    )
-    grouped = ev.groupBy("user_id").agg(
-        F.array_sort(F.collect_list(F.struct("ts", "event_type"))).alias("evs")
-    )
-    folded = grouped.select(funnel_fold_deadline("evs", 48).alias("f"))
-    return folded.agg(
-        F.count(F.col("f.t1")).alias("n_signup"),
-        F.count(F.col("f.t2")).alias("n_view_48h"),
-        F.count(F.col("f.t3")).alias("n_click_48h"),
-        F.count(F.col("f.t4")).alias("n_purchase_48h"),
+    return _funnel_counts(
+        spark,
+        sf_dir,
+        funnel_fold_deadline("evs", 48),
+        ["n_signup", "n_view_48h", "n_click_48h", "n_purchase_48h"],
     )
 
 
@@ -1906,15 +1906,9 @@ def market_basket_apriori_triples(spark: SparkSession, sf_dir: str) -> DataFrame
         .persist()  # feeds pair mining AND the prune leg (R8: persist,
         #             not localCheckpoint — data-proportional)
     )
-    pairs = baskets.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(its, (x, i) ->"
-                " transform(slice(its, i + 2, size(its)),"
-                " y -> named_struct('pa', x, 'pb', y))))"
-            )
-        ).alias("pr")
-    ).select(F.col("pr.pa").alias("pa"), F.col("pr.pb").alias("pb"))
+    pairs = _basket_pairs(baskets).select(
+        F.col("pr.pa").alias("pa"), F.col("pr.pb").alias("pb")
+    )
     fpairs = (
         pairs.groupBy("pa", "pb")
         .agg(F.count(F.lit(1)).alias("sup"))
@@ -2026,7 +2020,7 @@ def eval_decile_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(is_finite(F.col("value")))
         .select(
             "event_id",
-            (F.col("value").cast("decimal(25,2)") * 100).cast("long").alias("score"),
+            exact_cents(F.col("value")).alias("score"),
             F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
         )
     )
@@ -2072,19 +2066,13 @@ def _monthly_ma24(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Monthly revenue (month, moy, cents) with s24, the exact 24x
     centered 2x12 moving-average sum (NULL for the first and last six
     months, whose window is incomplete)."""
-    series = (
-        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
-        .groupBy(
-            F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias(
-                "month"
-            ),
+    series = order_cents_rollup(
+        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull()),
+        [
+            order_month().alias("month"),
             F.month("o_orderdate").cast("bigint").alias("moy"),
-        )
-        .agg(
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(25,6)")) * 100, 0)
-            .cast("bigint")
-            .alias("cents")
-        )
+        ],
+        "cents",
     )
     w = Window.orderBy("month")
     wma = w.rowsBetween(-5, 5)
@@ -2209,18 +2197,10 @@ def forecast_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     millions of series partitions by series key with the identical
     per-series grain bound.
     """
-    series = (
-        load(spark, sf_dir, "orders")
-        .groupBy(
-            F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias(
-                "month"
-            )
-        )
-        .agg(
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(25,6)")) * 100, 0)
-            .cast("bigint")
-            .alias("cents")
-        )
+    series = order_cents_rollup(
+        load(spark, sf_dir, "orders"),
+        [order_month().alias("month")],
+        "cents",
     )
     a = series.select(F.col("month").alias("ma"), F.col("cents").alias("ca"))
     b = series.select(F.col("month").alias("mb"), F.col("cents").alias("cb"))
@@ -2291,18 +2271,10 @@ def forecast_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact rational and its rounded double. Same month-grain O(m²)
     bound as Mann-Kendall — calendar-bounded, never fact-bounded.
     """
-    series = (
-        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
-        .groupBy(
-            F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias(
-                "month"
-            )
-        )
-        .agg(
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(25,6)")) * 100, 0)
-            .cast("bigint")
-            .alias("cents")
-        )
+    series = order_cents_rollup(
+        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull()),
+        [order_month().alias("month")],
+        "cents",
     )
     idx = series.select(
         "cents",
@@ -2547,14 +2519,10 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull()).select(
         "o_custkey",
         "o_orderdate",
-        (F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("bigint").alias(
-            "cents"
-        ),
+        exact_cents(F.col("o_totalprice")).alias("cents"),
     )
     first_order = o.groupBy("o_custkey").agg(
-        F.min(F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM")).alias(
-            "cohort"
-        )
+        F.min(order_month()).alias("cohort")
     )
     fo = F.broadcast(first_order.withColumnRenamed("o_custkey", "ck"))
     spend = (
@@ -2634,18 +2602,7 @@ def eval_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain-not-facts device as ROC/KS), precision and recall land as
     half-up basis points of exact integer ratios.
     """
-    s = (
-        load(spark, sf_dir, "events")
-        .filter(is_finite(F.col("value")))
-        .select(
-            (F.col("value").cast("decimal(25,2)") * 100).cast("long").alias("score"),
-            F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
-        )
-    )
-    g = s.groupBy("score").agg(
-        F.sum("y").cast("long").alias("p"),
-        F.sum(1 - F.col("y")).cast("long").alias("n"),
-    )
+    g = _score_counts(spark, sf_dir, "y", "p", "n")
     wdesc = Window.orderBy(F.desc("score")).rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -2815,6 +2772,50 @@ def anomaly_seasonal_adjusted(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.abs(F.col("residual_bp")) > 500)
 
 
+def _monthly_lag_sums(
+    spark: SparkSession, sf_dir: str, n_lags: int, t: str
+) -> DataFrame:
+    """Per lag k = 1..n_lags of the monthly revenue series v (cents):
+    nk, sxy = Σ v·v_lag, sxk = Σ v, syk = Σ v_lag over the nk months
+    that have a lag-k partner, cross-joined with the whole series' n,
+    s1 = Σ v and s2 = Σ v². sxy and s2 are decimal(38,0), the rest
+    type ``t``."""
+    series = order_cents_rollup(
+        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull()),
+        [order_month().alias("month")],
+        "v",
+    )
+    # Spark's lag() requires a literal offset, so the per-k alignment
+    # is a rank join instead: month index i pairs with i-k.
+    idx = series.select(
+        "v", F.row_number().over(Window.orderBy("month")).alias("i")
+    )
+    ks = spark.range(1, n_lags + 1).select(F.col("id").cast("bigint").alias("k"))
+    a = idx.select(F.col("i").alias("ia"), F.col("v").alias("va"))
+    b = idx.select(F.col("i").alias("ib"), F.col("v").alias("vb"))
+    pairs = (
+        a.crossJoin(F.broadcast(ks))
+        .join(b, F.col("ib") == F.col("ia") - F.col("k"), "left")
+    )
+    stats = idx.agg(
+        F.count(F.lit(1)).cast(t).alias("n"),
+        F.sum("v").cast(t).alias("s1"),
+        F.sum(F.col("v").cast("decimal(38,0)") * F.col("v"))
+        .cast("decimal(38,0)")
+        .alias("s2"),
+    )
+    has_lag = F.col("vb").isNotNull()
+    cross_sums = pairs.groupBy("k").agg(
+        F.count("vb").cast(t).alias("nk"),
+        F.sum(F.when(has_lag, F.col("va").cast("decimal(38,0)") * F.col("vb")))
+        .cast("decimal(38,0)")
+        .alias("sxy"),
+        F.sum(F.when(has_lag, F.col("va"))).cast(t).alias("sxk"),
+        F.sum(F.when(has_lag, F.col("vb"))).cast(t).alias("syk"),
+    )
+    return cross_sums.crossJoin(F.broadcast(stats))
+
+
 @query(
     "forecast_acf_monthly",
     oracle=f"""
@@ -2873,56 +2874,7 @@ def forecast_acf_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded 6dp. Lag alignment uses a per-k lag window over a
     12-way replicated month grain — 12 x ~80 rows, calendar-bounded.
     """
-    series = (
-        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
-        .groupBy(
-            F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias(
-                "month"
-            )
-        )
-        .agg(
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(25,6)")) * 100, 0)
-            .cast("bigint")
-            .alias("v")
-        )
-    )
-    ks = spark.range(1, 13).select(F.col("id").cast("bigint").alias("k"))
-    # Spark's lag() requires a literal offset, so the per-k alignment
-    # is a rank join instead: month index i pairs with i-k.
-    idx = series.select(
-        "v", F.row_number().over(Window.orderBy("month")).alias("i")
-    )
-    a = idx.select(F.col("i").alias("ia"), F.col("v").alias("va"))
-    b = idx.select(F.col("i").alias("ib"), F.col("v").alias("vb"))
-    pairs = (
-        a.crossJoin(F.broadcast(ks))
-        .join(b, F.col("ib") == F.col("ia") - F.col("k"), "left")
-    )
-    stats = idx.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("v").cast("bigint").alias("s1"),
-        F.sum(F.col("v").cast("decimal(38,0)") * F.col("v"))
-        .cast("decimal(38,0)")
-        .alias("s2"),
-    )
-    cross_sums = pairs.groupBy("k").agg(
-        F.count("vb").cast("bigint").alias("nk"),
-        F.sum(
-            F.when(
-                F.col("vb").isNotNull(),
-                F.col("va").cast("decimal(38,0)") * F.col("vb"),
-            )
-        )
-        .cast("decimal(38,0)")
-        .alias("sxy"),
-        F.sum(F.when(F.col("vb").isNotNull(), F.col("va"))).cast("bigint").alias(
-            "sxk"
-        ),
-        F.sum(F.when(F.col("vb").isNotNull(), F.col("vb"))).cast("bigint").alias(
-            "syk"
-        ),
-    )
-    j = cross_sums.crossJoin(F.broadcast(stats))
+    j = _monthly_lag_sums(spark, sf_dir, 12, "bigint")
     mean = F.col("s1").cast("double") / F.col("n")
     # r13: sxy and s2 (sums of squared monthly cents, ~1.8e21 at
     # sf0.01) are past 2^53 — deterministic d53 split, not a bare
@@ -3039,47 +2991,7 @@ def forecast_pacf_durbin_levinson(spark: SparkSession, sf_dir: str) -> DataFrame
     broadcast lag join, one scalar row out — the stats frame is the
     classic tiny-aggregate broadcast shape.
     """
-    series = (
-        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
-        .groupBy(
-            F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias(
-                "month"
-            )
-        )
-        .agg(
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(25,6)")) * 100, 0)
-            .cast("bigint")
-            .alias("v")
-        )
-    )
-    idx = series.select(
-        "v", F.row_number().over(Window.orderBy("month")).alias("i")
-    )
-    ks = spark.range(1, 4).select(F.col("id").cast("bigint").alias("k"))
-    a = idx.select(F.col("i").alias("ia"), F.col("v").alias("va"))
-    b = idx.select(F.col("i").alias("ib"), F.col("v").alias("vb"))
-    pairs = (
-        a.crossJoin(F.broadcast(ks))
-        .join(b, F.col("ib") == F.col("ia") - F.col("k"), "left")
-    )
     dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-    stats = idx.agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
-        F.sum("v").cast("decimal(38,0)").alias("s1"),
-        F.sum(dec("v") * F.col("v")).cast("decimal(38,0)").alias("s2"),
-    )
-    cross_sums = pairs.groupBy("k").agg(
-        F.count("vb").cast("decimal(38,0)").alias("nk"),
-        F.sum(
-            F.when(F.col("vb").isNotNull(), dec("va") * F.col("vb"))
-        ).cast("decimal(38,0)").alias("sxy"),
-        F.sum(F.when(F.col("vb").isNotNull(), F.col("va")))
-        .cast("decimal(38,0)")
-        .alias("sxk"),
-        F.sum(F.when(F.col("vb").isNotNull(), F.col("vb")))
-        .cast("decimal(38,0)")
-        .alias("syk"),
-    )
     nk_expr = (
         dec("n") * F.col("n") * F.col("sxy")
         - dec("n") * F.col("s1") * F.col("sxk")
@@ -3087,7 +2999,7 @@ def forecast_pacf_durbin_levinson(spark: SparkSession, sf_dir: str) -> DataFrame
         + dec("nk") * F.col("s1") * F.col("s1")
     )
     numden = (
-        cross_sums.crossJoin(F.broadcast(stats))
+        _monthly_lag_sums(spark, sf_dir, 3, "decimal(38,0)")
         .groupBy(
             "n", (dec("n") * F.col("n") * F.col("s2")
                   - dec("n") * F.col("s1") * F.col("s1")).alias("d")
@@ -3184,9 +3096,7 @@ def territory_snake_balanced_assignment(spark: SparkSession, sf_dir: str) -> Dat
     partition at scale); assignment is map-side modular arithmetic.
     """
     cust = load(spark, sf_dir, "orders").groupBy("o_custkey").agg(
-        F.sum(
-            (F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("bigint")
-        )
+        F.sum(exact_cents(F.col("o_totalprice")))
         .cast("bigint")
         .alias("cents")
     )
@@ -3274,12 +3184,8 @@ def mrr_movement_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "o_custkey",
-            F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias(
-                "month"
-            ),
-            (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
+            order_month().alias("month"),
+            exact_cents(F.col("o_totalprice")).alias("cents"),
         )
     )
     m = o.groupBy("o_custkey").agg(
@@ -3373,9 +3279,7 @@ def ab_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .otherwise("pre")
             .alias("period"),
-            (F.col("l_extendedprice").cast("decimal(25,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
+            exact_cents(F.col("l_extendedprice")).alias("cents"),
         )
     )
     p = load(spark, sf_dir, "part").select(
@@ -3469,7 +3373,7 @@ def eval_auc_by_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
                 1,
                 2,
             ).alias("hk"),
-            (F.col("value").cast("decimal(25,2)") * 100).cast("long").alias("score"),
+            exact_cents(F.col("value")).alias("score"),
             F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
         )
     )
@@ -3589,9 +3493,7 @@ def attribution_position_based(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "event_type",
         "ts",
-        (F.coalesce(finite(F.col("value")), F.lit(0)).cast("decimal(25,2)") * 100)
-        .cast("bigint")
-        .alias("cents"),
+        exact_cents(F.coalesce(finite(F.col("value")), F.lit(0))).alias("cents"),
         F.lag("ts").over(w).alias("prev_ts"),
     )
     sess = ordered.select(
@@ -3942,17 +3844,13 @@ def forecast_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFram
     ~C(7,2) grids, calendar-bounded like the plain MK test
     (forecast_mann_kendall_trend is the unstratified sibling).
     """
-    series = (
-        load(spark, sf_dir, "orders")
-        .groupBy(
+    series = order_cents_rollup(
+        load(spark, sf_dir, "orders"),
+        [
             F.month("o_orderdate").cast("bigint").alias("moy"),
             F.year("o_orderdate").cast("bigint").alias("yr"),
-        )
-        .agg(
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(25,6)")) * 100, 0)
-            .cast("bigint")
-            .alias("cents")
-        )
+        ],
+        "cents",
     )
     a = series.select("moy", F.col("yr").alias("ya"), F.col("cents").alias("ca"))
     b = series.select(
@@ -4045,9 +3943,7 @@ def chi_trend_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_acctbal").isNotNull())
         .select(
             "c_custkey",
-            (F.col("c_acctbal").cast("decimal(25,2)") * 100)
-            .cast("bigint")
-            .alias("bal_cents"),
+            exact_cents(F.col("c_acctbal")).alias("bal_cents"),
         )
         .join(
             load(spark, sf_dir, "orders").select("o_custkey", "o_orderpriority"),
@@ -4479,9 +4375,7 @@ def _two_segment_cents(
             F.col("c_custkey") == F.col("o_custkey"),
         )
         .select(
-            (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
+            exact_cents(F.col("o_totalprice")).alias("cents"),
             F.when(F.col("c_mktsegment") == seg_a, 1).otherwise(0).alias("a"),
         )
     )
@@ -4497,9 +4391,7 @@ def _segment_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_custkey") == F.col("o_custkey"),
         )
         .select(
-            (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
+            exact_cents(F.col("o_totalprice")).alias("cents"),
             F.col("c_mktsegment").alias("seg"),
         )
     )
@@ -5448,7 +5340,7 @@ def _priority_rank_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderpriority").alias("prio"),
         )
         .agg(
-            F.sum((F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("bigint"))
+            F.sum(exact_cents(F.col("o_totalprice")))
             .cast("bigint")
             .alias("v")
         )
@@ -6066,7 +5958,7 @@ def timeseries_dtw_monthly_segments(spark: SparkSession, sf_dir: str) -> DataFra
             F.month("o_orderdate").cast("int").alias("m"),
         )
         .agg(
-            F.sum((F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("bigint"))
+            F.sum(exact_cents(F.col("o_totalprice")))
             .cast("bigint")
             .alias("cents")
         )
@@ -6281,9 +6173,7 @@ def eval_kendall_tau_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy(F.col("p_brand").alias("brand"))
         .agg(
-            F.sum(
-                (F.col("l_extendedprice").cast("decimal(25,2)") * 100).cast("bigint")
-            )
+            F.sum(exact_cents(F.col("l_extendedprice")))
             .cast("bigint")
             .alias("rev"),
             F.sum(F.col("l_quantity").cast("bigint")).cast("bigint").alias("qty"),
@@ -6389,9 +6279,7 @@ def dq_simpsons_paradox_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             F.col("c_mktsegment").alias("segment"),
-            (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-            .cast("bigint")
-            .alias("x"),
+            exact_cents(F.col("o_totalprice")).alias("x"),
             (F.year("o_orderdate") - 1992).cast("bigint").alias("y"),
         )
     )
@@ -6507,9 +6395,7 @@ def forecast_durbin_watson_residuals(spark: SparkSession, sf_dir: str) -> DataFr
             ).alias("t")
         )
         .agg(
-            F.sum(
-                (F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("bigint")
-            )
+            F.sum(exact_cents(F.col("o_totalprice")))
             .cast("bigint")
             .alias("y")
         )
@@ -7725,9 +7611,7 @@ def ab_power_mde_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             F.col("c_mktsegment").alias("seg"),
-            (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
+            exact_cents(F.col("o_totalprice")).alias("cents"),
         )
     )
     g1 = j.groupBy("seg", "cents").agg(F.count(F.lit(1)).alias("cnt"))
@@ -7950,7 +7834,7 @@ def timeseries_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
         .groupBy(F.date_trunc("month", F.col("o_orderdate")).alias("mon"))
         .agg(
-            F.sum((F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("bigint"))
+            F.sum(exact_cents(F.col("o_totalprice")))
             .cast("bigint")
             .alias("v")
         )
@@ -8344,7 +8228,7 @@ def forecast_theil_u2_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
         .groupBy(F.date_trunc("month", F.col("o_orderdate")).alias("mon"))
         .agg(
-            F.sum((F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("bigint"))
+            F.sum(exact_cents(F.col("o_totalprice")))
             .cast("bigint")
             .alias("v")
         )
@@ -8496,18 +8380,7 @@ def eval_auc_delong_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the score domain, TWO cumulative windows sharing the one
     bounded sort, a 1-row reduce.
     """
-    s = (
-        load(spark, sf_dir, "events")
-        .filter(is_finite(F.col("value")))
-        .select(
-            (F.col("value").cast("decimal(25,2)") * 100).cast("bigint").alias("score"),
-            F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
-        )
-    )
-    g = s.groupBy("score").agg(
-        F.sum("y").cast("bigint").alias("np_s"),
-        F.sum(1 - F.col("y")).cast("bigint").alias("nn_s"),
-    )
+    g = _score_counts(spark, sf_dir, "y", "np_s", "nn_s")
     word = Window.orderBy("score").rowsBetween(Window.unboundedPreceding, -1)
     wall = Window.partitionBy()
     cum = g.select(
@@ -9357,7 +9230,7 @@ def ab_cuped_variance_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
     computation, which map-side combines; nothing here depends on unit
     count beyond the two hash aggregates.
     """
-    cents = (F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("long")
+    cents = exact_cents(F.col("o_totalprice"))
     rev = (
         load(spark, sf_dir, "orders")
         .filter(F.year("o_orderdate").isin(1996, 1997))
@@ -9526,7 +9399,6 @@ def eval_rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             " DIV (2 * d * shiftleft(1, d - 1)) AS BIGINT)"
         ).alias("term_e12"),
     )
-    wcum = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
     return terms.select(
         "d",
         "o_d",
@@ -9647,7 +9519,7 @@ def anomaly_seasonal_hybrid_esd(spark: SparkSession, sf_dir: str) -> DataFrame:
     shrinking remainder with a localCheckpoint to keep lineage linear
     — the same bounded-rounds contract as k-center/kmeans/HITS.
     """
-    cents = (F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("long")
+    cents = exact_cents(F.col("o_totalprice"))
     rev = (
         load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
         .filter(F.year("o_orderdate").between(1996, 1998))
@@ -9790,6 +9662,27 @@ def _pw_beta_num(i: int, big: str = "DECIMAL(38,0)") -> str:
     )
 
 
+def _dollars_1996_1998(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Months t = 1..36 of 1996-1998 left-joined to y, that month's
+    revenue in whole dollars (exact cents DIV 100; NULL for a month
+    with no order)."""
+    rev = (
+        load(spark, sf_dir, "orders")
+        .filter(F.year("o_orderdate").between(1996, 1998))
+        .groupBy(
+            ((F.year("o_orderdate") - 1996) * 12 + F.month("o_orderdate"))
+            .cast("long")
+            .alias("t")
+        )
+        .agg(F.expr(
+            "CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(25,2)) * 100"
+            " AS BIGINT)) DIV 100 AS BIGINT)"
+        ).alias("y"))
+    )
+    months = spark.range(1, 37).select(F.col("id").cast("long").alias("t"))
+    return months.join(rev, "t", "left")
+
+
 @query(
     "forecast_piecewise_trend_changepoints",
     oracle=f"""
@@ -9868,22 +9761,7 @@ def forecast_piecewise_trend_changepoints(spark: SparkSession, sf_dir: str) -> D
     scalar sums and literal arithmetic — the canonical 'normal
     equations beat row-wise solvers at cluster scale' shape.
     """
-    cents = (F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("long")
-    rev = (
-        load(spark, sf_dir, "orders")
-        .filter(F.year("o_orderdate").between(1996, 1998))
-        .groupBy(
-            ((F.year("o_orderdate") - 1996) * 12 + F.month("o_orderdate"))
-            .cast("long")
-            .alias("t")
-        )
-        .agg(F.expr(
-            "CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(25,2)) * 100"
-            " AS BIGINT)) DIV 100 AS BIGINT)"
-        ).alias("y"))
-    )
-    months = spark.range(1, 37).select(F.col("id").cast("long").alias("t"))
-    series = months.join(rev, "t", "left").select(
+    series = _dollars_1996_1998(spark, sf_dir).select(
         "t",
         F.coalesce("y", F.lit(0)).alias("y"),
         F.greatest(F.lit(0), F.col("t") - PW_CP[0]).alias("x2"),
@@ -10007,22 +9885,7 @@ def forecast_causal_impact_counterfactual(spark: SparkSession, sf_dir: str) -> D
     not computational: a linear counterfactual prices trend, not
     seasonality — the Holt-Winters/piecewise siblings supply those.
     """
-    cents = (F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("long")
-    rev = (
-        load(spark, sf_dir, "orders")
-        .filter(F.year("o_orderdate").between(1996, 1998))
-        .groupBy(
-            ((F.year("o_orderdate") - 1996) * 12 + F.month("o_orderdate"))
-            .cast("long")
-            .alias("t")
-        )
-        .agg(F.expr(
-            "CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(25,2)) * 100"
-            " AS BIGINT)) DIV 100 AS BIGINT)"
-        ).alias("y"))
-    )
-    months = spark.range(1, 37).select(F.col("id").cast("long").alias("t"))
-    series = months.join(rev, "t", "left").select(
+    series = _dollars_1996_1998(spark, sf_dir).select(
         "t", F.coalesce("y", F.lit(0)).alias("y")
     )
     pre = series.filter(F.col("t") <= CI_PRE_N).agg(
@@ -10051,7 +9914,6 @@ def forecast_causal_impact_counterfactual(spark: SparkSession, sf_dir: str) -> D
         ).alias("gap_num"),
         F.expr("na + nb * t").alias("cf_num"),
     )
-    wcum = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
     return gaps.select(
         F.col("t").alias("month_idx"),
         F.col("y").cast("bigint").alias("actual_dollars"),
@@ -10138,7 +10000,7 @@ def forecast_pinball_loss_quantile(spark: SparkSession, sf_dir: str) -> DataFram
     scale with the half-up device. One month-grain rollup, one lag
     window on the calendar-bounded series, three 1-row output legs.
     """
-    cents = (F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("long")
+    cents = exact_cents(F.col("o_totalprice"))
     monthly = (
         load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
         .groupBy(F.date_trunc("month", "o_orderdate").alias("mon"))
@@ -10276,9 +10138,7 @@ def eval_brier_murphy_decomposition(spark: SparkSession, sf_dir: str) -> DataFra
         load(spark, sf_dir, "events")
         .filter(is_finite(F.col("value")))
         .select(
-            (F.col("value").cast("decimal(25,2)") * 100)
-            .cast("long")
-            .alias("sc"),
+            exact_cents(F.col("value")).alias("sc"),
             F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
         )
     )
@@ -10418,7 +10278,7 @@ def ab_permutation_test_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs the same contract drops to fewer replicates; CUPED/Welch
     (parametric, single-pass) are the cheap siblings.
     """
-    cents = (F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("long")
+    cents = exact_cents(F.col("o_totalprice"))
     rev = (
         load(spark, sf_dir, "orders")
         .filter(F.year("o_orderdate") == 1997)
@@ -10579,7 +10439,7 @@ def forecast_seasonal_trend_strength(spark: SparkSession, sf_dir: str) -> DataFr
     this data — strong seasonality, weak trend — is exactly why
     holt_winters beats holt_linear on the same series.
     """
-    cents = (F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("long")
+    cents = exact_cents(F.col("o_totalprice"))
     rev = (
         load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
         .filter(F.year("o_orderdate").between(1996, 1998))
@@ -10739,7 +10599,7 @@ def forecast_theta_method(spark: SparkSession, sf_dir: str) -> DataFrame:
     (trend+seasonality) and the pinball scoreboard that prices such
     forecasts.
     """
-    cents = (F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("long")
+    cents = exact_cents(F.col("o_totalprice"))
     rev = (
         load(spark, sf_dir, "orders")
         .filter(F.year("o_orderdate").between(1996, 1998))
@@ -10882,7 +10742,6 @@ def _mk_selects(big: str) -> str:
 
 
 def _markov_attr_oracle() -> str:
-    states = _mk_states()
     tcols = ",\n               ".join(
         f"CAST(count(*) FILTER (s = '{a}' AND d = '{b}') AS BIGINT)"
         f" AS t_{'st' if a == 'start' else a[:2]}_{b[:2]}"

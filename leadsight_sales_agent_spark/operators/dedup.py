@@ -23,7 +23,7 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from leadsight_sales_agent_spark.functions.numeric import sql_hex_to_long
@@ -410,6 +410,25 @@ def simhash_hamming(a, b):
     )
 
 
+def _sig_bands(
+    sigs: DataFrame, alias: str, band: str, key: str, keys: list[Column]
+) -> DataFrame:
+    """(doc_id, sig, ``band``, ``key``): one row per signature and band
+    k, with ``key`` = keys[k], from one map-side explode of an array of
+    structs named ``alias``."""
+    return sigs.select(
+        "doc_id",
+        "sig",
+        F.explode(
+            F.array(
+                *[F.struct(F.lit(k).alias(band), c.alias(key)) for k, c in enumerate(keys)]
+            )
+        ).alias(alias),
+    ).select(
+        "doc_id", "sig", F.col(f"{alias}.{band}").alias(band), F.col(f"{alias}.{key}").alias(key)
+    )
+
+
 @query("neardup_simhash")  # signature+banding heuristic → rows-only check
 def neardup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup candidates: Hamming distance ≤ 3 over 64-bit
@@ -417,21 +436,13 @@ def neardup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks (pigeonhole: ≤3 differing bits ⇒ ≥1 chunk identical)."""
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     sig = docs.select("doc_id", simhash_expr(F.array_distinct(_tokens())).alias("sig"))
-    chunks = sig.select(
-        "doc_id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk_id"),
-                        F.substring("sig", 1 + c * 16, 16).alias("chunk_val"),
-                    )
-                    for c in range(4)
-                ]
-            )
-        ).alias("ch"),
-    ).select("doc_id", "sig", "ch.chunk_id", "ch.chunk_val")
+    chunks = _sig_bands(
+        sig,
+        "ch",
+        "chunk_id",
+        "chunk_val",
+        [F.substring("sig", 1 + c * 16, 16) for c in range(4)],
+    )
     a = chunks.alias("a")
     b = chunks.alias("b")
     hamming = simhash_hamming(F.col("a.sig"), F.col("b.sig"))
@@ -2047,21 +2058,9 @@ def neardup_simhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=False)
     # eight 4-bit bands (band k = bits 4k..4k+3) as ONE map-side
     # explode of 8 structs per doc — no union legs, no re-derivation
-    banded = sigs.select(
-        "doc_id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("band"),
-                        F.expr(f"(sig >> {4 * k}) & 15").alias("bkey"),
-                    )
-                    for k in range(8)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "sig", F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey"))
+    banded = _sig_bands(
+        sigs, "bb", "band", "bkey", [F.expr(f"(sig >> {4 * k}) & 15") for k in range(8)]
+    )
     a = banded.select(
         F.col("band").alias("band_a"),
         F.col("bkey").alias("bkey_a"),

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from leadsight_sales_agent_spark.functions.numeric import sql_hex_to_long
+from leadsight_sales_agent_spark.functions.numeric import exact_cents, sql_hex_to_long
 from leadsight_sales_agent_spark.registry import query
 from leadsight_sales_agent_spark.sources.catalog import load
 
@@ -64,9 +64,7 @@ def feature_target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = o.join(c, o.o_custkey == c.c_custkey).select(
         F.col("o_orderkey").alias("orderkey"),
         F.col("c_mktsegment").alias("segment"),
-        (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        exact_cents(F.col("o_totalprice")).alias("cents"),
     )
     seg = base.groupBy("segment").agg(
         F.count("*").alias("n"), F.sum("cents").cast("long").alias("s")

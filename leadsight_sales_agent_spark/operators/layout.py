@@ -15,6 +15,8 @@ ahead of a parquet write.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -44,6 +46,23 @@ def spread_bits16(c: Column) -> Column:
 def zorder_key16(a: Column, b: Column) -> Column:
     """32-bit Morton code interleaving the low 16 bits of two columns."""
     return spread_bits16(a).bitwiseOR(F.shiftleft(spread_bits16(b), 1))
+
+
+def _order_day() -> Column:
+    """Days from 1995-01-01 to o_orderdate."""
+    return F.datediff(F.col("o_orderdate").cast("date"), F.lit("1995-01-01").cast("date"))
+
+
+def _bucket_extents(keyed: DataFrame, bucket: Column) -> DataFrame:
+    """Per ``bucket`` of ``keyed``: its row count and the range of its
+    customer keys (ck) and order days (dy)."""
+    return keyed.groupBy(bucket).agg(
+        F.count("*").alias("n_rows"),
+        F.min("ck").alias("min_custkey"),
+        F.max("ck").alias("max_custkey"),
+        F.min("dy").alias("min_day"),
+        F.max("dy").alias("max_day"),
+    )
 
 
 @query(
@@ -99,19 +118,13 @@ def zorder_locality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     planning/diagnostic pass and costs one scan.
     """
     o = load(spark, sf_dir, "orders")
-    day = F.datediff(F.col("o_orderdate").cast("date"), F.lit("1995-01-01").cast("date"))
+    day = _order_day()
     keyed = o.select(
         zorder_key16(F.col("o_custkey"), day).alias("zkey"),
         F.col("o_custkey").alias("ck"),
         day.alias("dy"),
     )
-    return keyed.groupBy(F.shiftright("zkey", 18).alias("zbucket")).agg(
-        F.count("*").alias("n_rows"),
-        F.min("ck").alias("min_custkey"),
-        F.max("ck").alias("max_custkey"),
-        F.min("dy").alias("min_day"),
-        F.max("dy").alias("max_day"),
-    )
+    return _bucket_extents(keyed, F.shiftright("zkey", 18).alias("zbucket"))
 
 
 COMPACT_TARGET = 16384  # bytes per output file (scaled-down stand-in)
@@ -355,7 +368,6 @@ def storage_gorilla_ts_encoding_audit(spark: SparkSession, sf_dir: str) -> DataF
         F.count(F.lit(1)).alias("n_events"),
         F.sum("bits").cast("bigint").alias("bits_total"),
     )
-    wall = Window.partitionBy()
     return agg.select(
         "enc_class",
         "n_events",
@@ -468,9 +480,7 @@ def storage_dictionary_encoding_advisor(spark: SparkSession, sf_dir: str) -> Dat
                 .alias("dict_bits"),
             )
         )
-    allc = frames[0]
-    for f2 in frames[1:]:
-        allc = allc.unionByName(f2)
+    allc = reduce(lambda a, b: a.unionByName(b), frames)
     return allc.select(
         "tbl",
         "col",
@@ -960,9 +970,7 @@ def storage_bloom_sizing_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)).cast("bigint").alias("n_rows"),
             )
         )
-    cols = frames[0]
-    for f in frames[1:]:
-        cols = cols.unionByName(f)
+    cols = reduce(lambda a, b: a.unionByName(b), frames)
     sized = cols.select(
         "column_name",
         "ndv",
@@ -1049,9 +1057,7 @@ def layout_hilbert_locality_buckets(spark: SparkSession, sf_dir: str) -> DataFra
     the key feeds repartitionByRange at write time, this query is the
     one-scan planning pass.
     """
-    day = F.datediff(
-        F.col("o_orderdate").cast("date"), F.lit("1995-01-01").cast("date")
-    )
+    day = _order_day()
     cur = load(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("ck"),
         day.alias("dy"),
@@ -1079,13 +1085,7 @@ def layout_hilbert_locality_buckets(spark: SparkSession, sf_dir: str) -> DataFra
                 " ELSE x END"
             ).alias("y"),
         )
-    return cur.groupBy(F.shiftright("d", 8).alias("hbucket")).agg(
-        F.count("*").alias("n_rows"),
-        F.min("ck").alias("min_custkey"),
-        F.max("ck").alias("max_custkey"),
-        F.min("dy").alias("min_day"),
-        F.max("dy").alias("max_day"),
-    )
+    return _bucket_extents(cur, F.shiftright("d", 8).alias("hbucket"))
 
 
 # Shannon order-0 entropy bound per categorical column. ln terms are
@@ -1195,9 +1195,7 @@ def storage_entropy_compression_bound(spark: SparkSession, sf_dir: str) -> DataF
                 ).alias("h0_milli_bits"),
             )
         )
-    allc = frames[0]
-    for f2 in frames[1:]:
-        allc = allc.unionByName(f2)
+    allc = reduce(lambda a, b: a.unionByName(b), frames)
     return allc.select(
         "tbl",
         "col",
@@ -1506,9 +1504,7 @@ def storage_sort_key_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
             )
         )
-    legs = frames[0]
-    for fr in frames[1:]:
-        legs = legs.unionByName(fr)
+    legs = reduce(lambda a, b: a.unionByName(b), frames)
     totaled = legs.withColumn(
         "total_runs",
         (

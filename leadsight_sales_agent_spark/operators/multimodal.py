@@ -182,20 +182,28 @@ def encode_bmp(width: int, height: int, pixel) -> bytes:
     return header + b"".join(rows)
 
 
-def decode_bmp(payload: bytes) -> tuple[int, int, list[list[tuple[int, int, int]]]]:
-    """Parse an uncompressed 24-bit BMP: returns (width, height, rows)
-    with rows[0] the TOP row and each pixel (r, g, b). Validates
-    magic, header size, bit depth, compression, and payload length."""
+def _bmp_header(payload: bytes, bpp: int, comp: int) -> tuple[int, int, int, int]:
+    """Validate a BMP's magic, header length and size, bit depth
+    ``bpp`` and compression ``comp``; returns (pixel data offset, info
+    header size, width, signed height)."""
     if payload[:2] != b"BM":
         raise ValueError("not a BMP")
     if len(payload) < 54:
         raise ValueError("truncated BMP header")
     data_off = struct.unpack_from("<I", payload, 10)[0]
-    hdr_size, width, height, _planes, bpp, comp = struct.unpack_from(
+    hdr_size, width, height, _planes, bpp_read, comp_read = struct.unpack_from(
         "<IiiHHI", payload, 14
     )
-    if hdr_size < 40 or bpp != 24 or comp != 0:
+    if hdr_size < 40 or bpp_read != bpp or comp_read != comp:
         raise ValueError("unsupported BMP variant")
+    return data_off, hdr_size, width, height
+
+
+def decode_bmp(payload: bytes) -> tuple[int, int, list[list[tuple[int, int, int]]]]:
+    """Parse an uncompressed 24-bit BMP: returns (width, height, rows)
+    with rows[0] the TOP row and each pixel (r, g, b). Validates
+    magic, header size, bit depth, compression, and payload length."""
+    data_off, _hdr_size, width, height = _bmp_header(payload, 24, 0)
     flip = height > 0
     height = abs(height)
     row_size = (3 * width + 3) // 4 * 4
@@ -267,16 +275,7 @@ def decode_bmp_rle8(payload: bytes) -> tuple[int, int, list[list[tuple[int, int,
     bit depth, compression, run/row bounds, and truncation — a decoder
     that trusts run counts is an out-of-bounds write in C and a wrong
     answer here."""
-    if payload[:2] != b"BM":
-        raise ValueError("not a BMP")
-    if len(payload) < 54:
-        raise ValueError("truncated BMP header")
-    data_off = struct.unpack_from("<I", payload, 10)[0]
-    hdr_size, width, height, _planes, bpp, comp = struct.unpack_from(
-        "<IiiHHI", payload, 14
-    )
-    if hdr_size < 40 or bpp != 8 or comp != 1:
-        raise ValueError("unsupported BMP variant")
+    data_off, hdr_size, width, height = _bmp_header(payload, 8, 1)
     if height <= 0:
         raise ValueError("RLE8 BMPs cannot be top-down")
     # r13 (advisor): header dimensions are attacker-controlled — refuse

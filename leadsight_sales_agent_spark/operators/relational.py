@@ -27,6 +27,7 @@ from leadsight_sales_agent_spark.functions.numeric import (
     d53,
     d53s,
     dsum,
+    exact_cents,
     sql_d53,
     sql_d53s,
     sql_dsum,
@@ -1260,7 +1261,6 @@ def share_of_parent_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("r_name").alias("region"), F.col("n_name").alias("nation"))
         .agg(F.sum(F.col("c_acctbal").cast("decimal(25,6)")).alias("bal"))
     )
-    w = Window.partitionBy("region")
     # r13 (plan-lint R9): bal and its region window-sum are wide
     # decimals whose unscaled value crosses 2^53 at scale, so both
     # convert through the d53s split (the oracle previously hopped
@@ -3157,7 +3157,7 @@ def incremental_join_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the classic reason warehouses maintain, not recompute. The big
     O_old ⋈ ΔC term never shuffles O_old: ΔC broadcasts.
     """
-    cents = (F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("long")
+    cents = exact_cents(F.col("o_totalprice"))
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", cents.alias("cents")
     )
@@ -3816,20 +3816,16 @@ def tpcds_q47_sales_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny grain. TPC-DS's original runs the same shape over
     (category, brand, store); the grain arithmetic is identical.
     """
-    monthly = (
-        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
-        .groupBy(
+    from leadsight_sales_agent_spark.operators.windows import order_cents_rollup, order_month
+
+    monthly = order_cents_rollup(
+        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull()),
+        [
             F.col("o_orderpriority").alias("priority"),
             F.year("o_orderdate").cast("bigint").alias("yr"),
-            F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias(
-                "month"
-            ),
-        )
-        .agg(
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(25,6)")) * 100, 0)
-            .cast("bigint")
-            .alias("cents")
-        )
+            order_month().alias("month"),
+        ],
+        "cents",
     )
     wy = Window.partitionBy("priority", "yr")
     wm = Window.partitionBy("priority").orderBy("month")
@@ -3889,9 +3885,7 @@ def nested_build_flatten_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     """
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey",
-        (F.col("l_extendedprice").cast("decimal(25,2)") * 100)
-        .cast("bigint")
-        .alias("cents"),
+        exact_cents(F.col("l_extendedprice")).alias("cents"),
         F.col("l_quantity").cast("bigint").alias("qty"),
         "l_linenumber",
     )
@@ -3980,15 +3974,11 @@ def allocation_invoice_rounding(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("ok"),
         F.col("l_linenumber").alias("ln"),
-        (F.col("l_extendedprice").cast("decimal(25,2)") * 100)
-        .cast("bigint")
-        .alias("w"),
+        exact_cents(F.col("l_extendedprice")).alias("w"),
     )
     o = load(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("ook"),
-        (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-        .cast("bigint")
-        .alias("total"),
+        exact_cents(F.col("o_totalprice")).alias("total"),
     )
     base = li.join(o, li.ok == o.ook).select(
         "ok",
@@ -4112,9 +4102,7 @@ def tpcds_q1_excess_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("l_returnflag") == "R")
         .select(
             "l_orderkey",
-            (F.col("l_extendedprice").cast("decimal(25,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
+            exact_cents(F.col("l_extendedprice")).alias("cents"),
         )
     )
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -4391,9 +4379,7 @@ def replication_merkle_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     a = load(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
-        (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-        .cast("bigint")
-        .alias("cents"),
+        exact_cents(F.col("o_totalprice")).alias("cents"),
     )
     b = a.select(
         "k",
@@ -4539,7 +4525,7 @@ def tpcds_q59_week_over_week_sales(spark: SparkSession, sf_dir: str) -> DataFram
     is bounded by the key grid — the self-join never touches fact-table
     volume, and AQE picks the broadcast for both small joins.
     """
-    cents = (F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("long")
+    cents = exact_cents(F.col("o_totalprice"))
     orders = (
         load(spark, sf_dir, "orders")
         .filter(F.year("o_orderdate").isin(1996, 1997))

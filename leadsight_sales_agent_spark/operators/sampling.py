@@ -29,10 +29,10 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from leadsight_sales_agent_spark.functions.numeric import d53, ddbl, sql_hex_to_long
+from leadsight_sales_agent_spark.functions.numeric import d53, ddbl, exact_cents, sql_hex_to_long
 from leadsight_sales_agent_spark.registry import query
 from leadsight_sales_agent_spark.sources.catalog import load
 
@@ -120,6 +120,18 @@ def sample_stratified_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _doc_split() -> Column:
+    """``split``: 'train', 'valid' or 'test' (80/10/10) by the hash
+    of doc_id, a pure function of the row key."""
+    hk = hash_key("split:", F.col("doc_id"))
+    return (
+        F.when(hk < F.lit(THRESH_80PCT), "train")
+        .when(hk < F.lit(THRESH_90PCT), "valid")
+        .otherwise("test")
+        .alias("split")
+    )
+
+
 @query(
     "sample_train_valid_test_split",
     oracle=f"""
@@ -146,14 +158,8 @@ def sample_train_valid_test_split(spark: SparkSession, sf_dir: str) -> DataFrame
     one 3-group hash-agg (map-side partials, trivially skew-free).
     """
     docs = load(spark, sf_dir, "documents")
-    hk = hash_key("split:", F.col("doc_id"))
-    split = (
-        F.when(hk < F.lit(THRESH_80PCT), "train")
-        .when(hk < F.lit(THRESH_90PCT), "valid")
-        .otherwise("test")
-    )
     return (
-        docs.select(split.alias("split"), "n_chars")
+        docs.select(_doc_split(), "n_chars")
         .groupBy("split")
         .agg(F.count("*").alias("n_docs"), F.sum("n_chars").alias("total_chars"))
     )
@@ -605,15 +611,9 @@ def leakage_check_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     thorough cross-split contamination pass, same join shape.
     """
     docs = load(spark, sf_dir, "documents")
-    hk = hash_key("split:", F.col("doc_id"))
-    split = (
-        F.when(hk < F.lit(THRESH_80PCT), "train")
-        .when(hk < F.lit(THRESH_90PCT), "valid")
-        .otherwise("test")
-    )
     a = docs.select(
         F.md5(F.lower(F.substring(F.trim(F.col("text")), 1, 40))).alias("h"),
-        split.alias("split"),
+        _doc_split(),
     )
     train_prints = a.filter(F.col("split") == "train").select("h").distinct()
     ev = a.filter(F.col("split") != "train")
@@ -690,15 +690,9 @@ def leakage_jaccard_cross_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").filter(
         F.col("doc_id") < LEAKAGE_ANCHOR_BOUND
     )
-    hk = hash_key("split:", F.col("doc_id"))
-    split = (
-        F.when(hk < F.lit(THRESH_80PCT), "train")
-        .when(hk < F.lit(THRESH_90PCT), "valid")
-        .otherwise("test")
-    )
     tok = docs.select(
         "doc_id",
-        split.alias("split"),
+        _doc_split(),
         F.explode(
             F.array_distinct(F.split(F.trim(F.col("text")), r"\s+"))
         ).alias("token"),
@@ -767,15 +761,9 @@ def leakage_minhash_cross_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load(spark, sf_dir, "documents")
-    hk = hash_key("split:", F.col("doc_id"))
-    split = (
-        F.when(hk < F.lit(THRESH_80PCT), "train")
-        .when(hk < F.lit(THRESH_90PCT), "valid")
-        .otherwise("test")
-    )
     base = docs.select(
         "doc_id",
-        split.alias("split"),
+        _doc_split(),
         F.array_distinct(
             F.transform(
                 F.split(F.trim(F.col("text")), r"\s+"), lambda t: F.xxhash64(t)
@@ -1070,9 +1058,7 @@ def sample_ht_estimator_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load(spark, sf_dir, "customer")
     base = o.join(c, o.o_custkey == c.c_custkey).select(
         F.col("c_mktsegment").alias("segment"),
-        (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        exact_cents(F.col("o_totalprice")).alias("cents"),
         (hash_key("ht:", F.col("o_orderkey")) < F.lit(THRESH_20PCT)).alias("in_sample"),
     )
     return base.groupBy("segment").agg(
@@ -1359,7 +1345,7 @@ def sample_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     largest-remainder device (floors + ranked remainders), so the
     1000 units land identically everywhere.
     """
-    cents = (F.col("c_acctbal").cast("decimal(25,2)") * 100).cast("bigint")
+    cents = exact_cents(F.col("c_acctbal"))
     strata = load(spark, sf_dir, "customer").groupBy(
         F.col("c_mktsegment").alias("stratum")
     ).agg(
@@ -1583,9 +1569,7 @@ def bootstrap_poisson_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     base = load(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("priority"),
-        (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-        .cast("bigint")
-        .alias("cents"),
+        exact_cents(F.col("o_totalprice")).alias("cents"),
         "o_orderkey",
     )
     replicated = base.select(
@@ -2040,9 +2024,7 @@ def sample_pps_systematic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = load(spark, sf_dir, "orders").select(
         "o_orderkey",
-        (F.col("o_totalprice").cast("decimal(25,2)") * 100)
-        .cast("bigint")
-        .alias("cents"),
+        exact_cents(F.col("o_totalprice")).alias("cents"),
         hash_key("pps:", F.col("o_orderkey").cast("string")).alias("hk"),
     )
     base = base.withColumn("shard", F.substring("hk", 1, 1))

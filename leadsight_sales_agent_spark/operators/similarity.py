@@ -2071,6 +2071,29 @@ def _ndcg_oracle() -> str:
     """
 
 
+def _knn_relevant_by_rank(
+    spark: SparkSession, sf_dir: str, *first: Column
+) -> DataFrame:
+    """Per query of the registered exact cosine KNN: the ``first``
+    aggregates, then r1..r5, 1 where the neighbor at that rank shares
+    the query vector's label (qlabel) and 0 otherwise."""
+    from leadsight_sales_agent_spark.registry import QUERIES
+
+    knn = QUERIES["knn_cosine_bruteforce"](spark, sf_dir)
+    emb = load(spark, sf_dir, "embeddings").select(
+        F.col("vec_id").alias("query_id"), F.col("label").alias("qlabel")
+    )
+    labeled = knn.join(F.broadcast(emb), "query_id")
+    rel = F.when(F.col("neighbor_label") == F.col("qlabel"), 1).otherwise(0)
+    aggs = [
+        F.coalesce(F.sum(F.when(F.col("rank") == i + 1, rel)), F.lit(0)).alias(
+            f"r{i + 1}"
+        )
+        for i in range(5)
+    ]
+    return labeled.groupBy("query_id").agg(*first, *aggs)
+
+
 @query("eval_ndcg_retrieval", oracle=_ndcg_oracle())
 def eval_ndcg_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NDCG@5 of the exact cosine retriever against label relevance
@@ -2088,22 +2111,8 @@ def eval_ndcg_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     relevant-count 0..5 — so the whole metric is exact double
     arithmetic on identical constants, no libm anywhere.
     """
-    from leadsight_sales_agent_spark.registry import QUERIES
-
-    knn = QUERIES["knn_cosine_bruteforce"](spark, sf_dir)
-    emb = load(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("query_id"), F.col("label").alias("qlabel")
-    )
-    labeled = knn.join(F.broadcast(emb), "query_id")
-    rel = F.when(F.col("neighbor_label") == F.col("qlabel"), 1).otherwise(0)
-    aggs = [
-        F.coalesce(
-            F.sum(F.when(F.col("rank") == i + 1, rel)), F.lit(0)
-        ).alias(f"r{i + 1}")
-        for i in range(5)
-    ]
-    pivoted = labeled.groupBy("query_id").agg(
-        F.any_value("qlabel").alias("qlabel"), *aggs
+    pivoted = _knn_relevant_by_rank(
+        spark, sf_dir, F.any_value("qlabel").alias("qlabel")
     )
     n_rel = sum(F.col(f"r{i + 1}") for i in range(5))
     dcg = sum(
@@ -2174,21 +2183,7 @@ def eval_map_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     half-up basis points. Composed from the registered KNN spec like
     NDCG (zero drift).
     """
-    from leadsight_sales_agent_spark.registry import QUERIES
-
-    knn = QUERIES["knn_cosine_bruteforce"](spark, sf_dir)
-    emb = load(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("query_id"), F.col("label").alias("qlabel")
-    )
-    labeled = knn.join(F.broadcast(emb), "query_id")
-    rel = F.when(F.col("neighbor_label") == F.col("qlabel"), 1).otherwise(0)
-    aggs = [
-        F.coalesce(F.sum(F.when(F.col("rank") == i + 1, rel)), F.lit(0)).alias(
-            f"r{i + 1}"
-        )
-        for i in range(5)
-    ]
-    pivoted = labeled.groupBy("query_id").agg(*aggs)
+    pivoted = _knn_relevant_by_rank(spark, sf_dir)
     n_rel = sum(F.col(f"r{i + 1}") for i in range(5))
     contrib = None
     for i in range(5):

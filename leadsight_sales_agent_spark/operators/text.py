@@ -686,6 +686,19 @@ BPE_MERGES = (
 BPE_ENCODE_TOP = 30  # words graded (top corpus frequency, tie on word)
 
 
+def _bpe_encoded(word: str) -> Column:
+    """Column ``word`` as its boundary-padded symbol string after the
+    ordered BPE_MERGES fold, as chained replace() calls (Java
+    regexp_replace uses $1 for the backref where RE2 uses \\1 — spelled
+    per-engine, same semantics)."""
+    expr = F.concat(F.lit(" "), F.regexp_replace(word, "(.)", "$1 "))
+    for a, b in BPE_MERGES:
+        expr = F.call_function(
+            "replace", expr, F.lit(f" {a} {b} "), F.lit(f" {a}{b} ")
+        )
+    return expr
+
+
 @query(
     "text_bpe_encode_fixed_merges",
     oracle=f"""
@@ -747,14 +760,7 @@ def text_bpe_encode_fixed_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("freq"), F.asc("w"))
         .limit(BPE_ENCODE_TOP)
     )
-    # boundary-padded symbol string, then the ordered merge fold as
-    # chained replace() calls (Java regexp_replace uses $1 for the
-    # backref where RE2 uses \\1 — spelled per-engine, same semantics)
-    expr = F.concat(F.lit(" "), F.regexp_replace("w", "(.)", "$1 "))
-    for a, b in BPE_MERGES:
-        expr = F.call_function(
-            "replace", expr, F.lit(f" {a} {b} "), F.lit(f" {a}{b} ")
-        )
+    expr = _bpe_encoded("w")
     return wf.select(
         F.col("w").alias("word"),
         F.col("freq").cast("bigint").alias("freq"),
@@ -1009,11 +1015,7 @@ def text_bpe_compression_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("lang", "w")
         .agg(F.count("*").alias("freq"))
     )
-    expr = F.concat(F.lit(" "), F.regexp_replace("w", "(.)", "$1 "))
-    for a, b in BPE_MERGES:
-        expr = F.call_function(
-            "replace", expr, F.lit(f" {a} {b} "), F.lit(f" {a}{b} ")
-        )
+    expr = _bpe_encoded("w")
     merged = wf.select(
         "lang",
         "freq",
@@ -3672,6 +3674,22 @@ def _accum_ordered(docs: DataFrame) -> DataFrame:
     ).persist()  # (doc, TEXT) grain: data-proportional (r11 rule)
 
 
+def _decile_token_types(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per corpus decile of ``_accum_ordered``: n_tokens (whitespace
+    tokens) left-joined to new_types, the token types first seen in
+    that decile (NULL where none is new)."""
+    ordered = _accum_ordered(load(spark, sf_dir, "documents"))
+    tok = ordered.select(
+        "decile", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("w")
+    )
+    firstseen = tok.groupBy("w").agg(F.min("decile").alias("first_decile"))
+    newtypes = firstseen.groupBy(F.col("first_decile").alias("decile")).agg(
+        F.count(F.lit(1)).alias("new_types")
+    )
+    toks = tok.groupBy("decile").agg(F.count(F.lit(1)).alias("n_tokens"))
+    return toks.join(F.broadcast(newtypes), "decile", "left")
+
+
 @query(
     "text_vocab_accumulation_curve",
     oracle=f"""
@@ -3727,17 +3745,8 @@ def text_vocab_accumulation_curve(spark: SparkSession, sf_dir: str) -> DataFrame
     device (_accum_ordered): 16 parallel per-hex-shard windows +
     broadcast offsets, no single-partition stage.
     """
-    ordered = _accum_ordered(load(spark, sf_dir, "documents"))
-    tok = ordered.select(
-        "decile", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("w")
-    )
-    firstseen = tok.groupBy("w").agg(F.min("decile").alias("first_decile"))
-    newtypes = firstseen.groupBy(F.col("first_decile").alias("decile")).agg(
-        F.count(F.lit(1)).alias("new_types")
-    )
-    toks = tok.groupBy("decile").agg(F.count(F.lit(1)).alias("n_tokens"))
     return (
-        toks.join(F.broadcast(newtypes), "decile", "left")
+        _decile_token_types(spark, sf_dir)
         .select(
             F.col("decile").cast("int").alias("decile"),
             F.col("n_tokens").cast("bigint").alias("n_tokens"),
@@ -3834,23 +3843,11 @@ def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     curve (prefix-sharded rank device, no single-partition stage),
     plus a 10-row fit.
     """
-    ordered = _accum_ordered(load(spark, sf_dir, "documents"))
-    tok = ordered.select(
-        "decile", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("w")
-    )
-    firstseen = tok.groupBy("w").agg(F.min("decile").alias("first_decile"))
-    newtypes = firstseen.groupBy(F.col("first_decile").alias("decile")).agg(
-        F.count(F.lit(1)).alias("new_types")
-    )
-    toks = tok.groupBy("decile").agg(F.count(F.lit(1)).alias("n_tokens"))
     wc = Window.orderBy("decile")
-    curve = (
-        toks.join(F.broadcast(newtypes), "decile", "left")
-        .select(
-            "decile",
-            F.sum("n_tokens").over(wc).alias("cum_tokens"),
-            F.sum(F.coalesce("new_types", F.lit(0))).over(wc).alias("cum_types"),
-        )
+    curve = _decile_token_types(spark, sf_dir).select(
+        "decile",
+        F.sum("n_tokens").over(wc).alias("cum_tokens"),
+        F.sum(F.coalesce("new_types", F.lit(0))).over(wc).alias("cum_types"),
     )
     # r13 (plan-lint R9): every value here is bounded by MATH, not by
     # data scale — |ln| < 88, cross terms < 7744, and the fit has a
@@ -4305,7 +4302,6 @@ def text_bleu_source_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     side and is vocabulary-bounded.
     """
     docs = load(spark, sf_dir, "documents")
-    ref_source = None  # resolved in-plan below, no driver collect
     # r8: toks feeds one gram explode per order — checkpoint the split
     toks = docs.select(
         "source", F.split(F.trim("text"), r"\s+").alias("ws")

@@ -16,18 +16,20 @@ over the same (user_id, ts) sort order → Catalyst reuses one shuffle+sort.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from leadsight_sales_agent_spark.functions.numeric import (
     ddbl,
     SQL_TIMED_FINITE_EVENTS,
+    cents_total,
     d53,
     d53s,
     davg,
     davg_over,
     dsum,
     dsum_over,
+    exact_cents,
     finite,
     sql_d53,
     sql_d53s,
@@ -37,6 +39,22 @@ from leadsight_sales_agent_spark.functions.numeric import (
 
 from leadsight_sales_agent_spark.registry import query
 from leadsight_sales_agent_spark.sources.catalog import load
+
+
+def order_month() -> Column:
+    """The order month key, ``yyyy-MM`` of o_orderdate."""
+    return F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM")
+
+
+def order_cents_rollup(
+    orders: DataFrame, keys: list[Column], alias: str, *extra: Column
+) -> DataFrame:
+    """The order-revenue rollup: ``orders`` grouped by ``keys``, with the
+    rounded cents total of o_totalprice as ``alias`` followed by the
+    ``extra`` aggregates. The caller loads and filters ``orders``."""
+    return orders.groupBy(*keys).agg(
+        cents_total(F.col("o_totalprice")).alias(alias), *extra
+    )
 
 
 def _events_finite(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1330,7 +1348,7 @@ def ohlc_monthly_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
     key = F.struct(F.col("o_orderdate"), F.col("o_orderkey"))
     return (
-        o.groupBy(F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias("month"))
+        o.groupBy(order_month().alias("month"))
         .agg(
             F.min_by("o_totalprice", key).alias("open"),
             F.max("o_totalprice").alias("high"),
@@ -1394,7 +1412,7 @@ def twap_purchase_value_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             "event_id",
             F.unix_micros("ts").alias("us"),
-            (F.col("value").cast("decimal(25,2)") * 100).cast("long").alias("cents"),
+            exact_cents(F.col("value")).alias("cents"),
         )
     )
     w = Window.partitionBy("user_id").orderBy("us", "event_id")
@@ -1845,16 +1863,10 @@ def window_ewma_dyadic_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup.
     """
     o = load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull()).select("o_orderpriority", "o_orderdate", "o_totalprice")
-    series = (
-        o.groupBy(
-            F.col("o_orderpriority").alias("priority"),
-            F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias("month"),
-        )
-        .agg(
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(25,6)")) * 100, 0)
-            .cast("bigint")
-            .alias("cents")
-        )
+    series = order_cents_rollup(
+        o,
+        [F.col("o_orderpriority").alias("priority"), order_month().alias("month")],
+        "cents",
     )
     w = Window.partitionBy("priority").orderBy("month")
     idx = series.withColumn(
@@ -1951,7 +1963,7 @@ def impute_linear_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
             F.unix_micros("ts").alias("t"),
             F.when(F.col("event_id") % 7 == 3, F.lit(None).cast("long")).otherwise(
-                (F.col("value").cast("decimal(25,2)") * 100).cast("long")
+                exact_cents(F.col("value"))
             ).alias("v"),
         )
     )
@@ -2044,19 +2056,11 @@ def window_rolling_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain — Catalyst evaluates them in a single WindowExec pass;
     the fact table contributes one rollup.
     """
-    m = (
-        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
-        .groupBy(
-            F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias(
-                "month"
-            )
-        )
-        .agg(
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(25,6)")) * 100, 0)
-            .cast("bigint")
-            .alias("rev"),
-            F.count(F.lit(1)).alias("n_orders"),
-        )
+    m = order_cents_rollup(
+        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull()),
+        [order_month().alias("month")],
+        "rev",
+        F.count(F.lit(1)).alias("n_orders"),
     )
     w = Window.orderBy("month").rowsBetween(-11, 0)
     roll = m.select(
@@ -2519,19 +2523,10 @@ def streak_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning — the series is calendar-bounded, one fact rollup
     feeds it.
     """
-    m = (
-        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
-        .groupBy(
-            F.col("o_orderpriority").alias("priority"),
-            F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias(
-                "month"
-            ),
-        )
-        .agg(
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(25,6)")) * 100, 0)
-            .cast("bigint")
-            .alias("cents")
-        )
+    m = order_cents_rollup(
+        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull()),
+        [F.col("o_orderpriority").alias("priority"), order_month().alias("month")],
+        "cents",
     )
     w = Window.partitionBy("priority").orderBy("month")
     flagged = m.select(
@@ -2703,19 +2698,10 @@ def holt_linear_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     WindowExec per series — the EWMA/Croston shape with a 2-state
     recurrence instead of 1.
     """
-    series = (
-        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
-        .groupBy(
-            F.col("o_orderpriority").alias("priority"),
-            F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias(
-                "month"
-            ),
-        )
-        .agg(
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(25,6)")) * 100, 0)
-            .cast("bigint")
-            .alias("cents")
-        )
+    series = order_cents_rollup(
+        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull()),
+        [F.col("o_orderpriority").alias("priority"), order_month().alias("month")],
+        "cents",
     )
     return _unrolled_smoothing(
         series,
@@ -2845,21 +2831,17 @@ def holt_winters_seasonal_smoothing(spark: SparkSession, sf_dir: str) -> DataFra
     the seasonal dimension costs nothing at runtime because it lives
     in the precomputed coefficients, not the plan.
     """
-    series = (
-        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
-        .groupBy(
+    series = order_cents_rollup(
+        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull()),
+        [
             F.col("o_orderpriority").alias("priority"),
             F.concat(
                 F.year("o_orderdate").cast("string"),
                 F.lit("-Q"),
                 F.quarter("o_orderdate").cast("string"),
             ).alias("quarter"),
-        )
-        .agg(
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(25,6)")) * 100, 0)
-            .cast("bigint")
-            .alias("cents")
-        )
+        ],
+        "cents",
     )
     return _unrolled_smoothing(
         series,
@@ -2994,18 +2976,10 @@ def window_zscore_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     Complements the robust detectors (MAD, CUSUM, seasonal-adjusted):
     this is the cheap first-line z alarm.
     """
-    m = (
-        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
-        .groupBy(
-            F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias(
-                "month"
-            )
-        )
-        .agg(
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(25,6)")) * 100, 0)
-            .cast("bigint")
-            .alias("v")
-        )
+    m = order_cents_rollup(
+        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull()),
+        [order_month().alias("month")],
+        "v",
     )
     w = Window.orderBy("month").rowsBetween(-12, -1)
     roll = m.select(
@@ -3582,7 +3556,7 @@ def window_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
         .groupBy(F.trunc(F.col("o_orderdate"), "month").alias("mon"))
         .agg(
-            F.sum((F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("bigint"))
+            F.sum(exact_cents(F.col("o_totalprice")))
             .cast("bigint")
             .alias("v")
         )
@@ -3681,10 +3655,10 @@ def window_parkinson_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "orders")
         .groupBy(F.date_trunc("month", F.col("o_orderdate")).alias("mon"))
         .agg(
-            F.max((F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("bigint"))
+            F.max(exact_cents(F.col("o_totalprice")))
             .cast("bigint")
             .alias("h"),
-            F.min((F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("bigint"))
+            F.min(exact_cents(F.col("o_totalprice")))
             .cast("bigint")
             .alias("l"),
         )
@@ -3805,7 +3779,7 @@ def window_downsample_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate-fold over the bucketed array (the DTW device) — the
     unroll here keeps the oracle twin mechanical.
     """
-    cents = (F.col("o_totalprice").cast("decimal(25,2)") * 100).cast("long")
+    cents = exact_cents(F.col("o_totalprice"))
     rev = (
         load(spark, sf_dir, "orders")
         .filter(F.year("o_orderdate").between(1996, 1998))
@@ -3964,19 +3938,10 @@ def holt_damped_trend_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirrored half-up integer cents. One month rollup, one 16-lag
     window pass per priority — no recursion at runtime.
     """
-    m = (
-        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
-        .groupBy(
-            F.col("o_orderpriority").alias("priority"),
-            F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias(
-                "month"
-            ),
-        )
-        .agg(
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(25,6)")) * 100, 0)
-            .cast("bigint")
-            .alias("cents")
-        )
+    m = order_cents_rollup(
+        load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull()),
+        [F.col("o_orderpriority").alias("priority"), order_month().alias("month")],
+        "cents",
     )
     w = Window.partitionBy("priority").orderBy("month")
     lsc = sum(

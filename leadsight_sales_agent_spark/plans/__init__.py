@@ -6,6 +6,5 @@ from leadsight_sales_agent_spark.plans.inspect import (  # noqa: F401
     formatted_plan,
     optimized_logical_plan,
     pushed_filters,
-    read_schemas,
     simple_plan,
 )

@@ -39,6 +39,3 @@ def pushed_filters(plan: str) -> list[str]:
     return re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
 
 
-def read_schemas(plan: str) -> list[str]:
-    """Every ``ReadSchema: struct<...>`` column list from a plan."""
-    return re.findall(r"ReadSchema: struct<([^>]*)>", plan)

@@ -1,1 +1,1 @@
-from leadsight_sales_agent_spark.sources.catalog import TABLES, load, load_all_tables  # noqa: F401
+from leadsight_sales_agent_spark.sources.catalog import TABLES, load  # noqa: F401

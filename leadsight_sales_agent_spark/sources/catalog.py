@@ -118,10 +118,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
-
-
 def read_csv(spark: SparkSession, path: str, schema=None) -> DataFrame:
     """CSV ingest (reference S2, server.py:308) — schema-on-read optional."""
     reader = spark.read.option("header", "true")

@@ -16,9 +16,9 @@ a zip of XML parts) with the stdlib only:
 
 Scale note: spreadsheets are a DRIVER-SIDE format by contract — the
 reference itself reads the sheet into a single pandas frame. The
-distributed path is ``excel_to_parquet`` (convert once on the driver,
-then columnar scans); ``read_excel`` attaches the ``_row_idx``
-input-order key so the enrich sink can preserve sheet order (T3).
+distributed path is ``read_excel_many`` (an executor parse over a
+binaryFile scan); ``read_excel`` attaches the ``_row_idx`` input-order
+key so the enrich sink can preserve sheet order (T3).
 """
 
 from __future__ import annotations
@@ -73,8 +73,8 @@ def _first_sheet_path(zf: zipfile.ZipFile) -> str:
 
 # Driver-side parse cap: one sheet of the reference's shape is a few
 # hundred KB; anything bigger than this belongs on the executors
-# (read_excel_many) or in parquet (excel_to_parquet). 64 MB of OOXML is
-# roughly a million rows — far past "one uploaded sheet".
+# (read_excel_many). 64 MB of OOXML is roughly a million rows — far
+# past "one uploaded sheet".
 MAX_DRIVER_XLSX_BYTES = 64 * 1024 * 1024
 
 
@@ -122,15 +122,13 @@ def read_excel_rows(src) -> tuple[list[str], list[list[object]]]:
     return header, data
 
 
-def read_excel(
-    spark: SparkSession, path: str, with_row_idx: bool = True
-) -> DataFrame:
+def read_excel(spark: SparkSession, path: str) -> DataFrame:
     """S1: workbook → DataFrame (all columns string-typed, like the
     reference's str-coerced sheet; ``_row_idx`` preserves sheet order).
 
     Driver-side by contract, so guarded: a workbook past
     MAX_DRIVER_XLSX_BYTES refuses to parse on the driver and points at
-    the distributed paths instead of silently OOM-ing the JVM's Python
+    the distributed path instead of silently OOM-ing the JVM's Python
     sibling at scale."""
     import os
 
@@ -141,7 +139,7 @@ def read_excel(
         raise ValueError(
             f"{path} is {size} bytes (> {MAX_DRIVER_XLSX_BYTES}); driver-side "
             "parse is for single uploaded sheets — use read_excel_many (executor "
-            "parse over a binaryFile scan) or convert once via excel_to_parquet"
+            "parse over a binaryFile scan)"
         )
     header, data = read_excel_rows(path)
     if not header:
@@ -153,12 +151,12 @@ def read_excel(
         pa.array([None if v is None else str(v) for v in col], pa.string())
         for col in (zip(*data) if data else [()] * len(header))
     ]
+    arrays.insert(0, pa.array(range(len(data)), pa.int64()))
     # a StructType, not a DDL string: a header may hold any character
-    fields = [StructField(c, StringType()) for c in header]
-    if with_row_idx:
-        arrays.insert(0, pa.array(range(len(data)), pa.int64()))
-        fields.insert(0, StructField("_row_idx", LongType()))
-    schema = StructType(fields)
+    schema = StructType(
+        [StructField("_row_idx", LongType())]
+        + [StructField(c, StringType()) for c in header]
+    )
     table = pa.Table.from_arrays(arrays, names=schema.names)
     return spark.createDataFrame(table, schema).coalesce(1)
 
@@ -304,11 +302,3 @@ def read_excel_many(
                 yield pd.DataFrame(out)
 
     return binary.mapInPandas(parse, out_schema)
-
-
-def excel_to_parquet(spark: SparkSession, xlsx_path: str, out_path: str) -> DataFrame:
-    """The scale path: convert a driver-side sheet ONCE to parquet, then
-    every downstream read is a distributed columnar scan with pushdown."""
-    df = read_excel(spark, xlsx_path)
-    df.write.mode("overwrite").parquet(out_path)
-    return spark.read.parquet(out_path)

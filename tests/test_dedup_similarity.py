@@ -190,6 +190,26 @@ class TestIVFRowsPinned:
         )
 
 
+class TestSimHashRowsPinned:
+    def test_simhash_rows_match_the_recorded_result(self, spark, sf_dir):
+        """neardup_simhash has no oracle and shares its band explode with
+        neardup_simhash_exact, so a drift in the shared code would pass
+        its registry rows-only entry. Pin the rows at sf0.001: the row
+        count and a hash of the sorted rows."""
+        import hashlib
+
+        from leadsight_sales_agent_spark import registry
+
+        registry.load_all()
+        rows = sorted(
+            map(tuple, registry.QUERIES["neardup_simhash"](spark, sf_dir).collect())
+        )
+        assert len(rows) == 172
+        assert hashlib.sha256(repr(rows).encode()).hexdigest() == (
+            "e4117964517d0068c78d5565d7308a6b03b35bee2f177c836177488f3140aaec"
+        )
+
+
 class TestHLLSketch:
     def test_merged_estimate_within_error_envelope(self, spark, sf_dir):
         from leadsight_sales_agent_spark import registry

@@ -115,6 +115,25 @@ class TestHashSampling:
         for v in banded_all.values():
             assert sampling.LEAKAGE_JACCARD_MIN <= v <= 1.0
 
+    def test_minhash_leakage_rows_match_the_recorded_result(self, spark, sf_dir):
+        """The recall bound above would still pass a small drift in the
+        split label or band code that leakage_minhash_cross_split shares
+        with the other leakage queries, and the query has no oracle.
+        Pin its rows at sf0.001: the row count and a hash of the sorted
+        rows."""
+        import hashlib
+
+        rows = sorted(
+            map(
+                tuple,
+                registry.QUERIES["leakage_minhash_cross_split"](spark, sf_dir).collect(),
+            )
+        )
+        assert len(rows) == 88
+        assert hashlib.sha256(repr(rows).encode()).hexdigest() == (
+            "9eac457410c56283c6b2d98dcce0136c125d4568640500b62ed6cda9c8411144"
+        )
+
     def test_pack_sequences_invariants(self, spark, sf_dir):
         # Chop arithmetic: within a shard, sequence ids are contiguous
         # from 0, and the per-shard token sum equals the corpus token
