@@ -76,6 +76,12 @@ def normalize_whitespace(text: Column) -> Column:
     return F.regexp_replace(text, WHITESPACE_RUN, " ")
 
 
+def text_tokens() -> Column:
+    """Whitespace tokens of the trimmed ``text`` column: the one
+    tokenizer of the dedup, text, sampling and similarity operators."""
+    return F.split(F.trim(F.col("text")), WHITESPACE_RUN)
+
+
 def url_host(url: Column) -> Column:
     """F7: hostname of a URL (reference urlparse().netloc).
 

@@ -1610,7 +1610,6 @@ def sketch_kmv_distinct_userdays(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 BF_HASHES = 4
-BF_BITS = 4096  # 3 hex chars == 16^3 buckets exactly
 
 
 @query(
@@ -1650,7 +1649,7 @@ BF_BITS = 4096  # 3 hex chars == 16^3 buckets exactly
     """,
 )
 def sketch_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter membership: build a {BF_BITS}-bit / {BF_HASHES}-hash
+    """Bloom-filter membership: build a 4096-bit / 4-hash
     filter over the 'premium customer' id set (any order > 490k), probe
     EVERY customer through it, and grade the filter against exact
     membership: false_neg must be 0 (the Bloom guarantee), false_pos
@@ -2084,8 +2083,8 @@ def _mg_skewed_keys(df: DataFrame) -> DataFrame:
     )
 
 
-def misra_gries_partials(df: DataFrame, k: int = MG_K) -> DataFrame:
-    """Per-partition Misra-Gries(k) summaries over column ``k`` via
+def misra_gries_partials(df: DataFrame) -> DataFrame:
+    """Per-partition Misra-Gries(MG_K) summaries over column ``k`` via
     ``mapInPandas`` — batch-vectorized: each Arrow batch pre-aggregates
     with value_counts (exact), then merges into the running summary
     with the mergeable-summaries reduction (Agarwal et al., PODS'12):
@@ -2102,8 +2101,8 @@ def misra_gries_partials(df: DataFrame, k: int = MG_K) -> DataFrame:
         for pdf in batches:
             for key, cnt in pdf["k"].value_counts().items():
                 summary[key] = summary.get(key, 0) + int(cnt)
-            if len(summary) > k:
-                cut = sorted(summary.values(), reverse=True)[k]
+            if len(summary) > MG_K:
+                cut = sorted(summary.values(), reverse=True)[MG_K]
                 summary = {
                     key: c - cut for key, c in summary.items() if c - cut > 0
                 }

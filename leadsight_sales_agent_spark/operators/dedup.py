@@ -26,14 +26,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from leadsight_sales_agent_spark.functions.extracts import text_tokens
 from leadsight_sales_agent_spark.functions.numeric import sql_hex_to_long
 from leadsight_sales_agent_spark.registry import query
 from leadsight_sales_agent_spark.sources.catalog import load
-
-
-def _tokens(col: str = "text"):
-    """Whitespace tokenization of already space-separated text."""
-    return F.split(F.trim(F.col(col)), r"\s+")
 
 
 @query(
@@ -103,7 +99,7 @@ def neardup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairwise-exact is the oracle anchor, LSH below is the scale path)."""
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     tok = (
-        docs.select("doc_id", F.explode(F.array_distinct(_tokens())).alias("token"))
+        docs.select("doc_id", F.explode(F.array_distinct(text_tokens())).alias("token"))
         .distinct()
     )
     sizes = tok.groupBy("doc_id").agg(F.count("*").alias("n_tok"))
@@ -163,7 +159,7 @@ def neardup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     over shingles is the unchanged scale path. Shingle generation is the
     pure-expression transform from text_top_bigrams — no Python."""
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    toks = docs.select("doc_id", _tokens().alias("t")).filter(F.size("t") >= 2)
+    toks = docs.select("doc_id", text_tokens().alias("t")).filter(F.size("t") >= 2)
     shingled = toks.select(
         "doc_id",
         F.explode(
@@ -308,7 +304,7 @@ def neardup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id",
-        F.array_distinct(F.transform(_tokens(), lambda t: F.xxhash64(t))).alias("toks"),
+        F.array_distinct(F.transform(text_tokens(), lambda t: F.xxhash64(t))).alias("toks"),
     ).persist()  # r13 (guide §5): feeds the signature pipeline AND both
     #              verify legs — tokenize+hash ran 3x per action before
     sig = base.select("doc_id", minhash_signature_hashed(F.col("toks")).alias("sig"))
@@ -435,7 +431,7 @@ def neardup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     signatures, candidate-generated by equality on one of four 16-bit
     chunks (pigeonhole: ≤3 differing bits ⇒ ≥1 chunk identical)."""
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    sig = docs.select("doc_id", simhash_expr(F.array_distinct(_tokens())).alias("sig"))
+    sig = docs.select("doc_id", simhash_expr(F.array_distinct(text_tokens())).alias("sig"))
     chunks = _sig_bands(
         sig,
         "ch",
@@ -695,7 +691,7 @@ def dedup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame
     comps = dedup_connected_components(spark, sf_dir).select("doc_id", "component")
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     quality = docs.select(
-        "doc_id", F.size(F.array_distinct(_tokens())).alias("n_uniq")
+        "doc_id", F.size(F.array_distinct(text_tokens())).alias("n_uniq")
     )
     from pyspark.sql import Window
 
@@ -1033,7 +1029,7 @@ def neardup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < PPJOIN_BOUND)
     tok = (
         docs.select(
-            "doc_id", F.explode(F.array_distinct(_tokens())).alias("token")
+            "doc_id", F.explode(F.array_distinct(text_tokens())).alias("token")
         )
         .distinct()
         # r8: tok feeds 5 consumers (sizes, df, ranking, both verify
@@ -1145,7 +1141,7 @@ def neardup_incremental_prefix_join(spark: SparkSession, sf_dir: str) -> DataFra
     tok = (
         docs.select(
             "doc_id", "source",
-            F.explode(F.array_distinct(_tokens())).alias("token"),
+            F.explode(F.array_distinct(text_tokens())).alias("token"),
         )
         .distinct()
         # r8: tok feeds 5 consumers, prefix feeds both batch/corpus
@@ -1308,7 +1304,7 @@ def dedup_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     eligible = docs.select(
         "doc_id",
-        _tokens().alias("toks"),
+        text_tokens().alias("toks"),
     ).filter(F.size("toks") >= SPAN_K).select(
         "doc_id",
         "toks",
@@ -1665,7 +1661,7 @@ def dedup_phonetic_soundex_blocking(spark: SparkSession, sf_dir: str) -> DataFra
     """
     words = (
         load(spark, sf_dir, "documents")
-        .select(F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("w"))
+        .select(F.explode(text_tokens()).alias("w"))
         .distinct()
         .filter(F.col("w").rlike("^[a-z]+$"))
     )
@@ -1870,11 +1866,7 @@ def dedup_exact_token_multiset(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length(F.trim(F.col("text"))) > 0)
         .select(
             "doc_id",
-            F.md5(
-                F.concat_ws(
-                    " ", F.array_sort(F.split(F.trim(F.col("text")), r"\s+"))
-                )
-            ).alias("bag_hash"),
+            F.md5(F.concat_ws(" ", F.array_sort(text_tokens()))).alias("bag_hash"),
         )
     )
     return (
@@ -2025,7 +2017,7 @@ def neardup_simhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "documents")
         .filter(F.length(F.trim(F.col("text"))) > 0)
         .select(
-            "doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("t")
+            "doc_id", F.explode(text_tokens()).alias("t")
         )
         .distinct()
         .select(
@@ -2839,7 +2831,7 @@ def dedup_exact_substring_coverage(spark: SparkSession, sf_dir: str) -> DataFram
     tok = docs.select(
         "doc_id",
         "source",
-        F.split(F.trim(F.col("text")), r"\s+").alias("toks"),
+        text_tokens().alias("toks"),
     ).withColumn("n_tok", F.size("toks"))
     pos = (
         tok.filter(F.col("n_tok") >= EXSUB_K)

@@ -8,7 +8,7 @@ these reproducible across cluster layouts at 100 TB.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from leadsight_sales_agent_spark.functions.numeric import exact_cents, sql_hex_to_long

@@ -423,12 +423,13 @@ def decode_pgm(payload: bytes) -> tuple[int, int, list[list[int]]]:
     )
 
 
-def _fake_feature(payload: bytes, dim: int = 8) -> list[float]:
-    """Deterministic fake feature vector (byte-histogram moments) —
-    stands in for the decoder+model output, keeps tests meaningful."""
+def _fake_feature(payload: bytes) -> list[float]:
+    """Deterministic 8-dimensional fake feature vector (byte-histogram
+    moments) — stands in for the decoder+model output, keeps tests
+    meaningful."""
     if not payload:
-        return [0.0] * dim
-    return [round(sum(payload[i::dim]) % 1000 / 1000.0, 6) for i in range(dim)]
+        return [0.0] * 8
+    return [round(sum(payload[i::8]) % 1000 / 1000.0, 6) for i in range(8)]
 
 
 def extract_features(media: DataFrame) -> DataFrame:

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from leadsight_sales_agent_spark.functions.extracts import text_tokens
 from leadsight_sales_agent_spark.functions.numeric import d53, ddbl, exact_cents, sql_hex_to_long
 from leadsight_sales_agent_spark.registry import query
 from leadsight_sales_agent_spark.sources.catalog import load
@@ -387,7 +388,7 @@ def mixture_budgets_and_selection(docs: DataFrame) -> tuple[DataFrame, DataFrame
     tok = docs.select(
         "doc_id",
         "source",
-        F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("n_tok"),
+        F.size(text_tokens()).alias("n_tok"),
         hash_key("mixtok:", F.col("doc_id")).alias("h"),
     )
     w = (
@@ -491,7 +492,7 @@ def pack_manifest(docs: DataFrame) -> DataFrame:
     """Shard-parallel pack-and-chop manifest over any documents frame
     (doc_id + text) — the reusable core of pack_sequences_token_budget,
     also composed downstream of curation by pipeline_curate_and_pack."""
-    n_tok = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    n_tok = F.size(text_tokens())
     h = hash_key("pack:", F.col("doc_id"))
     t = docs.select(
         "doc_id",
@@ -693,9 +694,7 @@ def leakage_jaccard_cross_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         "doc_id",
         _doc_split(),
-        F.explode(
-            F.array_distinct(F.split(F.trim(F.col("text")), r"\s+"))
-        ).alias("token"),
+        F.explode(F.array_distinct(text_tokens())).alias("token"),
     )
     sizes = tok.groupBy("doc_id").agg(F.count("*").alias("n_tok"))
     tr = tok.filter(F.col("split") == "train").select(
@@ -764,11 +763,7 @@ def leakage_minhash_cross_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.select(
         "doc_id",
         _doc_split(),
-        F.array_distinct(
-            F.transform(
-                F.split(F.trim(F.col("text")), r"\s+"), lambda t: F.xxhash64(t)
-            )
-        ).alias("toks"),
+        F.array_distinct(F.transform(text_tokens(), lambda t: F.xxhash64(t))).alias("toks"),
     ).persist()  # r13 (guide §5): feeds the band pipeline AND both
     #              verify legs — tokenize+hash ran 3x per action before
     # r14: the signature MUST be materialized under its own alias
@@ -1015,9 +1010,6 @@ def sample_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-HT_RATE_PCT = 20  # the sampling fraction (exact rational 1/5)
-
-
 @query(
     "sample_ht_estimator_check",
     oracle=f"""
@@ -1041,7 +1033,7 @@ HT_RATE_PCT = 20  # the sampling fraction (exact rational 1/5)
     """,
 )
 def sample_ht_estimator_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Horvitz-Thompson estimation audit: the {HT_RATE_PCT} % salted-
+    """Horvitz-Thompson estimation audit: the 20 % salted-
     hash sample's inverse-probability-weighted revenue estimate
     (sample sum x 5 — the rate is the exact rational 1/5, so the
     weight is an integer multiply, no float) against the true total
@@ -1765,7 +1757,7 @@ def mixture_repeat_epochs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "documents")
         .select(
             "source",
-            F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("n_tok"),
+            F.size(text_tokens()).alias("n_tok"),
         )
         .groupBy("source")
         .agg(F.sum("n_tok").cast("bigint").alias("tok_s"))
@@ -2196,7 +2188,7 @@ def sample_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from leadsight_sales_agent_spark.functions.numeric import sql_hex_to_long
 
     docs = load(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "source", F.split(F.trim(F.col("text")), r"\s+").alias("toks")
+        "doc_id", "lang", "source", text_tokens().alias("toks")
     )
     # r13 (guide §2.3): the target-slice membership used to be a JOIN
     # of feat against the en doc-id set, and the four bucket-grain

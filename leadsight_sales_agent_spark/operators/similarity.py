@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from leadsight_sales_agent_spark.functions.extracts import text_tokens
 from leadsight_sales_agent_spark.functions.numeric import d53, davg, ddbl, sql_davg
 from leadsight_sales_agent_spark.registry import query
 from leadsight_sales_agent_spark.sources.catalog import load
@@ -213,13 +214,14 @@ def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_HYPERPLANES = 12  # 12-bit random-hyperplane signature → ~4096 buckets
 
 
-def _hyperplanes(dim: int = 64, n: int = N_HYPERPLANES, seed: int = 42) -> list[list[float]]:
-    """Deterministic pseudo-random hyperplanes (fixed seed → stable
-    buckets across runs and executors; no RNG at execution time)."""
+def _hyperplanes() -> list[list[float]]:
+    """N_HYPERPLANES deterministic pseudo-random hyperplanes in the
+    64-dimensional embedding space (fixed seed 42 → stable buckets
+    across runs and executors; no RNG at execution time)."""
     import random
 
-    rng = random.Random(seed)
-    return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n)]
+    rng = random.Random(42)
+    return [[rng.gauss(0.0, 1.0) for _ in range(64)] for _ in range(N_HYPERPLANES)]
 
 
 def rp_signature(vec_col: Column, planes: list[list[float]]) -> Column:
@@ -538,8 +540,9 @@ KM_K = 8
 KM_ITERS = 3
 
 
-def kmeans_fit(spark: SparkSession, emb: DataFrame, k: int = KM_K, iters: int = KM_ITERS):
-    """Lloyd's k-means over an embedding column, Spark-native.
+def kmeans_fit(spark: SparkSession, emb: DataFrame):
+    """Lloyd's k-means over an embedding column, Spark-native: k = KM_K
+    centroids, KM_ITERS iterations.
 
     Deterministic init: the k corpus vectors with the smallest salted
     md5 of their id (a reproducible pseudo-random sample — same device
@@ -561,14 +564,14 @@ def kmeans_fit(spark: SparkSession, emb: DataFrame, k: int = KM_K, iters: int = 
             "hk", F.md5(F.concat(F.lit("km:"), F.col("vec_id").cast("string")))
         )
         .orderBy("hk")
-        .limit(k)
+        .limit(KM_K)
         .select("embedding")
         .collect()
     )
     centroids = [[float(x) for x in r["embedding"]] for r in init]
     inertias = []
     assigned = None
-    for _ in range(iters):
+    for _ in range(KM_ITERS):
         cmat = F.lit(centroids).cast("array<array<double>>")
 
         def sq_dist(vec, ci):
@@ -582,7 +585,7 @@ def kmeans_fit(spark: SparkSession, emb: DataFrame, k: int = KM_K, iters: int = 
                 lambda acc, x: acc + x,
             )
 
-        dists = F.array(*[sq_dist(F.col("embedding"), i) for i in range(k)])
+        dists = F.array(*[sq_dist(F.col("embedding"), i) for i in range(KM_K)])
         assigned = d.select(
             "vec_id",
             "embedding",
@@ -1543,7 +1546,7 @@ def retrieval_hybrid_bm25_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     tok = docs.select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("t")
+        "doc_id", F.explode(text_tokens()).alias("t")
     )
     dl = tok.groupBy("doc_id").agg(F.count("*").alias("dl"))
     stats = dl.agg(F.count("*").alias("n"), F.sum("dl").cast("long").alias("total_dl"))

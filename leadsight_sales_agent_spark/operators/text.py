@@ -22,14 +22,11 @@ from leadsight_sales_agent_spark.functions.extracts import (
     extract_email,
     extract_founded,
     extract_sentence_near_keyword,
+    text_tokens,
 )
 from leadsight_sales_agent_spark.operators.sampling import _SQL_HASH, hash_key
 from leadsight_sales_agent_spark.registry import query
 from leadsight_sales_agent_spark.sources.catalog import load
-
-
-def _tokens(col: str = "text"):
-    return F.split(F.trim(F.col(col)), r"\s+")
 
 
 # DuckDB token-count expression (f-string bodies cannot hold backslashes
@@ -52,7 +49,7 @@ _SQL_NTOK = "CAST(len(string_split_regex(trim(text), '\\s+')) AS DOUBLE)"
 )
 def text_token_stats_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting (whitespace tokenizer) + per-language stats."""
-    docs = load(spark, sf_dir, "documents").withColumn("n_tokens", F.size(_tokens()))
+    docs = load(spark, sf_dir, "documents").withColumn("n_tokens", F.size(text_tokens()))
     return docs.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_tokens").alias("total_tokens"),
@@ -88,7 +85,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     uses for filtering)."""
     docs = (
         load(spark, sf_dir, "documents")
-        .withColumn("toks", _tokens())
+        .withColumn("toks", text_tokens())
         .withColumn("n_tokens", F.size("toks"))
         .withColumn("n_uniq", F.size(F.array_distinct("toks")))
     )
@@ -143,7 +140,7 @@ def text_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     collected and no window is needed.
     """
     tok = load(spark, sf_dir, "documents").select(
-        "doc_id", F.explode(_tokens()).alias("token")
+        "doc_id", F.explode(text_tokens()).alias("token")
     )
     tc = tok.groupBy("doc_id", "token").agg(F.count("*").alias("c"))
     agg = tc.groupBy("doc_id").agg(
@@ -218,7 +215,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.when(F.col("text").isNull(), F.lit(None).cast("string"))
         .otherwise(
-            F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(_tokens()))))
+            F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(text_tokens()))))
         )
         .alias("fingerprint"),
     )
@@ -261,7 +258,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load(spark, sf_dir, "documents")
     n_docs = docs.count()  # scalar; one cheap count job, reused as a literal
-    tok = docs.select("doc_id", F.explode(_tokens()).alias("term"))
+    tok = docs.select("doc_id", F.explode(text_tokens()).alias("term"))
     tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     df = tok.groupBy("term").agg(F.count_distinct("doc_id").alias("df"))
     idf = F.log((1.0 + n_docs) / (1.0 + F.col("df")))
@@ -544,7 +541,7 @@ def text_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(bpe).alias("n_bpe"),
         F.size(F.filter(bpe, is_word)).alias("n_word"),
         F.size(F.filter(bpe, is_num)).alias("n_num"),
-        F.size(_tokens()).alias("n_ws_tokens"),
+        F.size(text_tokens()).alias("n_ws_tokens"),
     )
     return out.select(
         "doc_id",
@@ -584,7 +581,7 @@ def text_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 1→N UDTF-shaped expansion with no Python. One explode, one
     hash-agg, TakeOrderedAndProject for the top-k."""
     docs = load(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", _tokens().alias("t")).filter(F.size("t") >= 2)
+    toks = docs.select("doc_id", text_tokens().alias("t")).filter(F.size("t") >= 2)
     grams = toks.select(
         "doc_id",
         F.explode(
@@ -648,7 +645,7 @@ def text_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load(spark, sf_dir, "documents")
     words = docs.select(
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("w")
+        F.explode(text_tokens()).alias("w")
     ).filter(F.length("w") >= 2)
     wf = words.groupBy("w").agg(F.count("*").alias("freq"))
     pairs = wf.select(
@@ -754,7 +751,7 @@ def text_bpe_encode_fixed_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load(spark, sf_dir, "documents")
     wf = (
-        docs.select(F.explode(_tokens()).alias("w"))
+        docs.select(F.explode(text_tokens()).alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("freq"))
         .orderBy(F.desc("freq"), F.asc("w"))
@@ -1011,7 +1008,7 @@ def text_bpe_compression_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load(spark, sf_dir, "documents")
     wf = (
-        docs.select("lang", F.explode(_tokens()).alias("w"))
+        docs.select("lang", F.explode(text_tokens()).alias("w"))
         .groupBy("lang", "w")
         .agg(F.count("*").alias("freq"))
     )
@@ -1192,7 +1189,7 @@ def text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load(spark, sf_dir, "documents")
     tok = docs.select(
-        "doc_id", F.explode(F.array_distinct(_tokens())).alias("term")
+        "doc_id", F.explode(F.array_distinct(text_tokens())).alias("term")
     ).distinct()
     return (
         tok.groupBy("term")
@@ -1259,7 +1256,7 @@ def text_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load(spark, sf_dir, "documents")
     dt = (
-        docs.select("doc_id", F.explode(_tokens()).alias("tok"))
+        docs.select("doc_id", F.explode(text_tokens()).alias("tok"))
         .select("doc_id", F.lower("tok").alias("tok"))
         .distinct()
         # r8: dt feeds the vocabulary rank and the pruned stream, dv
@@ -1336,7 +1333,7 @@ def explode_outer_null_preservation(spark: SparkSession, sf_dir: str) -> DataFra
     docs = load(spark, sf_dir, "documents")
     longs = docs.select(
         "doc_id",
-        F.filter(_tokens(), lambda t: F.length(t) >= LONG_TOKEN_MIN).alias("lt"),
+        F.filter(text_tokens(), lambda t: F.length(t) >= LONG_TOKEN_MIN).alias("lt"),
     )
     exploded = longs.select("doc_id", F.explode_outer("lt").alias("token"))
     return exploded.agg(
@@ -1368,7 +1365,7 @@ def _shingles(docs: DataFrame) -> DataFrame:
     (step auto-inferred -1) and `slice` then errors — filter short
     docs out before the transform.
     """
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = text_tokens()
     return (
         docs.select("doc_id", "source", toks.alias("t"))
         .filter(F.size("t") >= SHINGLE_W)
@@ -1513,7 +1510,7 @@ MIN_UNIQ_RATIO = 0.4
 def _curation_features(docs: DataFrame) -> DataFrame:
     """Per document: lang, token count, distinct-token count and the
     exact-dedup survivor (min doc_id over the md5 content-hash group)."""
-    toks = _tokens()
+    toks = text_tokens()
     w = Window.partitionBy(F.md5(F.trim(F.col("text"))))
     return docs.select(
         "doc_id",
@@ -1810,7 +1807,7 @@ def text_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         load(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())
-        .select("doc_id", _tokens().alias("toks"))
+        .select("doc_id", text_tokens().alias("toks"))
     )
 
     def gram_arr(k: int) -> str:
@@ -2346,7 +2343,7 @@ def text_stopword_punct_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the row's own split array — one scan, zero shuffles, no join
     # (review finding: the first cut exploded tokens through a
     # token-grain agg + doc-grain join for a per-row quantity)
-    toks = _tokens()
+    toks = text_tokens()
     n_raw = F.length("text")
     # PRESENT, NON-BLANK text only (r10 nulls + adversarial-values
     # audits): ratios of a null, empty, or whitespace-only doc are
@@ -2588,7 +2585,7 @@ def text_bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
     tok = docs.select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("t")
+        "doc_id", F.explode(text_tokens()).alias("t")
     )
     # r8: tok feeds doc lengths and term frequencies, tf feeds the idf
     # and the score join. r11: persist, not localCheckpoint — token
@@ -2671,7 +2668,7 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select("lang", "source", "text")
     grain = (
         docs.select(
-            "lang", "source", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("tok")
+            "lang", "source", F.explode(text_tokens()).alias("tok")
         )
         .groupBy("lang", "source", "tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -2898,7 +2895,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = (
         load(spark, sf_dir, "documents")
         .filter(F.length(F.trim(F.col("text"))) > 0)
-        .select("doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("ts"))
+        .select("doc_id", text_tokens().alias("ts"))
     )
     tri = toks.select(
         "doc_id",
@@ -3068,7 +3065,7 @@ def text_kwic_concordance(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = (
         load(spark, sf_dir, "documents")
         .filter(F.length(F.trim(F.col("text"))) > 0)
-        .select("doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("ts"))
+        .select("doc_id", text_tokens().alias("ts"))
     )
     hits = toks.select(
         "doc_id",
@@ -3131,7 +3128,7 @@ def text_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "lang",
             "source",
-            F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("t"),
+            F.explode(text_tokens()).alias("t"),
         )
     )
     grain = tok.groupBy("lang", "source", "t").agg(F.count(F.lit(1)).alias("n"))
@@ -3217,7 +3214,7 @@ def text_zipf_rank_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     freq = (
         load(spark, sf_dir, "documents")
         .filter(F.length(F.trim(F.col("text"))) > 0)
-        .select(F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("t"))
+        .select(F.explode(text_tokens()).alias("t"))
         .groupBy("t")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -3314,7 +3311,7 @@ def text_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length(F.trim(F.col("text"))) > 0
     )
     tok = docs.select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("t")
+        "doc_id", F.explode(text_tokens()).alias("t")
     )
     counts = tok.groupBy("t", "doc_id").agg(F.count(F.lit(1)).alias("c"))
     nd = docs.agg(F.count(F.lit(1)).alias("nd"))
@@ -3435,7 +3432,7 @@ def corpus_greedy_source_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineage exactly as in the other bounded-iteration operators.
     """
     docs = load(spark, sf_dir, "documents")
-    toks = _tokens()
+    toks = text_tokens()
     bigrams = F.transform(
         F.slice(toks, 1, F.size(toks) - 1),
         lambda t, i: F.concat(t, F.lit(" "), F.get(toks, i + 1)),
@@ -3573,7 +3570,7 @@ def text_good_turing_unseen_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = (
         load(spark, sf_dir, "documents")
         .filter(F.trim("text") != "")
-        .select(F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("w"))
+        .select(F.explode(text_tokens()).alias("w"))
     )
     freq = tok.groupBy("w").agg(F.count(F.lit(1)).alias("r"))
     coc = (
@@ -3680,7 +3677,7 @@ def _decile_token_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     that decile (NULL where none is new)."""
     ordered = _accum_ordered(load(spark, sf_dir, "documents"))
     tok = ordered.select(
-        "decile", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("w")
+        "decile", F.explode(text_tokens()).alias("w")
     )
     firstseen = tok.groupBy("w").agg(F.min("decile").alias("first_decile"))
     newtypes = firstseen.groupBy(F.col("first_decile").alias("decile")).agg(
@@ -3972,7 +3969,7 @@ def text_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "documents")
         .select(
             "doc_id",
-            F.posexplode(F.split(F.trim("text"), r"\s+")).alias("pos0", "w"),
+            F.posexplode(text_tokens()).alias("pos0", "w"),
         )
         .select("doc_id", (F.col("pos0") + 1).alias("pos"), "w")
     )
@@ -4113,7 +4110,7 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r8: tok feeds totals, the vocabulary rank, and the cell counts —
     # checkpoint so the token explode runs once
     tok = load(spark, sf_dir, "documents").select(
-        "source", F.explode(F.split(F.trim("text"), r"\s+")).alias("w")
+        "source", F.explode(text_tokens()).alias("w")
     ).persist()  # token grain: data-proportional (r11 rule)
     totals = tok.groupBy("source").agg(F.count(F.lit(1)).cast("bigint").alias("t"))
     topw = (
@@ -4304,7 +4301,7 @@ def text_bleu_source_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     # r8: toks feeds one gram explode per order — checkpoint the split
     toks = docs.select(
-        "source", F.split(F.trim("text"), r"\s+").alias("ws")
+        "source", text_tokens().alias("ws")
     ).persist()  # full token arrays: data-proportional (r11 rule)
     gram_frames = []
     for n in range(1, BLEU_MAX_N + 1):

@@ -15,10 +15,12 @@ returns for the path — one code path for a single file, a Spark-written direct
 any non-local URI — so a table rewritten in place is inferred again.
 The cache is keyed by session because inference reads session confs.
 
-Reference parity: the reference ingests spreadsheets row-at-a-time with
-pandas (app.py:282, server.py:308); here ingest is a distributed
-columnar scan and Excel/CSV become format options on the same reader
-(SURVEY.md §2.1 S1-S2).
+Reference parity: the reference takes companies only as an uploaded
+``.xlsx``/``.xls``/``.csv`` sheet read with pandas (server.py:298-313);
+here that upload is parsed by ``streaming/serve.py::_parse_upload_rows``
+and ``sources/excel.py`` (SURVEY.md §2.1 S1-S2). This module scans the
+parquet tables the analytics queries run on; any other format is one
+``spark.read``/``df.write`` call a caller makes directly.
 """
 
 from __future__ import annotations
@@ -116,94 +118,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # zone is UTC, so this is a pure type change, no value shift).
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def read_csv(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """CSV ingest (reference S2, server.py:308) — schema-on-read optional."""
-    reader = spark.read.option("header", "true")
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    return reader.csv(path)
-
-
-def supported_upload_predicate(filename_col):
-    """P7 (server.py:298): the ``.endswith((".xlsx", ".xls", ".csv"))``
-    upload gate as a column predicate over a file-listing frame."""
-    from pyspark.sql import Column
-    from pyspark.sql import functions as F
-
-    col = filename_col if isinstance(filename_col, Column) else F.col(filename_col)
-    return col.rlike(r"\.(xlsx|xls|csv)$")
-
-
-def read_jsonl(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """JSONL (newline-delimited JSON) ingest — the de-facto interchange
-    format of training-data pipelines (one document per line).
-
-    With an explicit schema the scan is single-pass; without one Spark
-    runs a full inference pass first — at 100 TB ALWAYS pass the
-    schema (or sample-infer once and pin it). Corrupt lines surface in
-    the PERMISSIVE-mode `_corrupt_record` column instead of failing
-    the job, mirroring the engine's null-tolerant contract (U3).
-    """
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def write_jsonl(df: DataFrame, path: str, partitions: int | None = None) -> None:
-    """JSONL egress: one JSON object per line, split across part-files.
-
-    ``partitions`` controls the output file count (None keeps the
-    upstream partitioning — the right default at scale; forcing 1 file
-    serializes the write through one task)."""
-    if partitions is not None:
-        df = df.repartition(partitions)
-    df.write.mode("overwrite").json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC ingest — Spark-native columnar alternative to parquet (no
-    extra package; vectorized reader, predicate pushdown and column
-    pruning work exactly as for parquet scans). ORC is self-describing,
-    so no schema argument: the footer carries it."""
-    return spark.read.orc(path)
-
-
-def write_orc(df: DataFrame, path: str, partitions: int | None = None) -> None:
-    """ORC egress (overwrite). Same partition-count contract as
-    write_jsonl; compression follows spark.sql.orc.compression.codec
-    (snappy by default)."""
-    if partitions is not None:
-        df = df.repartition(partitions)
-    df.write.mode("overwrite").orc(path)
-
-
-def read_xml(spark: SparkSession, path: str, row_tag: str = "row", schema=None) -> DataFrame:
-    """XML ingest via Spark 4's built-in XML source (the spark-xml
-    package merged into core — no external jar). ``row_tag`` names the
-    repeated element that becomes one row; nested elements become
-    struct/array columns. Schema inference reads the files twice —
-    pass ``schema`` in production (same contract as read_jsonl). XML
-    scans parallelize per-file; for the 100 TB case XML is an EDGE
-    format: land it once, convert to parquet/ORC, and run the engine
-    on the columnar copy."""
-    reader = spark.read.format("xml").option("rowTag", row_tag)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.load(path)
-
-
-def write_xml(df: DataFrame, path: str, row_tag: str = "row", partitions: int | None = None) -> None:
-    """XML egress (overwrite) — for feed interchange with systems that
-    require it; not a storage format (no pushdown, no pruning, text
-    parse on every read)."""
-    if partitions is not None:
-        df = df.repartition(partitions)
-    df.write.mode("overwrite").format("xml").option("rowTag", row_tag).save(path)
 
 
 def with_provenance(df):

@@ -248,13 +248,13 @@ def read_excel_many(
     spark: SparkSession,
     path_glob: str,
     columns: list[str],
-    recursive: bool = False,
 ) -> DataFrame:
     """S1 at scale: a DIRECTORY of workbooks as one DataFrame.
 
     The driver-side ``read_excel`` parses one uploaded sheet; a backfill
     of thousands of sheets must parse on the executors. Plan shape:
-    ``binaryFile`` scan (one row per file: path + content bytes, split
+    ``binaryFile`` scan of the ``*.xlsx`` files directly under
+    ``path_glob`` (one row per file: path + content bytes, split
     across tasks by Spark's file partitioner) → ``mapInPandas`` running
     the same stdlib OOXML parser per file — Arrow-batched, no
     driver-side bytes, linear scale-out in file count.
@@ -273,7 +273,6 @@ def read_excel_many(
     binary = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.xlsx")
-        .option("recursiveFileLookup", str(recursive).lower())
         .load(path_glob)
         .select("path", "content")
     )

@@ -234,6 +234,7 @@ class TestAdversarialValues:
 
         from leadsight_sales_agent_spark.operators.similarity import (
             FINITE_VEC_SQL,
+            NONZERO_SQL,
         )
 
         rows = registry.QUERIES["knn_cosine_bruteforce"](spark, adv_dir).collect()
@@ -253,10 +254,17 @@ class TestAdversarialValues:
                 f"SELECT vec_id FROM embeddings WHERE {FINITE_VEC_SQL}"
             ).fetchall()
         }
+        nonzero = {
+            r[0]
+            for r in con.execute(
+                f"SELECT vec_id FROM embeddings WHERE {NONZERO_SQL}"
+            ).fetchall()
+        }
         con.close()
         assert 25 not in kept and 4 not in kept
         assert 9 not in kept and 13 not in kept
         assert 5 in kept  # all-zero is finite: dropped by NONZERO, not here
+        assert 5 not in nonzero and nonzero <= kept
 
     def test_subnormal_min_float32_vector_has_positive_norm(self, spark):
         """Pin for the documented NONZERO() soundness argument: the

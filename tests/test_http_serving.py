@@ -350,16 +350,27 @@ class TestUploadAndResults:
             srv.stop()
 
     def test_upload_bad_extension_400(self):
-        srv = ProgressServer(JobManager())
+        # P7 gate (reference server.py:298): a case-sensitive
+        # endswith((".xlsx", ".xls", ".csv")), so an extension only
+        # counts after a dot and at the very end of the name
+        m = JobManager()
+        srv = ProgressServer(m)
         port = srv.start()
         try:
-            with pytest.raises(urllib.error.HTTPError) as ex:
-                _upload(port, "companies.parquet", self.CSV)
-            assert ex.value.code == 400
-            assert (
-                json.load(ex.value)["error"]
-                == "File must be .xlsx, .xls, or .csv"
-            )
+            for name in (
+                "companies.parquet",
+                "notes.txt",
+                "archive.csv.gz",
+                "xlsx",
+                "data.CSV",
+            ):
+                with pytest.raises(urllib.error.HTTPError) as ex:
+                    _upload(port, name, self.CSV)
+                assert ex.value.code == 400, name
+                assert json.load(ex.value)["error"] == (
+                    "File must be .xlsx, .xls, or .csv"
+                ), name
+            assert m.state == IDLE
         finally:
             srv.stop()
 
@@ -379,13 +390,21 @@ class TestUploadAndResults:
             srv.stop()
 
     def test_upload_unreadable_payload_400(self):
+        # .xls passes the P7 gate, but there is no legacy .xls parser,
+        # so it lands in the same "Could not read file" path
         srv = ProgressServer(JobManager())
         port = srv.start()
         try:
-            with pytest.raises(urllib.error.HTTPError) as ex:
-                _upload(port, "broken.xlsx", b"\x00\x01 not a zip")
-            assert ex.value.code == 400
-            assert json.load(ex.value)["error"].startswith("Could not read file:")
+            for name, data in (
+                ("broken.xlsx", b"\x00\x01 not a zip"),
+                ("legacy.xls", self.CSV),
+            ):
+                with pytest.raises(urllib.error.HTTPError) as ex:
+                    _upload(port, name, data)
+                assert ex.value.code == 400, name
+                assert json.load(ex.value)["error"].startswith(
+                    "Could not read file:"
+                ), name
         finally:
             srv.stop()
 

@@ -947,6 +947,19 @@ class TestPlanLintNonEquiProperty:
         )
         assert pl.nonequi_join_unbounded(bad)
 
+    def test_range_leaf_does_not_bound_a_cross_join(self):
+        # spark.range(n) can have any cardinality, so a Range leaf is
+        # no bounded side
+        pl = self._lint()
+        bad = (
+            "== Physical Plan ==\n"
+            "BroadcastNestedLoopJoin (4)\n"
+            ":- Scan parquet  (1)\n"
+            "+- BroadcastExchange (3)\n"
+            "   +- Range (2)\n\n"
+        )
+        assert pl.nonequi_join_unbounded(bad)
+
     def test_bounded_broadcast_anchor_passes(self):
         pl = self._lint()
         good = (

@@ -774,17 +774,15 @@ class TestPrefixFilterJoin:
         # (the oracle hash proves that part).
         from pyspark.sql import functions as F
 
-        from leadsight_sales_agent_spark.operators.dedup import (
-            PPJOIN_BOUND,
-            _tokens,
-        )
+        from leadsight_sales_agent_spark.functions.extracts import text_tokens
+        from leadsight_sales_agent_spark.operators.dedup import PPJOIN_BOUND
         from leadsight_sales_agent_spark.sources.catalog import load
 
         docs = load(spark, sf_dir, "documents").filter(
             F.col("doc_id") < PPJOIN_BOUND
         )
         tok = docs.select(
-            "doc_id", F.explode(F.array_distinct(_tokens())).alias("token")
+            "doc_id", F.explode(F.array_distinct(text_tokens())).alias("token")
         ).distinct()
         sizes = tok.groupBy("doc_id").agg(F.count("*").alias("n_tok"))
         dfc = tok.groupBy("token").agg(F.count("*").alias("df"))

@@ -596,12 +596,14 @@ def unbounded_single_partition(plan: str) -> bool:
 def nonequi_join_unbounded(plan: str) -> bool:
     """True when some CartesianProduct / BroadcastNestedLoopJoin node
     has NO bounded side — no aggregate/limit node and no literal
-    LocalTableScan leaf in EITHER child subtree. r14 (ADVICE r13): the
-    ALLOW_NON_EQUI_PRECHECKPOINT allowlist's claimed property — every
-    flattened cross join is anchored on a 1-row/bounded aggregate
-    side — is now verified mechanically per plan instead of trusted
-    per name, so a NEW unbounded non-equi join growing inside an
-    allowlisted query still fails the lint."""
+    LocalTableScan / OneRowRelation leaf in EITHER child subtree. A
+    ``Range`` leaf does not bound a side: ``spark.range(n)`` can have
+    any cardinality. r14 (ADVICE r13): the ALLOW_NON_EQUI_PRECHECKPOINT
+    allowlist's claimed property — every flattened cross join is
+    anchored on a 1-row/bounded aggregate side — is now verified
+    mechanically per plan instead of trusted per name, so a NEW
+    unbounded non-equi join growing inside an allowlisted query still
+    fails the lint."""
     tree = parse_tree(plan)
     for i, (depth, node, _nid) in enumerate(tree):
         if not node.startswith(("CartesianProduct", "BroadcastNestedLoopJoin")):
@@ -611,7 +613,7 @@ def nonequi_join_unbounded(plan: str) -> bool:
             if d2 <= depth:
                 break
             if n2.startswith(_BOUNDING_NODES) or n2.startswith(
-                ("LocalTableScan", "Scan OneRowRelation", "Range")
+                ("LocalTableScan", "Scan OneRowRelation")
             ):
                 bounded = True
                 break
