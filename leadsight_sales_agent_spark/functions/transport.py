@@ -83,7 +83,6 @@ class LLMClient:
         api_key: str | None = None,
         model: str | None = None,
         timeout_s: float = DEFAULT_LLM_TIMEOUT_S,
-        temperature: float = DEFAULT_TEMPERATURE,
         url: str = CHAT_COMPLETIONS_URL,
         opener: Opener | None = None,
     ) -> None:
@@ -91,7 +90,6 @@ class LLMClient:
         self.api_key = api_key if api_key is not None else env_key
         self.model = model if model is not None else env_model
         self.timeout_s = timeout_s
-        self.temperature = temperature
         self.url = url
         self._opener = opener or urllib.request.urlopen
 
@@ -109,7 +107,7 @@ class LLMClient:
                     {"role": "system", "content": system_prompt},
                     {"role": "user", "content": user_prompt},
                 ],
-                "temperature": self.temperature,
+                "temperature": DEFAULT_TEMPERATURE,
             }
         ).encode()
         req = urllib.request.Request(

@@ -2576,8 +2576,8 @@ def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is O(groups), today's delta scan is O(new data), the merge
     is a group-keyed union+sum — vs the naive full rescan that grows
     with history. The streaming twin (foreachBatch + checkpoint,
-    streaming/demo.py) does the same thing per micro-batch; this is
-    its oracle-backed batch anchor.
+    tests/test_streaming.py::TestIncrementalRollupStreaming) does the
+    same thing per micro-batch; this is its oracle-backed batch anchor.
     """
     cutover = F.lit("2001-01-01").cast("timestamp")
     micro = (F.col("o_totalprice").cast("decimal(25,6)") * 1000000).cast(

@@ -295,7 +295,6 @@ class TestPlanLintAllowlists:
             set(mod.ALLOW_MANY_EXCHANGES),
             set(mod.ALLOW_SINGLE_PARTITION),
             set(mod.ALLOW_NON_EQUI_PRECHECKPOINT),
-            set(mod.ALLOW_SINGLE_PARTITION_PRECHECKPOINT),
             set(mod.WINDOW_SP_EXPECTED),
             mod.ALLOW_BUILD_JOBS,
         ):

@@ -9,9 +9,18 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from leadsight_sales_agent_spark import registry
+from leadsight_sales_agent_spark.plans.inspect import formatted_plan
 from leadsight_sales_agent_spark.sources.catalog import load
 
 registry.load_all()
+
+
+def sink_table(df):
+    """A demo's result reads its memory sink back in the JVM: a
+    LocalTableScan, not a Scan ExistingRDD rebuilt from driver rows."""
+    plan = formatted_plan(df)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    return df
 
 
 def batch_sessions(spark, sf_dir):
@@ -31,7 +40,7 @@ def batch_sessions(spark, sf_dir):
 
 class TestStatefulSessionize:
     def test_matches_batch_ground_truth(self, spark, sf_dir):
-        got = registry.QUERIES["streaming_sessionize_stateful"](spark, sf_dir)
+        got = sink_table(registry.QUERIES["streaming_sessionize_stateful"](spark, sf_dir))
         assert got.count() == batch_sessions(spark, sf_dir)
 
     def test_session_invariants(self, spark, sf_dir):
@@ -79,9 +88,8 @@ class TestWindowedCounts:
     def test_stream_equals_batch(self, spark, sf_dir):
         from leadsight_sales_agent_spark.streaming.demo import windowed_event_counts
 
-        got = sorted(
-            map(str, registry.QUERIES["streaming_windowed_counts"](spark, sf_dir).collect())
-        )
+        streamed = sink_table(registry.QUERIES["streaming_windowed_counts"](spark, sf_dir))
+        got = sorted(map(str, streamed.collect()))
         ev = load(spark, sf_dir, "events")
         want = sorted(
             map(
@@ -197,7 +205,7 @@ class TestStreamStreamJoin:
 
         streamed = {
             (r["purchase_id"], r["click_id"])
-            for r in streaming_stream_stream_join(spark, sf_dir).collect()
+            for r in sink_table(streaming_stream_stream_join(spark, sf_dir)).collect()
         }
         batch = {
             (r["purchase_id"], r["click_id"])
@@ -214,7 +222,7 @@ class TestStreamingDedup:
             streaming_dedup_watermarked,
         )
 
-        got = streaming_dedup_watermarked(spark, sf_dir).collect()
+        got = sink_table(streaming_dedup_watermarked(spark, sf_dir)).collect()
         ids = [r["event_id"] for r in got]
         assert len(ids) == len(set(ids)), "duplicates survived the stream"
         want = {
@@ -234,7 +242,7 @@ class TestStreamStaticJoin:
 
         got = {
             (r["segment"], r["n_events"])
-            for r in streaming_static_enrich_join(spark, sf_dir).collect()
+            for r in sink_table(streaming_static_enrich_join(spark, sf_dir)).collect()
         }
         ev = load(spark, sf_dir, "events").select("user_id", "event_id")
         want = {
@@ -389,8 +397,8 @@ class TestStatefulUserTotals:
         registry.load_all()
         got = {
             (r["user_id"], r["n_events"], r["total_value_micro"])
-            for r in registry.QUERIES["streaming_user_totals_stateful"](
-                spark, sf_dir
+            for r in sink_table(
+                registry.QUERIES["streaming_user_totals_stateful"](spark, sf_dir)
             ).collect()
         }
         ev = load(spark, sf_dir, "events")
@@ -630,7 +638,8 @@ class TestNativeSessionWindow:
         )
 
         got = {
-            tuple(r) for r in streaming_session_window_native(spark, sf_dir).collect()
+            tuple(r)
+            for r in sink_table(streaming_session_window_native(spark, sf_dir)).collect()
         }
         # batch twin: the same session_window aggregation run as a batch
         # query over the same events (watermark is a no-op in batch)
@@ -708,9 +717,8 @@ class TestBoundedRunHelpers:
     ):
         # pyspark rejects a zero awaitTermination timeout, so the
         # smallest positive one (1 ms) stands in for "no time at all";
-        # the 1 s sink keeps the query alive well past it.
+        # it comes before any micro-batch finishes.
         import os
-        import time
 
         import pytest as _pytest
 
@@ -728,11 +736,13 @@ class TestBoundedRunHelpers:
         spark.range(10).write.parquet(src)
         stream = spark.readStream.schema("id BIGINT").parquet(src)
         before = {q.id for q in spark.streams.active}
+        tables = {t.name for t in spark.catalog.listTables()}
 
         with _pytest.raises(TimeoutError):
-            demo._run_bounded(stream, "append", lambda df, i: time.sleep(1), 0.001)
+            demo._run_bounded(stream, "append", 0.001)
 
         assert {q.id for q in spark.streams.active} == before
+        assert {t.name for t in spark.catalog.listTables()} == tables
         assert len(made) == 1 and not os.path.exists(made[0])
 
     def test_second_stage_call_keeps_the_staged_files(self, spark, tmp_path, monkeypatch):
@@ -758,3 +768,22 @@ class TestBoundedRunHelpers:
 
         assert demo._stage("reuse_probe", "/sf/x", df, must_not_write) == d
         assert mtimes() == first
+
+    def test_stage_rewrites_a_source_rewritten_with_the_same_row_count(
+        self, spark, tmp_path, monkeypatch
+    ):
+        import tempfile
+
+        from leadsight_sales_agent_spark.streaming import demo
+
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+        src = str(tmp_path / "src.parquet")
+        spark.range(10).write.parquet(src)
+        demo._stage("rewrite_probe", "/sf/x", spark.read.parquet(src), demo._repartitioned(1))
+        spark.range(10, 20).write.mode("overwrite").parquet(src)
+
+        wrote: list[str] = []
+        demo._stage(
+            "rewrite_probe", "/sf/x", spark.read.parquet(src), lambda _df, d: wrote.append(d)
+        )
+        assert wrote, "a source rewritten in place was streamed from the stale copy"

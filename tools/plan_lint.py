@@ -401,10 +401,6 @@ ALLOW_NON_EQUI_PRECHECKPOINT: set[str] = {
     "window_downsample_lttb",
 }
 
-# R6 equivalents hidden behind checkpoints (same doctrine: name the
-# bounded grain or fix the stage).
-ALLOW_SINGLE_PARTITION_PRECHECKPOINT: dict[str, str] = {}
-
 # R6: queries whose single-partition stage over a non-aggregated input
 # is the documented algorithm on a bounded grain the subtree check
 # cannot see (filled from the r9 scan; each entry names the grain).
@@ -951,10 +947,7 @@ def lint_one_precheckpoint(name: str, plan: str) -> list[dict]:
             )
     if "BatchEvalPython" in plan:
         findings.append({"rule": "R5-row-python-udf-prechk", "query": name})
-    if unbounded_single_partition(plan) and (
-        name not in ALLOW_SINGLE_PARTITION
-        and name not in ALLOW_SINGLE_PARTITION_PRECHECKPOINT
-    ):
+    if unbounded_single_partition(plan) and name not in ALLOW_SINGLE_PARTITION:
         findings.append({"rule": "R6-single-partition-prechk", "query": name})
     return findings
 
@@ -1209,7 +1202,6 @@ def main() -> None:
             pre_seen[name] = {
                 "cartesian": "CartesianProduct" in plan
                 or "BroadcastNestedLoopJoin" in plan,
-                "unbounded_single_partition": unbounded_single_partition(plan),
             }
             spark.catalog.clearCache()
     finally:
@@ -1228,7 +1220,7 @@ def main() -> None:
     unused_allowlist["ckpt_grain_annotations"] = r8_unused
     r10_findings, unused_allowlist["build_jobs"] = lint_build_jobs(build_jobs)
     findings.extend(r10_findings)
-    # exact-allowlist audit for the pre-checkpoint lists: an entry is
+    # exact-allowlist audit for the pre-checkpoint list: an entry is
     # unused when the flattened plan lacks the pattern OR the name is
     # already exempted by the main list (dead shadowing)
     unused_allowlist["non_equi_precheckpoint"] = sorted(
@@ -1236,15 +1228,6 @@ def main() -> None:
         for n in ALLOW_NON_EQUI_PRECHECKPOINT
         if n in pre_seen
         and (not pre_seen[n]["cartesian"] or n in ALLOW_NON_EQUI)
-    )
-    unused_allowlist["single_partition_precheckpoint"] = sorted(
-        n
-        for n in ALLOW_SINGLE_PARTITION_PRECHECKPOINT
-        if n in pre_seen
-        and (
-            not pre_seen[n]["unbounded_single_partition"]
-            or n in ALLOW_SINGLE_PARTITION
-        )
     )
     out = {
         "checked": len(oracle_backed),

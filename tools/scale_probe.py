@@ -4,7 +4,9 @@ The bench measures sf0.01 -> sf0.1 (10x) scaling; this harness pushes
 one more decade: it materializes a ~REPx replicated copy of the sf0.1
 FACT tables to parquet (dims stay fixed — that is how real warehouses
 grow) and re-runs the five most expensive headline queries VERBATIM
-against the replicated directory, reporting wall-clock ratios.
+against the replicated directory, reporting wall-clock ratios. Each
+query is timed through bench.py's own core (`_run_once`: noop write
+then clearCache; `_median`), so the probe runs the plan the bench runs.
 
 Replication is id-shifted so keys stay unique (doc_id/vec_id/event_id/
 orderkey + replica * OFFSET); document text gets a per-replica suffix
@@ -23,10 +25,10 @@ Prints one JSON line; numbers recorded in SURVEY.md §8.13.
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import shutil
-import statistics
 import sys
 import time
 
@@ -34,6 +36,7 @@ sys.path.insert(0, ".")
 
 from pyspark.sql import functions as F  # noqa: E402
 
+import bench  # noqa: E402 — repo-root module, needs sys.path above
 from leadsight_sales_agent_spark import registry  # noqa: E402
 from leadsight_sales_agent_spark.session import get_spark  # noqa: E402
 from leadsight_sales_agent_spark.sources.catalog import TABLES, load  # noqa: E402
@@ -99,25 +102,15 @@ def build(spark) -> None:
 def time_query(spark, name: str, sf_dir: str, runs: int = 2) -> float:
     # one untimed warm-up (scan caches, JIT, shuffle services) — the
     # r9 10x run showed cold first legs deflating ratios to <1
-    registry.QUERIES[name](spark, sf_dir).count()
-    spark.catalog.clearCache()
-    xs = []
-    for _ in range(runs):
-        t0 = time.monotonic()
-        df = registry.QUERIES[name](spark, sf_dir)
-        df.count()
-        xs.append(time.monotonic() - t0)
-        spark.catalog.clearCache()
+    bench._run_once(spark, name, sf_dir)
+    xs = [bench._run_once(spark, name, sf_dir) for _ in range(runs)]
     # localCheckpoint blocks are freed only when their DataFrames are
     # garbage-collected Python-side; without this, multi-query rep50
     # sessions accumulate checkpoint RDDs until the 8g executor pool
     # throws AGGREGATE_OUT_OF_MEMORY (observed r10: dsir+doremi
     # back-to-back at rep50).
-    import gc
-
-    del df
     gc.collect()
-    return statistics.median(xs)
+    return bench._median(xs)
 
 
 def main() -> None:
